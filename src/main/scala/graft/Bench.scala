@@ -21,23 +21,9 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default 32 = the driver's setting (VERDICT r7 #2): a lower
     // default made every self-recorded number non-comparable to the
-    // official artifact — set the env var explicitly to deviate
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // perfConf FIRST, pinned session configs after (ADVICE r13): the
-    // explicit .config calls below are the session contract ("set
-    // explicitly to deviate"), so they must win over any future
-    // overlapping perfConf key.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-    Tables.perfConf.foreach { case (k, v) => builder.config(k, v) }
-    builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // official artifact — set SPARK_GRAFT_CPUS explicitly to deviate
+    val cpus = Session.cores(default = 32)
+    val spark = Session.build(cpus)
     // JVM/codegen/scan warmup (untimed): without it the first queries
     // absorb one-time JIT + parquet-footer costs and the per-query
     // numbers measure the JVM, not the plans.

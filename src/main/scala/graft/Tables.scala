@@ -89,7 +89,8 @@ object Tables {
     }
   }
 
-  /** Session configs the engine requires; apply on every builder. */
+  /** Session configs the engine requires; [[graft.Session]] applies
+    * them to every session it builds. */
   val conf: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC")
@@ -136,13 +137,21 @@ object Tables {
     // too).
     "spark.shuffle.sort.bypassMergeThreshold" -> "1") ++
     // dev-only A/B seam: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets a
-    // profiling run flip one config without a rebuild. Applied BEFORE
-    // the pinned session configs (ADVICE r13 precedence), so it can
-    // never override the session contract.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(_.split(';'))
-      .map(_.trim).filter(_.contains('='))
-      .map { kv =>
-        val i = kv.indexOf('=')
-        kv.take(i) -> kv.drop(i + 1)
-      }
+    // profiling run flip one config without a rebuild. Part of
+    // perfConf, so the session factory applies it BEFORE the pinned
+    // session configs (ADVICE r13 precedence): it can never override
+    // the session contract.
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(parseExtraConf)
+
+  /** `k=v;k=v` → pairs, key and value trimmed separately. Blank
+    * entries are skipped; an entry with no `=` or an empty key fails
+    * loudly — a malformed override must not become a silent no-op. */
+  private[graft] def parseExtraConf(spec: String): Seq[(String, String)] =
+    spec.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      val key = if (i < 0) "" else kv.take(i).trim
+      require(key.nonEmpty,
+        s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
+      key -> kv.drop(i + 1).trim
+    }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,7 @@ object Verify {
     // (dev iteration; the driver always passes 2 args = full catalog)
     val nameFilter = args.lift(2).map(_.r)
     def keep(n: String) = nameFilter.forall(_.findFirstIn(n).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // perfConf first, pinned session configs after (ADVICE r13; see
-    // Bench.scala for the precedence rationale)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-    Tables.perfConf.foreach { case (k, v) => builder.config(k, v) }
-    builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.cores(default = 4))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach {
       case (name, fn) =>

@@ -1265,7 +1265,7 @@ object Catalog {
         val toks = col("__toks")
         // evalOnce: the pushed-down keep-filter would otherwise
         // re-evaluate the whole quality dag as the scan predicate
-        // (measured 2x — FilterEvalProbe / BENCH_NOTES)
+        // (measured 2x — BENCH_NOTES)
         graft.query.Predicates.evalOnce(
           Tables.documentsSpread(s, d)
             .withColumn("__toks", Text.tokens(col("text"))),
@@ -3992,20 +3992,24 @@ object Catalog {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val k = 64
-        val sh = Tables.documents(s, d)
+        val hashed = Tables.documents(s, d)
           .withColumn("__toks", Text.tokens(col("text")))
           .select(col("source"),
             explode(Text.wordShingles(col("__toks"), 3)).as("sg"))
           .distinct()
-        val hashed = sh.withColumn("h",
-          conv(substring(md5(col("sg")), 1, 15), 16, 10).cast("long"))
+          .withColumn("h",
+            conv(substring(md5(col("sg")), 1, 15), 16, 10).cast("long"))
         val w = Window.partitionBy("source")
           .orderBy(col("h").asc, col("sg").asc)
-        val kth = hashed.withColumn("rk", row_number().over(w))
-          .filter(col("rk") === k).select(col("source"), col("h"))
-        sh.groupBy("source").agg(count(lit(1)).cast("long")
-            .as("n_exact"))
-          .join(kth, Seq("source"), "left")
+        // ONE pass over the ranked set yields both the exact count and
+        // the k-th hash (null below k): a count ⋈ k-th self-join
+        // tokenizes the corpus twice, because its two branches differ
+        // by an inferred join filter and share no exchange (PlanAudit
+        // invariant 4 guards this row)
+        hashed.withColumn("rk", row_number().over(w))
+          .groupBy("source").agg(
+            count(lit(1)).cast("long").as("n_exact"),
+            max(when(col("rk") === k, col("h"))).as("h"))
           .select(col("source"), col("n_exact"),
             round(coalesce(
               lit((k - 1).toDouble * 1152921504606846976.0d) / col("h"),
@@ -4904,17 +4908,9 @@ object Catalog {
 
   /** The catalog, with the [[sortCacheRows]] rows' final global Sort
     * single-executed (see [[cacheFinalSortChild]]). Identity
-    * transform on results. `SPARK_GRAFT_SORTCACHE=off` disables the
-    * wrapper everywhere, `=all` applies it everywhere (dev-only A/B
-    * switches — results are identical either way; only the physical
-    * execution of the final sort's child changes). */
-  val all: Seq[Q] = sys.env.get("SPARK_GRAFT_SORTCACHE") match {
-    case Some("off") => raw
-    case Some("all") => raw.map(q =>
-      q.copy(run = (s, d) => cacheFinalSortChild(q.run(s, d))))
-    case _ => raw.map(q =>
-      if (sortCacheRows(q.name))
-        q.copy(run = (s, d) => cacheFinalSortChild(q.run(s, d)))
-      else q)
-  }
+    * transform on results. */
+  val all: Seq[Q] = raw.map(q =>
+    if (sortCacheRows(q.name))
+      q.copy(run = (s, d) => cacheFinalSortChild(q.run(s, d)))
+    else q)
 }

@@ -115,7 +115,7 @@ object Feeds {
     val uniq =
       if (stem) uniq0.map(graft.functions.PorterStem.stem).distinct
       else uniq0
-    // Two-phase cost shape, measured deliberately (q06 RowTime):
+    // Two-phase cost shape, measured deliberately (q06, BENCH_NOTES):
     //  - the FILTER runs on every row, so it stays the composed
     //    short-circuiting array_contains chain (codegen'd; a
     //    non-matching row exits at its first missing term) — swapping

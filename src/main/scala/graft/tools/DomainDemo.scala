@@ -9,13 +9,7 @@ import org.apache.spark.sql.SparkSession
   * Run: sbt "runMain graft.tools.DomainDemo" */
 object DomainDemo {
   def main(args: Array[String]): Unit = {
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = graft.Session.build()
     import spark.implicits._
 
     val blocks = Seq(

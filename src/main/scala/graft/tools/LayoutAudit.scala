@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.state.Layout
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the recorded layout proof (VERDICT r01 item 10).
@@ -14,14 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object LayoutAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     val dir = java.nio.file.Files
       .createTempDirectory("graft-layout-audit").toString + "/posts"
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump `explain("formatted")` for catalog queries to files —
   * `PlanDump <outDir> [<sfDir>] [<name> ...]` (no names = all). Used by
   * the optimization rounds to commit before/after plan evidence
@@ -14,15 +12,7 @@ object PlanDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else graft.queries.Catalog.all.map(_.name)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {
       try {

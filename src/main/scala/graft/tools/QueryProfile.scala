@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only: per-query decomposition of the bench's wall seconds —
@@ -14,45 +12,11 @@ import org.apache.spark.sql.SparkSession
   * decides which optimization lever (guide §1.2: algorithm vs
   * per-task work vs config) applies. */
 object QueryProfile {
-  private val shuffleWrite = new AtomicLong(0)
-  private val execRunMs = new AtomicLong(0)
-  private val execCpuNs = new AtomicLong(0)
-  private val execGcMs = new AtomicLong(0)
-  private val nStages = new AtomicLong(0)
-  private val nTasks = new AtomicLong(0)
-
-  private class L extends SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val tm = sc.stageInfo.taskMetrics
-      if (tm != null) {
-        shuffleWrite.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-        execRunMs.addAndGet(tm.executorRunTime)
-        execCpuNs.addAndGet(tm.executorCpuTime)
-        execGcMs.addAndGet(tm.jvmGCTime)
-        nStages.incrementAndGet()
-        nTasks.addAndGet(sc.stageInfo.numTasks)
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nameRe = args.lift(1).map(_.r)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // perfConf first, pinned session configs after (ADVICE r13; see
-    // Bench.scala for the precedence rationale)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-    graft.Tables.perfConf.foreach { case (k, v) => builder.config(k, v) }
-    builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new L)
+    val spark = graft.Session.build()
+    val metrics = StageMetrics.attach(spark)
     val selected = graft.SparkEntry.queries.filter { case (n, _) =>
       nameRe.forall(_.findFirstIn(n).isDefined)
     }.toSeq.sortBy(_._1)
@@ -72,20 +36,16 @@ object QueryProfile {
       f"${"cpu_s"}%8s ${"gc_s"}%6s ${"shufW_MB"}%9s ${"stages"}%6s ${"tasks"}%6s")
     var total = 0.0
     val rows = selected.map { case (name, fn) =>
-      val w0 = shuffleWrite.get(); val e0 = execRunMs.get()
-      val c0 = execCpuNs.get()
-      val g0 = execGcMs.get(); val s0 = nStages.get(); val k0 = nTasks.get()
+      val m0 = metrics.snapshot()
       val t0 = System.nanoTime()
       val err = try { materialize(fn); None }
         catch { case e: Throwable => Some(e.toString.take(80)) }
         finally graft.CacheTracker.releaseAll()
       val wall = (System.nanoTime() - t0) / 1e9
       total += wall
-      (name, wall, (execRunMs.get() - e0) / 1e3,
-        (execCpuNs.get() - c0) / 1e9,
-        (execGcMs.get() - g0) / 1e3,
-        (shuffleWrite.get() - w0) / 1e6,
-        nStages.get() - s0, nTasks.get() - k0, err)
+      val m = metrics.snapshot() - m0
+      (name, wall, m.execRunMs / 1e3, m.execCpuNs / 1e9, m.gcMs / 1e3,
+        m.shuffleWriteBytes / 1e6, m.stages, m.tasks, err)
     }
     rows.sortBy(-_._2).foreach { case (n, w, t, c, g, sw, st, tk, err) =>
       println(f"$n%-26s $w%8.2f $t%8.1f $c%8.1f $g%6.1f $sw%9.1f " +

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.dedup.Dedup
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,28 +13,12 @@ import org.apache.spark.sql.functions._
   * instead of exploding quadratically — then runs the headline
   * dedup / search / feed / rank pipelines plus the BUCKETED streaming
   * merge, recording wall-clock and real shuffle bytes per stage
-  * (SparkListener stage metrics). Output is pasted into
+  * ([[StageMetrics]]). Output is pasted into
   * BENCH_NOTES.md.
   */
 object ScaleEvidence {
 
-  private val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-  private val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-  private val execRunMs = new java.util.concurrent.atomic.AtomicLong
-  private val execGcMs = new java.util.concurrent.atomic.AtomicLong
-
-  private class MetricsListener extends SparkListener {
-    override def onStageCompleted(
-        sc: SparkListenerStageCompleted): Unit = {
-      val tm = sc.stageInfo.taskMetrics
-      if (tm != null) {
-        shuffleWrite.addAndGet(tm.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(tm.shuffleReadMetrics.totalBytesRead)
-        execRunMs.addAndGet(tm.executorRunTime)
-        execGcMs.addAndGet(tm.jvmGCTime)
-      }
-    }
-  }
+  private var metrics: StageMetrics = _
 
   /** Optional `args(1)` regex restricting which stages run (closure
     * runs for a handful of new rows shouldn't pay for the full
@@ -93,17 +76,17 @@ object ScaleEvidence {
       else "skipped (filter)"
       println(f"$label%-42s   $why"); return
     }
-    val w0 = shuffleWrite.get(); val r0 = shuffleRead.get()
-    val e0 = execRunMs.get(); val g0 = execGcMs.get()
+    val m0 = metrics.snapshot()
     val t0 = System.nanoTime()
     val n = f
     val secs = (System.nanoTime() - t0) / 1e9
-    val wMb = (shuffleWrite.get() - w0) / 1e6
-    val rMb = (shuffleRead.get() - r0) / 1e6
+    val m = metrics.snapshot() - m0
+    val wMb = m.shuffleWriteBytes / 1e6
+    val rMb = m.shuffleReadBytes / 1e6
     // wall vs summed executor task time vs GC-inside-tasks: a stage
-    // whose wall >> run/32 is driver- or GC-bound, not plan-bound
-    val runS = (execRunMs.get() - e0) / 1e3
-    val gcS = (execGcMs.get() - g0) / 1e3
+    // whose wall >> run/cores is driver- or GC-bound, not plan-bound
+    val runS = m.execRunMs / 1e3
+    val gcS = m.gcMs / 1e3
     // MECHANICAL memory-pressure tag (the same-run-A/B rule): a wall
     // reading taken while GC eats a material share of task time is
     // environment, not plan — tag it so a 254 s catch-up merge with
@@ -118,20 +101,11 @@ object ScaleEvidence {
 
   def main(args: Array[String]): Unit = {
     val work = "/tmp/graft-scale"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", s"$work/wh")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.build(extra = Map(
+      "spark.sql.warehouse.dir" -> s"$work/wh",
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"))
     implicit val s: SparkSession = spark
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(new MetricsListener)
+    metrics = StageMetrics.attach(spark)
     val d = "/root/testdata/sf0.1"
     val reps = args.headOption.map(_.toInt).getOrElse(10)
     only = args.lift(1).map(_.r)
@@ -1819,7 +1793,10 @@ object ScaleEvidence {
         .asText() == "post123", r.toString)
       1L
     }
-    timed(s"graphql point lookup BUCKET-PRUNED (1/$storeBuckets) " +
+    // the label must not force the marker read: a filtered run that
+    // skips this stage may have no store on disk
+    val bucketsLabel = scala.util.Try(storeBuckets.toString).getOrElse("?")
+    timed(s"graphql point lookup BUCKET-PRUNED (1/$bucketsLabel) " +
       s"vs $nPosts " +
       "stored") {
       val r = pointApi(Some(storeBuckets)).execute(

@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * (`src/modules/api/index.ts:54-75`: yoga on a port, backed by the
   * ingested collections).
   *
-  * Usage: `runMain graft.tools.Serve <storeDir> [port]`
+  * Usage: `runMain graft.tools.Serve <storeDir> [port]` — boots at
+  * `local[nproc]` (or `local[$SPARK_GRAFT_CPUS]`). Under spark-submit
+  * the submitted `--master` and any `--conf` (e.g.
+  * `spark.sql.shuffle.partitions`) are kept; see [[graft.Session]].
   *
   * `storeDir` holds the entity tables as parquet subdirectories —
   * `posts/` `follows/` `profiles/` required, `ceramic_profiles/`
@@ -25,13 +28,8 @@ object Serve {
       "usage: Serve <storeDir> [port] (default port 4568)")
     val store = args(0).stripSuffix("/")
     val port = if (args.length > 1) args(1).toInt else 4568
-    val spark = SparkSession.builder()
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.build(
+      extra = Map("spark.app.name" -> "graft-serve"))
     val server = new HttpApi(new GraftApi(spark, tables(spark, store)),
       port).start()
     println(s"graft GraphQL API listening on " +

@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.functions.WhitespaceTokens
+import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -32,6 +34,18 @@ import scala.collection.mutable
   *     has KNOWN stats under `autoBroadcastJoinThreshold` is a missed
   *     broadcast — Catalyst should have taken it, so a hit means a
   *     hint or config regression.
+  *  4. The tokenizer dag is evaluated EXACTLY ONCE in each guarded
+  *     row (the expression-duplication trap family, BENCH_NOTES
+  *     round-3 session 2): predicate pushdown and project collapse
+  *     can silently multiply an expensive dag — 2x through a pushed
+  *     filter, 16x through Generate inlining. Counted structurally:
+  *     `WhitespaceTokens` (the native tokenizer) plus `StringSplit`
+  *     (rows still on the regex path) expression nodes over the
+  *     walked plan — no string marker a rename could defeat, and a
+  *     shared cache is visited once, so cached rows are not
+  *     print-inflated. The guard found a real 3x in d40 (filter +
+  *     heap key + output each carried the dag), fixed with
+  *     `Predicates.evalOnce`.
   *
   * The walk recurses through AQE roots, cached-relation inner plans
   * (where persistTracked subtrees actually live) and subquery plans —
@@ -122,6 +136,29 @@ class PlanAuditSpec extends SparkSpec {
     } finally graft.CacheTracker.releaseAll()
   }
 
+  /** Invariant 4's count: tokenizer expression nodes in the plan. */
+  private def tokenizerDags(root: SparkPlan): Int =
+    allNodes(root).map(_.expressions.map(_.collect {
+      case _: WhitespaceTokens | _: StringSplit => ()
+    }.size).sum).sum
+
+  private val tokenGuarded = Seq(
+    "d01_dedup_exact", "d02_token_stats", "d03_lang_id",
+    "d04_quality", "d11_chunking", "d12_stratified_sample",
+    "d14_decontaminate", "d15_repetition", "d22_decontaminate_bloom",
+    "d38_gopher_rules",
+    "d40_weighted_sample", // evalOnce barrier
+    "d10_corpus_filter", "d23_quality_sample", // evalOnce barrier
+    "d49_kmv_distinct")
+
+  for (name <- tokenGuarded)
+    test(s"$name: exactly one tokenizer dag in the plan") {
+      val row = Catalog.all.find(_.name == name).get
+      try assert(tokenizerDags(row.run(spark, d).queryExecution
+        .executedPlan) === 1)
+      finally graft.CacheTracker.releaseAll()
+    }
+
   // ── negative controls: prove the WALKER sees what it audits (an
   //    audit that silently collected zero nodes would vacuously pass
   //    all 140 rows) ──────────────────────────────────────────────────
@@ -182,6 +219,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(hits.nonEmpty,
       "checkJoin failed to flag a deliberate sub-threshold SMJ side — " +
         "invariant 3 is running blind (logicalLink/stats missing?)")
+  }
+
+  test("negative control: a tokenizer filter pushed without evalOnce " +
+    "is flagged") {
+    import graft.functions.Text
+    import org.apache.spark.sql.functions._
+    val docs = graft.Tables.documents(spark, d)
+    val toks = Text.tokens(col("text"))
+    val pushed = docs.select(col("doc_id"), toks.as("toks"))
+      .filter(size(col("toks")) > 3)
+    assert(tokenizerDags(pushed.queryExecution.executedPlan) > 1,
+      "the pushed filter's duplicated dag went unseen — invariant 4 " +
+        "is running blind")
+    val once = graft.query.Predicates.evalOnce(docs, Seq(col("doc_id")),
+      "toks" -> toks).filter(size(col("toks")) > 3)
+    assert(tokenizerDags(once.queryExecution.executedPlan) === 1)
   }
 
   private def checkJoin(jt: org.apache.spark.sql.catalyst.plans.JoinType,
