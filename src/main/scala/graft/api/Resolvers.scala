@@ -3,7 +3,7 @@ package graft.api
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, JsonNodeFactory, ObjectNode}
 import graft.query.{ArgsJson, FeedArgs, PostProjections, PostQueries}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -30,11 +30,14 @@ final case class ApiTables(
       * probes (Serve.tables reads the marker automatically). */
     keyBuckets: Option[Int] = None,
     /** A reply-index table ([[graft.state.Layout.writeReplyIndex]])
-      * with its bucket modulus — `children` hydration then ranks on
-      * the slim parent-bucketed index and fetches only the paged
-      * child rows, instead of scanning the whole store (the one probe
-      * `key_bucket` cannot prune). Serve loads `reply_index/` when
-      * present. */
+      * with its bucket modulus — `children` hydration then reads only
+      * the page's `reply_bucket` partitions of the slim
+      * parent-bucketed index, ranks there, and fetches only the paged
+      * child rows from their `key_bucket`s, instead of scanning the
+      * whole store (the one probe `key_bucket` alone cannot prune).
+      * Both bucket lists are read off collected page-bounded rows
+      * ([[graft.query.PostQueries.childrenForIndexed]]). Serve loads
+      * `reply_index/` when present. */
     replyIndex: Option[(DataFrame, Int)] = None)
 
 /** GraphQL executor over the engine's query surface — the reference's
@@ -195,7 +198,7 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
   // a full Catalyst plan just to read its schema — once, not per
   // request
   private lazy val leaderBoardItemShape =
-    tryShape("LeaderBoardItem", PostQueries.leaderBoard(profileView))
+    tryShape("LeaderBoardItem", PostQueries.leaderBoard(profileView, 1))
   private lazy val trendingTagShape =
     tryShape("TrendingTag",
       PostQueries.trendingTags(tables.posts, now(), 1))
@@ -348,10 +351,9 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
       Option(args.get(n)).filterNot(_.isNull).map(_.asText())
     f.name match {
       case "socialPost" =>
-        withHydrated(PostQueries.socialPost(projectedPosts,
+        single(hydrated(PostQueries.socialPost(projectedPosts,
           str("author").getOrElse(""), str("permlink").getOrElse(""),
-          tables.keyBuckets),
-          f.selections, vars)(h => single(h, f.selections))
+          tables.keyBuckets), f.selections, vars), f.selections)
       case "socialFeed" =>
         feedOutput(PostQueries.socialFeed(projectedPosts,
           tables.follows, feedArgs(args),
@@ -377,7 +379,8 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
           tables.follows, feedArgs(args),
           str("author").getOrElse(""), str("permlink").getOrElse(""),
           sampleSeed,
-          socialConnections = tables.socialConnections),
+          socialConnections = tables.socialConnections,
+          keyBuckets = tables.keyBuckets),
           f.selections, vars)
       case "profile" =>
         val id = str("id").orElse(str("username")).getOrElse("")
@@ -426,8 +429,7 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
       sub.name match {
         case "items" =>
           obj.set[ObjectNode](sub.alias,
-            withHydrated(df, sub.selections, vars)(h =>
-              arrayOf(h, sub.selections)))
+            arrayOf(hydrated(df, sub.selections, vars), sub.selections))
         case "__typename" => obj.put(sub.alias, "FeedOutput")
         case _ => obj.set[ObjectNode](sub.alias, nf.nullNode())
       }
@@ -460,49 +462,55 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
     * (`children { author { profile } }` is depth 2). */
   private val MaxHydrationDepth = 4
 
-  /** Persist the page ONCE when relational hydration will re-read it:
-    * every hydration join derives its broadcast keys from the page
-    * subplan, and without the persist each derivation independently
-    * re-executes the full scan+sort+limit feed plan (review r7) — a
-    * fully-hydrated page was re-running the store query 4-6 times.
-    * Nested levels pin their (page-bounded) matched frames the same
-    * way; everything unpersists after the collect. */
-  private def withHydrated[A](df: DataFrame, sels: Seq[Selection],
-      vars: Map[String, JsonNode])(k: DataFrame => A): A =
-    if (!needsHydration(sels)) k(df)
-    else {
-      val pins = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      val page = df.persist()
-      pins += page
-      try k(hydratePosts(page, sels, vars, 1, pins))
-      finally pins.foreach(_.unpersist(blocking = false))
-    }
+  /** The page with its selected relational fields attached. The page
+    * is pruned to the selection plus the hydration keys and collected
+    * ONCE ([[PostQueries.local]]): every hydration join reads its rows
+    * instead of re-running the feed or point plan, and the operators'
+    * bucket lists and join keys come off those rows without a job. */
+  private def hydrated(df: DataFrame, sels: Seq[Selection],
+      vars: Map[String, JsonNode]): DataFrame =
+    if (!needsHydration(sels)) df
+    else hydratePosts(PostQueries.local(prunedTo(df, sels)), sels, vars, 1)
 
   /** The nested-level hook passed into the page operators: runs on the
     * MATCHED (already page-bounded) parents/children, attaching THEIR
-    * relational fields — so `children { author { profile } }` and
-    * `children { children }` hydrate to any depth (graphql-yoga
-    * recurses field thunks, posts.ts:140-258), each level one batched
-    * join over a bounded frame. */
+    * relational fields from the matched rows collected once — so
+    * `children { author { profile } }` and `children { children }`
+    * hydrate to any depth (graphql-yoga recurses field thunks,
+    * posts.ts:140-258), each level one batched join over a bounded
+    * frame. */
   private def hydrateNested(nested: Seq[Selection],
-      vars: Map[String, JsonNode], depth: Int,
-      pins: scala.collection.mutable.ArrayBuffer[DataFrame])
+      vars: Map[String, JsonNode], depth: Int)
       : DataFrame => DataFrame =
     matched =>
       if (depth > MaxHydrationDepth || !needsHydration(nested)) matched
-      else {
-        val m = matched.persist()
-        pins += m
-        hydratePosts(m, nested, vars, depth, pins)
-      }
+      else hydratePosts(PostQueries.local(matched), nested, vars, depth)
+
+  /** `base` pruned to a selection plus the join/order keys the
+    * hydration operators need: without this, a hydration source's
+    * struct carries every store column and pays a full-width scan for
+    * a { permlink }-only selection — measured 3.5x the slim form on a
+    * 500k store (BENCH_NOTES r7) — and a collected page carries every
+    * column. */
+  private def prunedTo(base: DataFrame, sels: Seq[Selection],
+                       extra: Set[String] = Set.empty): DataFrame = {
+    val want = GraphQL.allFieldNames(sels) ++ Set("__typename",
+      "author", "permlink", "parent_author", "parent_permlink",
+      "created_at") ++ extra
+    base.select(base.columns
+      .filter(want.contains).map(c => col(s"`$c`")).toSeq: _*)
+  }
 
   /** The SocialPost interface's RELATIONAL fields, attached to the
     * page only when selected (posts.ts field resolvers — each is a
     * per-post Mongo find there, N+1, re-fired per level; here one
-    * batched join per selected field per level, page-key semi-join
-    * first so nothing full-table ever shuffles against the page):
+    * batched join per selected field per level, the source first cut
+    * down to the page's keys so nothing full-table ever shuffles
+    * against the page). `df` is the [[PostQueries.local]] page, whose
+    * rows give those keys and bucket lists without a job:
     *   - `parent_post` (posts.ts:233-244) → [[PostQueries.withParentFrom]]
     *   - `children(limit, skip)` (posts.ts:161-231) →
+    *     [[PostQueries.childrenForIndexed]] with a reply index, else
     *     [[PostQueries.childrenFor]] (per-parent windowed page)
     *   - `author { id username profile }` (posts.ts:140-155) →
     *     broadcast profile hydration, routed per row: a CeramicPost's
@@ -514,25 +522,8 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
     * Nested post selections recurse via [[hydrateNested]] up to
     * [[MaxHydrationDepth]]. */
   private def hydratePosts(df: DataFrame, sels: Seq[Selection],
-      vars: Map[String, JsonNode], depth: Int,
-      pins: scala.collection.mutable.ArrayBuffer[DataFrame])
-      : DataFrame = {
+      vars: Map[String, JsonNode], depth: Int): DataFrame = {
     val fields = GraphQL.collectFields(sels, None)
-    // the hydration SOURCE pruned to the nested selection (plus the
-    // join/order keys the operators need): without this, the struct
-    // the join builds carries every store column and the hydration
-    // pays a full-width scan for a { permlink }-only selection —
-    // measured 3.5x the slim form on a 500k store (BENCH_NOTES r7)
-    def prunedFrom(base: DataFrame, nested: Seq[Selection],
-                   extra: Set[String] = Set.empty): DataFrame = {
-      val want = GraphQL.allFieldNames(nested) ++ Set("__typename",
-        "author", "permlink", "parent_author", "parent_permlink",
-        "created_at") ++ extra
-      base.select(base.columns
-        .filter(want.contains).map(c => col(s"`$c`")).toSeq: _*)
-    }
-    def pruned(nested: Seq[Selection]): DataFrame =
-      prunedFrom(projectedPosts, nested)
     var out = df
     // PER-ALIAS hydration: collectFields merges same-alias duplicates,
     // so distinct occurrences here carry distinct aliases — each with
@@ -541,15 +532,15 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
     fields.filter(_.name == "parent_post").foreach { pp =>
       // parent-key bucket pruning (graft-layout stores): the bucket
       // filter sits BELOW the column projection (key_bucket is a
-      // partition column, not part of the selection), derived from
-      // the PERSISTED page frame — one bounded collect per occurrence
+      // partition column, not part of the selection); its bucket list
+      // comes off the local page's rows, no job
       val base = tables.keyBuckets
         .map(n => PostQueries.parentPruned(df, projectedPosts, n))
         .getOrElse(projectedPosts)
       out = PostQueries.withParentFrom(out,
-        prunedFrom(base, pp.selections),
+        prunedTo(base, pp.selections),
         outCol = HydPrefix + pp.alias,
-        hydrate = hydrateNested(pp.selections, vars, depth + 1, pins))
+        hydrate = hydrateNested(pp.selections, vars, depth + 1))
     }
     fields.filter(_.name == "children").foreach { ch =>
       val a = argsNode(ch.args, vars)
@@ -559,42 +550,39 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
       val skip = Option(a.get("skip"))
         .filterNot(_.isNull).map(_.asInt()).getOrElse(0)
       val outCol = HydPrefix + ch.alias
-      val hyd = hydrateNested(ch.selections, vars, depth + 1, pins)
+      val hyd = hydrateNested(ch.selections, vars, depth + 1)
       out = tables.replyIndex match {
         case Some((idx, n)) =>
           // rank on the slim parent-bucketed index, fetch only the
           // paged child rows (key-bucket pruned when the store has
           // the layout — the partition column rides through the
           // projection for that filter, then drops before the struct
-          // unless the client actually selected it). Discovery keys
-          // derive from the PERSISTED page frame, not the
-          // join-extended `out`.
+          // unless the client actually selected it). The operator
+          // collects `out` only when earlier fields extended the page.
           val needExtra = tables.keyBuckets.isDefined &&
             !GraphQL.allFieldNames(ch.selections).contains("key_bucket")
           PostQueries.childrenForIndexed(out,
-            prunedFrom(projectedPosts, ch.selections,
+            prunedTo(projectedPosts, ch.selections,
               extra = if (needExtra) Set("key_bucket") else Set.empty),
             idx, n, limit, skip, outCol,
             hydrate = m =>
               hyd(if (needExtra) m.drop("key_bucket") else m),
-            sourceKeyBuckets = tables.keyBuckets,
-            keysFrom = Some(df))
+            sourceKeyBuckets = tables.keyBuckets)
         case None =>
-          PostQueries.childrenFor(out, pruned(ch.selections),
-            limit, skip, outCol, hyd)
+          PostQueries.childrenFor(out, prunedTo(projectedPosts,
+            ch.selections), limit, skip, outCol, hyd)
       }
     }
     val authorFields =
       fields.filter(f => f.name == "author" && f.selections.nonEmpty)
     if (authorFields.nonEmpty) {
-      // key sets derive from the PERSISTED input frame, not the
-      // join-extended `out` — each derivation would otherwise re-run
-      // the hydration joins added above just to project one column
-      val authorKeys = df.select(col("author")).distinct()
-      val hive = profileView.select(col("username").as("_hu"),
-        unifiedProfileStruct(profileView).as("_hprof"))
-        .join(broadcast(authorKeys.select(col("author").as("_hu"))),
-          Seq("_hu"), "left_semi")
+      // the page's authors come off the local input rows (no job) and
+      // reach the profile scans as a pushed-down IN filter
+      val authors = df.select(col("author")).collect()
+        .map(_.getString(0)).distinct.toSeq
+      val hive = profileView.filter(col("username").isin(authors: _*))
+        .select(col("username").as("_hu"),
+          unifiedProfileStruct(profileView).as("_hprof"))
       var h = out.join(broadcast(hive), out("author") === hive("_hu"),
         "left")
       // per-row Ceramic routing needs the page's __typename (always in
@@ -602,11 +590,9 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
       // every row serves the Hive view (a did: author simply misses)
       val cer =
         if (out.columns.contains("__typename")) ceramicView.map { cv =>
-          cv.select(col("did").as("_cdu"),
-            unifiedProfileStruct(cv).as("_cprof"))
-            .join(broadcast(
-              authorKeys.select(col("author").as("_cdu"))),
-              Seq("_cdu"), "left_semi")
+          cv.filter(col("did").isin(authors: _*))
+            .select(col("did").as("_cdu"),
+              unifiedProfileStruct(cv).as("_cprof"))
         } else None
       cer.foreach { cp =>
         h = h.join(broadcast(cp), h("author") === cp("_cdu"), "left")
@@ -697,24 +683,23 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
     obj
   }
 
-  /** Q13 leaderBoard: items ranked by score (distributed rank — no
-    * single-partition window), capped at maxPage (the reference
-    * collects EVERY score>0 profile — resolvers/index.ts:455-476 —
-    * which does not survive a production store); the total stays the
-    * exact distributed count. */
+  /** Q13 leaderBoard: items are the top-maxPage ranked by score
+    * (PostQueries.leaderBoard — the reference collects EVERY
+    * score>0 profile, resolvers/index.ts:455-476, which does not
+    * survive a production store); the total stays exact, one filtered
+    * count. Neither ranks nor caches the whole table. */
   private def leaderBoardField(f: Field): JsonNode = {
     val sels = GraphQL.collectFields(f.selections, None)
-    val ranked = PostQueries.leaderBoard(profileView)
     val obj = nf.objectNode()
     sels.foreach { sub =>
       sub.name match {
         case "items" =>
-          val arr = nf.arrayNode()
-          rowsOf(ranked.limit(maxPage), sub.selections)
-            .foreach(n => arr.add(shape(n, sub.selections)))
-          obj.set[ObjectNode](sub.alias, arr)
+          obj.set[ObjectNode](sub.alias, arrayOf(
+            PostQueries.leaderBoard(profileView, maxPage),
+            sub.selections))
         case "total_active_creators" =>
-          obj.put(sub.alias, ranked.count())
+          obj.put(sub.alias,
+            profileView.filter(col("score") > 0).count())
         case "__typename" => obj.put(sub.alias, "LeaderBoard")
         case _ => obj.set[ObjectNode](sub.alias, nf.nullNode())
       }
@@ -865,9 +850,15 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
   /** Collect a (page-bounded) DataFrame as Jackson rows, pruning the
     * plan's columns to the selection FIRST — the GraphQL selection
     * becomes a Project that Catalyst pushes into the scan. Passing
-    * empty selections skips pruning (caller shapes later). */
-  private def rowsOf(df: DataFrame, sels: Seq[Selection])
-      : Seq[JsonNode] = {
+    * empty selections skips pruning (caller shapes later). `limit`
+    * applies AFTER Spark's JSON encoding: each partition stops at
+    * `limit` rows and the driver keeps the first `limit`, so the read
+    * is one job whatever partition holds the match. (A limit below the
+    * encoding plans a second, single-partition exchange job; one at the
+    * root plans a `CollectLimit`, whose first job reads one partition
+    * and launches another when the match lies elsewhere.) */
+  private def rowsOf(df: DataFrame, sels: Seq[Selection],
+                     limit: Option[Int] = None): Seq[JsonNode] = {
     val pruned =
       if (sels.isEmpty) df
       else {
@@ -880,7 +871,10 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
         if (keep.isEmpty) df.select(df.columns.head)
         else df.select(keep.map(c => col(s"`$c`")).toSeq: _*)
       }
-    pruned.toJSON.collect().toSeq.map(mapper.readTree)
+    val json = pruned.toJSON
+    limit.fold(json.collect())(n =>
+      json.mapPartitions(_.take(n))(Encoders.STRING).collect().take(n))
+      .toSeq.map(mapper.readTree)
   }
 
   private def arrayOf(df: DataFrame, sels: Seq[Selection]): ArrayNode = {
@@ -892,7 +886,7 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
   /** First row shaped to the selection, or JSON null (socialPost /
     * profile return null for a miss, resolvers/index.ts:159-162). */
   private def single(df: DataFrame, sels: Seq[Selection]): JsonNode =
-    rowsOf(df.limit(1), sels).headOption
+    rowsOf(df, sels, limit = Some(1)).headOption
       .map(shape(_, sels)).getOrElse(nf.nullNode())
 
   /** Shape one object node to a selection: aliases applied, inline

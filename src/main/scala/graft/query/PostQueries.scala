@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -176,21 +177,21 @@ object PostQueries {
 
   /** Q11 relatedFeed: posts sharing tags with the anchor (or same
     * community for top-level anchors), uniform seeded sample of 25
-    * (resolvers/index.ts:268-307). Anchor is resolved relationally —
-    * a one-row broadcast, not a driver lookup. */
+    * (resolvers/index.ts:268-307). `keyBuckets` partition-prunes the
+    * anchor lookup on a graft-layout store, like [[socialPost]]. */
   def relatedFeed(posts: DataFrame, follows: DataFrame, a: FeedArgs,
                   author: String, permlink: String,
                   seed: Long = 42L,
-                  socialConnections: Option[DataFrame] = None)
+                  socialConnections: Option[DataFrame] = None,
+                  keyBuckets: Option[Int] = None)
       : DataFrame = {
     // Eager 1-row anchor lookup: the reference throws `Post not
     // found` on a missing anchor (resolvers/index.ts:276-278) — fail
     // fast the same way rather than silently returning an empty feed.
-    // The collect is a bounded point lookup (the same cost the
-    // crossJoin(broadcast) paid); its values then enter the plan as
-    // LITERALS, so the tag-overlap filter is pure codegen with no
-    // join at all.
-    val anchorRow = posts
+    // The collect is a bucket-pruned point lookup; its values then
+    // enter the plan as LITERALS, so the tag-overlap filter is pure
+    // codegen with no join at all.
+    val anchorRow = bucketPointPruned(posts, author, permlink, keyBuckets)
       .filter(col("author") === author && col("permlink") === permlink)
       .select(col("tags"), col("parent_author"), col("parent_permlink"))
       .limit(1).collect()
@@ -220,13 +221,19 @@ object PostQueries {
       Seq(col("author"), col("permlink")))
   }
 
-  /** Q1 socialPost: point lookup. */
+  /** Q1 socialPost: point lookup. The key may match more than one
+    * document: two documents sharing (author, permlink) under
+    * different parents both survive the merge (see
+    * [[childrenForIndexed]]). It is unlimited all the same, and the
+    * reader keeps the first row with its own limit above its JSON
+    * encoding: a limit here would plan a single-partition exchange, a
+    * second job, under every read. A hydrated read hydrates every
+    * matching document before that limit. */
   def socialPost(posts: DataFrame, author: String,
                  permlink: String,
                  keyBuckets: Option[Int] = None): DataFrame =
     bucketPointPruned(posts, author, permlink, keyBuckets)
-      .filter(col("author") === author &&
-        col("permlink") === permlink).limit(1)
+      .filter(col("author") === author && col("permlink") === permlink)
 
   /** Point-lookup partition pruning for a graft-layout store
     * (`created_month / key_bucket = H(author, permlink) mod n`,
@@ -243,28 +250,43 @@ object PostQueries {
         graft.state.Layout.keyBucket(lit(author), lit(permlink), n)))
       .getOrElse(posts)
 
+  /** A page-bounded frame collected ONCE and re-entered as a local
+    * relation. Later plans read its rows instead of re-running its
+    * plan, and a Project or Filter over it folds into the relation at
+    * optimization, so bucket lists and join keys derived from it
+    * evaluate on the driver without a Spark job. A frame that already
+    * optimizes to a local relation is returned as is. */
+  def local(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation => df
+      case _ => df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(df.collect(): _*), df.schema)
+    }
+
+  /** The distinct graft-layout buckets of the (author, permlink) keys in
+    * `rows` — no job when `rows` is [[local]]. */
+  private def bucketsOf(rows: DataFrame, author: Column, permlink: Column,
+                        n: Int): Seq[Int] =
+    rows.select(graft.state.Layout.keyBucket(author, permlink, n))
+      .collect().map(_.getInt(0)).distinct.toSeq
+
   /** Partition-prune a graft-layout posts source to the key buckets
     * the page's parent refs can hash into — the hydration-side twin
-    * of `StreamIngest.prunedExisting` (same keyBucket contract, same
-    * bounded discovery collect: ≤ min(page, n) ints). The win scales
-    * with n / |page keys| — a point page touches 1 bucket of n, a
-    * 100-row page on a 4096-bucket production store ~2.5%. `children`
-    * CANNOT prune on this layout (rows bucket by their OWN key, not
-    * their parent's) — that probe stays a scan unless the deployment
-    * adds a reply-keyed layout. Top-level rows' empty ("","") parent
-    * ref is excluded like prunedExisting. Sources without the layout
-    * pass through. */
+    * of `StreamIngest.prunedExisting` (same keyBucket contract). The
+    * bucket list comes from the page's rows: no job for a [[local]]
+    * page. The win scales with n / |page keys| — a point page touches
+    * 1 bucket of n, a 100-row page on a 4096-bucket production store
+    * ~2.5%. `children` CANNOT prune on this layout (rows bucket by
+    * their OWN key, not their parent's) — that probe goes through the
+    * reply index ([[childrenForIndexed]]). Top-level rows' empty ("","")
+    * parent ref is excluded like prunedExisting. Sources without the
+    * layout pass through. */
   def parentPruned(page: DataFrame, source: DataFrame,
                    keyBuckets: Int): DataFrame =
     if (!source.columns.contains("key_bucket")) source
-    else {
-      val buckets = page
-        .filter(col("parent_author") =!= "")
-        .select(graft.state.Layout.keyBucket(col("parent_author"),
-          col("parent_permlink"), keyBuckets).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      source.filter(col("key_bucket").isin(buckets: _*))
-    }
+    else source.filter(col("key_bucket").isin(bucketsOf(
+      page.filter(col("parent_author") =!= ""), col("parent_author"),
+      col("parent_permlink"), keyBuckets): _*))
 
   /** Q3 children: one level of the reply tree with skip/limit
     * (posts.ts:161-231). */
@@ -363,26 +385,23 @@ object PostQueries {
     * the one API probe the key-bucketed store cannot prune (rows
     * bucket by their own key, children look up by their PARENT's).
     * Same results as [[childrenFor]]; different plan:
-    *   1. the page's parent keys prune the slim index to ≤|page keys|
-    *      `reply_bucket` partitions (bounded discovery collect),
+    *   1. the page is collected once ([[local]]; a no-op for a page
+    *      that already is one) and its rows give the ≤|page keys|
+    *      `reply_bucket` partitions the slim index is pruned to,
     *   2. the per-parent rank/skip/limit window runs on the INDEX
-    *      (5 narrow columns), never the full-width store,
-    *   3. only the ≤ page×limit SURVIVING child keys fetch their full
-    *      rows from the store — key-bucket pruned in turn when the
-    *      store has the graft layout (`sourceKeyBuckets`).
-    * Pruning scales with n/|keys| (a 4096-bucket production index
-    * prunes a 100-key page to ~2.5% of files); the window input drops
-    * from every child of the page's posts at store width to the same
-    * rows at index width regardless. The slim index probe executes
-    * twice (bucket discovery + the fetch join's build side) — both
-    * executions are the pruned slim scan, cheaper than persisting
-    * through the caller's collect.
+    *      (5 narrow columns), never the full-width store, and its
+    *      ≤ page×limit surviving child keys are collected once,
+    *   3. those keys' rows give the store's `key_bucket` list (when
+    *      it has the graft layout, `sourceKeyBuckets`), and only they
+    *      fetch their full rows.
+    * Both bucket lists are literals, so both probes prune statically
+    * and nothing page-bounded executes twice. Pruning scales with
+    * n/|keys| (a 4096-bucket production index prunes a 100-key page
+    * to ~2.5% of files); the window input drops from every child of
+    * the page's posts at store width to the same rows at index width
+    * regardless.
     *
-    * `keysFrom`: the frame to derive the page's keys from when `page`
-    * carries extra plan weight (e.g. earlier hydration joins) — must
-    * hold the same (author, permlink) rows; the two eager discovery
-    * collects then run the slim plan instead of re-executing the
-    * joins. Document identity is the FULL 4-tuple
+    * Document identity is the FULL 4-tuple
     * (parent_author, parent_permlink, author, permlink) — the same
     * key the merge and the index rows preserve (two documents sharing
     * (author, permlink) under different parents BOTH survive) — so
@@ -394,14 +413,11 @@ object PostQueries {
                          limit: Int = 100, skip: Int = 0,
                          outCol: String = "children",
                          hydrate: DataFrame => DataFrame = identity,
-                         sourceKeyBuckets: Option[Int] = None,
-                         keysFrom: Option[DataFrame] = None)
+                         sourceKeyBuckets: Option[Int] = None)
       : DataFrame = {
-    val kf = keysFrom.getOrElse(page)
-    val pb = kf.select(graft.state.Layout.keyBucket(col("author"),
-        col("permlink"), indexBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    childrenForIndexedCore(page, kf,
+    val p = local(page)
+    val pb = bucketsOf(p, col("author"), col("permlink"), indexBuckets)
+    childrenForIndexedCore(p,
       replyIndex.filter(col("reply_bucket").isin(pb: _*)),
       sourceKeyBuckets.filter(_ => source.columns.contains("key_bucket")),
       {
@@ -421,9 +437,12 @@ object PostQueries {
     * discovery collects), the leaf dirs are ENUMERATED from them —
     * the layout is its own manifest, bucket → directory is
     * computable — and Spark's file index only ever sees the ≤|keys|
-    * leaves the probe will read. Moduli come from the tables' own
-    * layout markers (hardcoding n is the silent mis-prune hazard);
-    * an unmarked store degrades to the full read.
+    * leaves the probe will read. So the bucket lists must be values
+    * before the plan exists: the page and the ranked child keys are
+    * collected ([[local]]) and the lists read off their rows. Moduli
+    * come from the tables' own layout markers (hardcoding n is the
+    * silent mis-prune hazard); an unmarked store degrades to the full
+    * read.
     *
     * `sourceView` is a row-local view (projection/filter) applied to
     * every store read — identity in production; test/bench harnesses
@@ -446,7 +465,6 @@ object PostQueries {
                            limit: Int = 100, skip: Int = 0,
                            outCol: String = "children",
                            hydrate: DataFrame => DataFrame = identity,
-                           keysFrom: Option[DataFrame] = None,
                            sourceView: DataFrame => DataFrame =
                              identity): DataFrame = {
     val idxN = graft.state.Layout.replyIndexBuckets(spark, indexDir)
@@ -468,10 +486,8 @@ object PostQueries {
         org.apache.spark.sql.types.ArrayType(
           graft.state.Layout.emptyReplyIndexRows(spark)
             .drop("reply_bucket").schema)))
-    val kf = keysFrom.getOrElse(page)
-    val pb = kf.select(graft.state.Layout.keyBucket(col("author"),
-        col("permlink"), idxN).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val p = local(page)
+    val pb = bucketsOf(p, col("author"), col("permlink"), idxN)
     val idx = graft.state.Layout.replyIndexTable(indexDir)
       .readBuckets(spark, pb)
       .getOrElse(graft.state.Layout.emptyReplyIndexRows(spark))
@@ -482,7 +498,7 @@ object PostQueries {
     def emptyStore(): DataFrame = sourceView(spark.read
       .option("basePath", sourceDir)
       .parquet(firstLeaf.get).filter(lit(false)))
-    childrenForIndexedCore(page, kf, idx, storeN,
+    childrenForIndexedCore(p, idx, storeN,
       {
         case Some(kb) =>
           if (kb.isEmpty) emptyStore()
@@ -495,12 +511,13 @@ object PostQueries {
   }
 
   /** Shared relational core of the two indexed-children forms: rank
-    * the (already index-bucket-pruned) slim index, page per parent,
-    * then fetch surviving child rows from the store obtained via
+    * the (already index-bucket-pruned) slim index for the [[local]]
+    * `page`'s keys, page per parent, collect the surviving child keys
+    * once, then fetch their rows from the store obtained via
     * `sourceFor` — called with `Some(childKeyBuckets)` when
     * `kbModulus` is known (the caller prunes however its store form
     * allows: isin filter or leaf enumeration), `None` otherwise. */
-  private def childrenForIndexedCore(page: DataFrame, kf: DataFrame,
+  private def childrenForIndexedCore(page: DataFrame,
                                      idxPruned: DataFrame,
                                      kbModulus: Option[Int],
                                      sourceFor: Option[Seq[Int]] =>
@@ -510,32 +527,28 @@ object PostQueries {
                                      hydrate: DataFrame => DataFrame)
       : DataFrame = {
     val sk = math.max(0, skip)
-    val keys = kf.select(col("author").as("_ca"),
-      col("permlink").as("_cp")).distinct()
-    val cand = idxPruned
-      .join(broadcast(keys),
-        idxPruned("parent_author") === keys("_ca") &&
-          idxPruned("parent_permlink") === keys("_cp"), "left_semi")
+    // the page's keys are driver values: an IN over literal pairs,
+    // not a join that must first broadcast them
+    def key(a: Column, p: Column) = struct(a.as("author"), p.as("permlink"))
+    val keys = page.select(col("author"), col("permlink")).collect()
+      .map(r => (r.getString(0), r.getString(1))).distinct.toSeq
+    val cand = idxPruned.filter(key(col("parent_author"),
+      col("parent_permlink")).isin(keys.map { case (a, p) =>
+        key(lit(a), lit(p)) }: _*))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("parent_author", "parent_permlink")
       .orderBy(col("created_at").asc, col("author").asc,
         col("permlink").asc)
-    val pagedKeys = cand.withColumn("_rk", row_number().over(w))
+    val pagedKeys = local(cand.withColumn("_rk", row_number().over(w))
       .filter(col("_rk") > sk && col("_rk") <= sk.toLong + limit)
       .select(col("parent_author").as("_pa"),
         col("parent_permlink").as("_pp"),
         col("author").as("_ka"), col("permlink").as("_kp"),
         col("_rk"))
-      // one row per document key (see scaladoc)
-      .dropDuplicates("_pa", "_pp", "_ka", "_kp")
-    val fetchBase = kbModulus match {
-      case Some(n) =>
-        val kb = pagedKeys.select(graft.state.Layout.keyBucket(
-            col("_ka"), col("_kp"), n).as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        sourceFor(Some(kb))
-      case None => sourceFor(None)
-    }
+      // one row per document key (see childrenForIndexed)
+      .dropDuplicates("_pa", "_pp", "_ka", "_kp"))
+    val fetchBase = sourceFor(kbModulus.map(
+      bucketsOf(pagedKeys, col("_ka"), col("_kp"), _)))
     val ranked = fetchBase.join(broadcast(pagedKeys),
       fetchBase("parent_author") === pagedKeys("_pa") &&
         fetchBase("parent_permlink") === pagedKeys("_pp") &&
@@ -543,7 +556,10 @@ object PostQueries {
         fetchBase("permlink") === pagedKeys("_kp"), "inner")
       .drop("_pa", "_pp", "_ka", "_kp")
       // no-op on a latest-wins store; bounds a duplicate-key store to
-      // one fetched row per document instead of multiplying past limit
+      // one fetched row per document instead of multiplying past
+      // limit. Partitioned by parent key, so the dedupe and the
+      // per-parent grouping after it share one exchange.
+      .repartition(col("parent_author"), col("parent_permlink"))
       .dropDuplicates("parent_author", "parent_permlink", "author",
         "permlink")
     assembleChildren(page, ranked, outCol, hydrate)
@@ -629,21 +645,25 @@ object PostQueries {
       .drop("_u_follower_profile", "_u_following_profile")
   }
 
-  /** Q13 leaderBoard: score>0 profiles ranked, plus
-    * total_active_creators (A7). Each item carries `author` (the
+  /** Q13 leaderBoard items: the `k` best score>0 profiles, best first
+    * (score desc, username asc). Each item carries `author` (the
     * username) and the full profile row as `author_profile`, like the
-    * reference's response shape (resolvers/index.ts:464-471).
-    * Ranking via [[Rank.globalRowNumber]] — the reference's rank is
-    * equally global, but a single-partition window is not how you
-    * compute it over 100 TB (identical output, distributed sort). */
-  def leaderBoard(profiles: DataFrame): DataFrame =
-    Rank.globalRowNumber(profiles.filter(col("score") > 0),
-      Seq(col("score").desc, col("username").asc))
+    * reference's response shape (resolvers/index.ts:464-471). `rank`
+    * is the position in this top-k — a row_number over the ≤ k rows of
+    * the top-k's one sorted output partition, never over the table —
+    * so nothing is ranked or cached table-wide; with k at least the
+    * number of score>0 profiles it is the full ranking.
+    * total_active_creators (A7) is a filtered count beside it. */
+  def leaderBoard(profiles: DataFrame, k: Int): DataFrame = {
+    val order = Seq(col("score").desc, col("username").asc)
+    profiles.filter(col("score") > 0).orderBy(order: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*))
+        .cast("long"))
       .select(col("rank"), col("username"),
         col("username").as("author"),
-        struct(profiles.columns.map(col).toSeq: _*)
-          .as("author_profile"),
+        struct(profiles.columns.map(col).toSeq: _*).as("author_profile"),
         col("score"))
+  }
 
   /** A1 trendingTags over posts: 14-day window, unwind, count, top-k.
     */

@@ -9,9 +9,10 @@ import org.apache.spark.sql.SparkSession
   * ingested collections).
   *
   * Usage: `runMain graft.tools.Serve <storeDir> [port]` — boots at
-  * `local[nproc]` (or `local[$SPARK_GRAFT_CPUS]`). Under spark-submit
-  * the submitted `--master` and any `--conf` (e.g.
-  * `spark.sql.shuffle.partitions`) are kept; see [[graft.Session]].
+  * `local[nproc]` (or `local[$SPARK_GRAFT_CPUS]`), with as many HTTP
+  * request threads. Under spark-submit the submitted `--master` and
+  * any `--conf` (e.g. `spark.sql.shuffle.partitions`) are kept; see
+  * [[graft.Session]].
   *
   * `storeDir` holds the entity tables as parquet subdirectories —
   * `posts/` `follows/` `profiles/` required, `ceramic_profiles/`
@@ -28,10 +29,13 @@ object Serve {
       "usage: Serve <storeDir> [port] (default port 4568)")
     val store = args(0).stripSuffix("/")
     val port = if (args.length > 1) args(1).toInt else 4568
-    val spark = graft.Session.build(
+    // one request thread per local core: the pool admits as many
+    // concurrent requests as the master has cores to run their jobs
+    val cores = graft.Session.cores()
+    val spark = graft.Session.build(cores,
       extra = Map("spark.app.name" -> "graft-serve"))
     val server = new HttpApi(new GraftApi(spark, tables(spark, store)),
-      port).start()
+      port, cores).start()
     println(s"graft GraphQL API listening on " +
       s"http://0.0.0.0:${server.boundPort}/api/v2/graphql")
     // serve until killed

@@ -65,7 +65,8 @@ class PipelineIntegrationSpec extends SparkSpec {
 
     // -- creator scores + leaderboard (A6 → Q13)
     val profiles1 = Enrich.channelScores(posts2, profiles0)
-    val lb = PostQueries.leaderBoard(profiles1).collect()
+    val lb = PostQueries.leaderBoard(profiles1,
+      k = profiles1.count().toInt).collect()
     assert(lb.length == 1)
     assert(lb.head.getAs[String]("username") == "alice")
     assert(math.abs(lb.head.getAs[Double]("score") - 3.2) < 1e-9)

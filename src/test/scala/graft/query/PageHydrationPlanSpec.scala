@@ -2,11 +2,16 @@ package graft.query
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
 
 /** Plan contract for the page-hydration operators behind the GraphQL
   * SocialPost fields (the same no-unpartitioned-window /
@@ -21,7 +26,10 @@ class PageHydrationPlanSpec extends SparkSpec {
   // tiny LocalRelation fixtures AQE executes broadcast stages eagerly
   // and the final adaptive plan collapses to a LocalTableScan of the
   // result, hiding the join/window nodes under audit
-  private def nodes(df: DataFrame): Seq[SparkPlan] = {
+  private def nodes(df: DataFrame): Seq[SparkPlan] =
+    walk(df.queryExecution.sparkPlan)
+
+  private def walk(plan: SparkPlan): Seq[SparkPlan] = {
     val out = scala.collection.mutable.ArrayBuffer[SparkPlan]()
     def go(n: SparkPlan): Unit = n.foreach {
       case a: AdaptiveSparkPlanExec => go(a.executedPlan)
@@ -29,8 +37,41 @@ class PageHydrationPlanSpec extends SparkSpec {
         out += s; go(s.plan)
       case x => out += x
     }
-    go(df.queryExecution.sparkPlan); out.toSeq
+    go(plan); out.toSeq
   }
+
+  /** The nodes of every physical plan executed while `body` runs: the
+    * operators' eager collects (the page-bounded intermediates they
+    * re-enter as local relations) as well as the final plan. Listener
+    * events arrive in order, so awaiting a fence query's event after
+    * `body` awaits all of them. */
+  private def executed[A](body: => A): (A, Seq[SparkPlan]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      val fence = spark.range(1).toDF()
+      fence.collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_ eq fence.queryExecution) &&
+          System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seen.asScala.exists(_ eq fence.queryExecution))
+      (out, seen.asScala.toSeq.filterNot(_ eq fence.queryExecution)
+        .flatMap(qe => walk(qe.executedPlan)))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def partitionFiltered(ns: Seq[SparkPlan], column: String) =
+    ns.exists {
+      case f: FileSourceScanExec =>
+        f.partitionFilters.exists(_.references.exists(_.name == column))
+      case _ => false
+    }
 
   // child pK (K % 3 == 0) replies to p(K-1), whose author is
   // user((K-1) % 7) — parent_author must be the PARENT's author
@@ -123,7 +164,6 @@ class PageHydrationPlanSpec extends SparkSpec {
 
   test("graft-layout bucket pruning: point lookup and parent-key " +
     "hydration probes carry key_bucket PARTITION filters") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bucketed").toString + "/posts"
     posts
@@ -166,7 +206,6 @@ class PageHydrationPlanSpec extends SparkSpec {
   test("childrenForIndexed: identical results to childrenFor, " +
     "reply_bucket + key_bucket partition filters on the probes, " +
     "window stays partitioned") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val base = java.nio.file.Files
       .createTempDirectory("graft-replyidx").toString
     posts
@@ -182,29 +221,30 @@ class PageHydrationPlanSpec extends SparkSpec {
       .replyIndexBuckets(spark, s"$base/reply_index").contains(8))
     val idx = spark.read.parquet(s"$base/reply_index")
     val page = stored.filter(col("permlink").isin("p2", "p5", "p7"))
-    val viaIndex = PostQueries.childrenForIndexed(page, stored, idx, 8,
-      limit = 2, skip = 0, sourceKeyBuckets = Some(8))
-    val viaScan = PostQueries.childrenFor(page, stored, limit = 2,
-      skip = 0)
     def kidsOf(df: org.apache.spark.sql.DataFrame) =
       df.select(col("permlink"), transform(col("children"),
           k => k.getField("permlink")).as("ks"))
         .collect().map(r => r.getString(0) -> r.getSeq[String](1))
         .toMap
-    assert(kidsOf(viaIndex) == kidsOf(viaScan))
-    assert(kidsOf(viaIndex)("p2") == Seq("p3"))  // p3 replies to p2
-    assert(kidsOf(viaIndex)("p7").isEmpty)       // no replies → []
+    // the probes run partly in the operator's own collects (the page
+    // and the ranked child keys), so the audit reads every plan the
+    // call and its final collect executed
+    val (viaIndex, ran) = executed(kidsOf(PostQueries.childrenForIndexed(
+      page, stored, idx, 8, limit = 2, skip = 0,
+      sourceKeyBuckets = Some(8))))
+    val viaScan = PostQueries.childrenFor(page, stored, limit = 2,
+      skip = 0)
+    assert(viaIndex == kidsOf(viaScan))
+    assert(viaIndex("p2") == Seq("p3"))  // p3 replies to p2
+    assert(viaIndex("p7").isEmpty)       // no replies → []
     // both partition filters reach their scans
-    val scans = nodes(viaIndex).collect {
-      case f: FileSourceScanExec => f
-    }
-    assert(scans.exists(_.partitionFilters.exists(
-      _.references.exists(_.name == "reply_bucket"))),
+    val scans = ran.collect { case f: FileSourceScanExec => f }
+    assert(partitionFiltered(ran, "reply_bucket"),
       scans.map(_.partitionFilters).toString)
-    assert(scans.exists(_.partitionFilters.exists(
-      _.references.exists(_.name == "key_bucket"))),
+    assert(partitionFiltered(ran, "key_bucket"),
       scans.map(_.partitionFilters).toString)
-    val unpartitioned = nodes(viaIndex).collect {
+    assert(ran.exists(_.isInstanceOf[WindowExec]))
+    val unpartitioned = ran.collect {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }
     assert(unpartitioned.isEmpty)
@@ -235,7 +275,6 @@ class PageHydrationPlanSpec extends SparkSpec {
   test("childrenForIndexedAt (directory form): same results as the " +
     "frame form, and BOTH file indexes hold only the probed leaf " +
     "dirs — the listing never touches the rest of the table") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
     val base = java.nio.file.Files
       .createTempDirectory("graft-replyidx-at").toString
     posts
@@ -257,21 +296,20 @@ class PageHydrationPlanSpec extends SparkSpec {
     val viaFrames = PostQueries.childrenForIndexed(page, stored,
       spark.read.parquet(s"$base/idx"), 8, limit = 2,
       sourceKeyBuckets = Some(8))
-    val viaDirs = PostQueries.childrenForIndexedAt(spark, page,
-      s"$base/posts", s"$base/idx", limit = 2)
     def kidsOf(df: org.apache.spark.sql.DataFrame) =
       df.select(col("permlink"), transform(col("children"),
           k => k.getField("permlink")).as("ks"))
         .collect().map(r => r.getString(0) -> r.getSeq[String](1))
         .toMap
-    assert(kidsOf(viaDirs) == kidsOf(viaFrames))
-    assert(kidsOf(viaDirs)("p2") == Seq("p3"))
-    assert(kidsOf(viaDirs)("p7").isEmpty)
+    val (viaDirs, ran) = executed(kidsOf(PostQueries.childrenForIndexedAt(
+      spark, page, s"$base/posts", s"$base/idx", limit = 2)))
+    assert(viaDirs == kidsOf(viaFrames))
+    assert(viaDirs("p2") == Seq("p3"))
+    assert(viaDirs("p7").isEmpty)
     // the listing contract: every scan over the two tables is rooted
     // at LEAF dirs (bucket-valued paths), never the table root — the
     // file index was built from enumerated leaves only
-    val scans = nodes(viaDirs).collect {
-      case f: FileSourceScanExec => f }
+    val scans = ran.collect { case f: FileSourceScanExec => f }
     val idxScans = scans.filter(_.relation.location.rootPaths
       .exists(_.toString.contains(s"$base/idx")))
     val storeScans = scans.filter(_.relation.location.rootPaths
@@ -310,6 +348,26 @@ class PageHydrationPlanSpec extends SparkSpec {
       s"$emptyBase/posts", s"$emptyBase/idx", limit = 2)
     assert(onEmpty.count() === 1)
     assert(onEmpty.select(size(col("children"))).head().getInt(0) === 0)
+  }
+
+  test("a served point read plans no single-partition exchange: its " +
+    "limit sits above the JSON encoding, its scan is bucket-pruned") {
+    val tables = graft.api.LayoutStore.tables(spark)
+    val api = new graft.api.GraftApi(spark, tables)
+    val (node, ran) = executed(api.execute(
+      """{ socialPost(author: "dave", permlink: "r1") { permlink } }"""))
+    assert(node.path("data").path("socialPost").path("permlink")
+      .asText() == "r1", node.toString)
+    assert(partitionFiltered(ran, "key_bucket"))
+    def singlePartition(ns: Seq[SparkPlan]) = ns.exists {
+      case e: ShuffleExchangeExec => e.outputPartitioning == SinglePartition
+      case _ => false
+    }
+    assert(!singlePartition(ran), ran.mkString("\n"))
+    // negative control: the same read limited BELOW the encoding
+    val below = PostQueries.socialPost(tables.posts, "dave", "r1",
+      tables.keyBuckets).limit(1).toJSON
+    assert(singlePartition(walk(below.queryExecution.executedPlan)))
   }
 
   test("withParentFrom: no full-table shuffle against the page — " +

@@ -182,7 +182,7 @@ class PostQueriesSpec extends SparkSpec {
     import spark.implicits._
     val profiles = Seq(("a", 10.0), ("b", 30.0), ("c", 0.0), ("d", 30.0))
       .toDF("username", "score")
-    val lb = PostQueries.leaderBoard(profiles).collect()
+    val lb = PostQueries.leaderBoard(profiles, k = 4).collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[String]("username")))
     assert(lb.toSeq == Seq((1L, "b"), (2L, "d"), (3L, "a")))
     val fc = PostQueries.followCounts(follows, "carol").collect().head
