@@ -121,37 +121,23 @@ object Tables {
     */
   val perfConf: Map[String, String] = Map(
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
-    // Never take the bypass-merge shuffle writer (r14). Bypass opens
+    // Never take the bypass-merge shuffle writer. Bypass opens
     // numPartitions FILES PER MAP TASK (M·R creates+deletes per
     // shuffle; thread dumps showed FileOutputStream.open0 /
     // FileChannel map0/unmap0 as the TOP executor frames at 32
     // cores), where the serialized sort writer spills ONE file per
-    // map task whatever R is. Measured on the shuffle-heavy subset
-    // (d20/d31/d41/d42/m02/q49/d05, paired 32-core runs): wall
-    // 13.0 → 10.0 s, summed task 188 → 121 s; q49's shuffle stages
-    // alone 11.0 → 1.8 task-s. Scale-honest: bypass is only eligible
-    // at numPartitions ≤ 200 and no map-side combine, so at cluster
-    // scale (R ≫ 200) this flag is a no-op — it changes exactly the
+    // map task whatever R is. Bypass is only eligible at
+    // numPartitions ≤ 200 and no map-side combine, so at cluster
+    // scale (R ≫ 200) this flag is a no-op; it changes exactly the
     // small-R shuffles, where file-creation syscalls dominate the
-    // write itself, at ANY core count (8-core task seconds drop
-    // too).
-    "spark.shuffle.sort.bypassMergeThreshold" -> "1") ++
-    // dev-only A/B seam: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" lets a
-    // profiling run flip one config without a rebuild. Part of
-    // perfConf, so the session factory applies it BEFORE the pinned
-    // session configs (ADVICE r13 precedence): it can never override
-    // the session contract.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq.flatMap(parseExtraConf)
-
-  /** `k=v;k=v` → pairs, key and value trimmed separately. Blank
-    * entries are skipped; an entry with no `=` or an empty key fails
-    * loudly — a malformed override must not become a silent no-op. */
-  private[graft] def parseExtraConf(spec: String): Seq[(String, String)] =
-    spec.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
-      val i = kv.indexOf('=')
-      val key = if (i < 0) "" else kv.take(i).trim
-      require(key.nonEmpty,
-        s"SPARK_GRAFT_EXTRA_CONF entry '$kv' is not key=value")
-      key -> kv.drop(i + 1).trim
-    }
+    // write itself. Measured on the shuffle-heavy subset
+    // (d20/d31/d41/d42/m02/q49/d05, sf0.1, QueryProfile walls):
+    //   - 32 cores, paired: 13.0 → 10.0 s with the flag; q49's
+    //     shuffle stages alone 11.0 → 1.8 task-s.
+    //   - 4 cores, paired min-of-3: 6.90 → 6.22 s with the flag, all
+    //     of it d42 (2.42 → 1.68 s); q49 0.37 → 0.41 and d41
+    //     1.22 → 1.31 s go the other way, the rest within ±4%. The
+    //     perfbench `catalog` and `serve` workloads (3 seeds each)
+    //     move by under 1.5% either way.
+    "spark.shuffle.sort.bypassMergeThreshold" -> "1")
 }

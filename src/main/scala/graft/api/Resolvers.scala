@@ -69,24 +69,18 @@ final case class ApiTables(
   * O(page) contract above exists to prevent. Counts stay exact
   * (distributed aggregates, not capped).
   *
-  * `validateDocuments` (default on, yoga parity): selections and
-  * argument names are validated against the SERVED schema shape
-  * ([[SchemaShape]], derived from the entity DataFrames + resolver
-  * fields) before execution — a typo'd field is a named request
-  * error, not a silent null. Off = the permissive pre-validation
-  * behavior (unknown selected fields serialize as JSON null).
+  * Selections and argument names are validated against the SERVED
+  * schema shape ([[SchemaShape]], derived from the entity DataFrames
+  * + resolver fields) before execution (yoga parity) — a typo'd
+  * field is a named request error, not a silent null.
   *
-  * `stemSearch` (default off): searchFeed stems query terms and
-  * corpus tokens with the Porter stemmer — the reference's Mongo
-  * `$text` english-analyzer behavior ("running" matches "run",
-  * db.ts:61-63). Off = the token-exact contract the catalog's DuckDB
-  * oracle verifies. */
+  * searchFeed is token-exact, the contract the catalog's DuckDB
+  * oracle verifies; Porter-stemmed search is
+  * `PostQueries.searchFeed(stem = true)`. */
 final class GraftApi(spark: SparkSession, tables: ApiTables,
                      now: () => Column = () => current_timestamp(),
                      sampleSeed: Long = 42L,
-                     maxPage: Int = 10000,
-                     validateDocuments: Boolean = true,
-                     stemSearch: Boolean = false) {
+                     maxPage: Int = 10000) {
   import GraphQL._
   import SchemaShape.{FieldShape, TypeShape}
 
@@ -264,17 +258,15 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
     // document — unselected operations included, like graphql-js
     // validate() — every unknown field/argument reported at once, as
     // a request error
-    if (validateDocuments) {
-      val verrs = allOps.flatMap(o =>
-        SchemaShape.validate(o.selections, queryShape)).distinct
-      if (verrs.nonEmpty) {
-        val arr = nf.arrayNode()
-        verrs.foreach { m =>
-          val e = nf.objectNode(); e.put("message", m); arr.add(e)
-        }
-        out.set[ObjectNode]("errors", arr)
-        return out
+    val verrs = allOps.flatMap(o =>
+      SchemaShape.validate(o.selections, queryShape)).distinct
+    if (verrs.nonEmpty) {
+      val arr = nf.arrayNode()
+      verrs.foreach { m =>
+        val e = nf.objectNode(); e.put("message", m); arr.add(e)
       }
+      out.set[ObjectNode]("errors", arr)
+      return out
     }
     val vars: Map[String, JsonNode] =
       try buildVars(op, variablesJson)
@@ -371,8 +363,7 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
         feedOutput(PostQueries.searchFeed(projectedPosts,
           tables.follows, feedArgs(args),
           str("searchTerm").getOrElse(""),
-          socialConnections = tables.socialConnections,
-          stem = stemSearch),
+          socialConnections = tables.socialConnections),
           f.selections, vars)
       case "relatedFeed" =>
         feedOutput(PostQueries.relatedFeed(projectedPosts,

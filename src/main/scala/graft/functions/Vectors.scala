@@ -711,18 +711,11 @@ object Vectors {
     * best-y pick are [[marginBest]], unchanged from the exact form.
     *
     * Output adds `n_cand` (candidates scored per query) — the
-    * recall-vs-cost knob made visible.
-    *
-    * `saltKOverride` pins the candidate-join fan-out (ADVICE r13:
-    * the default derives from `defaultParallelism` at plan time, so
-    * plan snapshots churn across machines and the assigned side is
-    * replicated even when the probe side is tiny); None = the
-    * cores/nlist heuristic documented at the salt below. */
+    * recall-vs-cost knob made visible. */
   def marginMiningIvf(a: DataFrame, b: DataFrame, vecCol: String,
                       idCol: String, k: Int,
                       centroids: Seq[(Int, Seq[Float])],
-                      nprobe: Int,
-                      saltKOverride: Option[Int] = None): DataFrame = {
+                      nprobe: Int): DataFrame = {
     val isFloat = a.schema(vecCol).dataType match {
       case org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType, _) => true
@@ -762,10 +755,8 @@ object Vectors {
     // exactly the unsalted join, zero replication. Results identical:
     // each probe row still meets each same-cluster b row exactly once
     // (its own salt's copy).
-    val saltK = saltKOverride.getOrElse(math.max(1,
-      a.sparkSession.sparkContext.defaultParallelism /
-        math.max(centroids.size, 1)))
-    require(saltK >= 1, s"saltK must be >= 1, got $saltK")
+    val saltK = math.max(1, a.sparkSession.sparkContext.defaultParallelism /
+      math.max(centroids.size, 1))
     val probesSalted = probes.withColumn("__salt",
       pmod(xxhash64(col("a_id")), lit(saltK.toLong)).cast("int"))
     val bSalted = bAssigned.withColumn("__salt",

@@ -31,32 +31,57 @@ final case class Q(
 
 object Catalog {
 
-  // Presentation sort WITHOUT the double execution (r13): a global
-  // orderBy executes its child TWICE — the range partitioner's
-  // sample job, then the real shuffle pass — and under AQE that
-  // recomputation reaches back to the last materialized exchange,
-  // i.e. for scan-level pipelines the ENTIRE scan + compute (guide
-  // §2.4; measured: mm04/mm09 halved, mm10's codec pipeline was the
-  // single largest line in the catalog). Registering the sort's
-  // child with the cache manager makes the sample pass populate the
-  // cache and the shuffle pass read it; the harness releases it
-  // after each query (CacheTracker contract). The returned DataFrame
-  // is the SAME object — the plan, schema, rows and row order are
-  // untouched by construction; only the physical execution of the
-  // identical plan changes (cache substitution at planning time).
-  // Applied uniformly to every catalog row whose analyzed plan ends
-  // in a global Sort; rows ending in sort+limit plan as
-  // TakeOrderedAndProject (no range exchange) and match nothing.
-  private def cacheFinalSortChild(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.logical.Sort
+  // Presentation sort WITHOUT the double execution: a global orderBy
+  // runs its child TWICE — the range partitioner's sample job, then
+  // the shuffle pass — and under AQE the rerun reaches back to the
+  // last materialized exchange, i.e. it repeats the sort's TOP STAGE
+  // (the operators between the sort and the nearest node below it
+  // that plans an exchange). Persisting the sort's child makes the
+  // sample pass populate the cache and the shuffle pass read it; the
+  // harness releases it after each query (CacheTracker contract).
+  // That pays only when the top stage holds per-row work Catalyst
+  // cannot cost — a graft.functions native expression, a ScalaUDF, an
+  // array set operation (array_intersect and kin: cost grows with the
+  // arrays' length, the near-dup verify stages) or a typed-object
+  // operator (the codec rows); over other built-in expressions the
+  // cache build and block-manager round trip cost more than running
+  // the stage twice. A subtree the cache manager already holds is
+  // computed once either way, so it ends the stage too. Decided on
+  // the analyzed plan, so the cache is registered before the row's
+  // own plan is optimized and is substituted there; the returned
+  // DataFrame is the SAME object — plan, schema, rows and row order
+  // are untouched. A sort + limit plans as TakeOrderedAndProject (no
+  // range exchange) and matches nothing.
+  private[queries] def singleExecuteFinalSort(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{ArraySetLike,
+      Expression, ScalaUDF}
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate,
+      BinaryNode, Deduplicate, DeserializeToObject, Distinct,
+      GlobalLimit, LogicalPlan, MapElements, MapPartitions, Project,
+      RepartitionOperation, Sort, Window}
     import org.apache.spark.sql.graftbridge.GraftBridge
-    GraftBridge.analyzed(df) match {
-      case Sort(_, true, child, _) =>
-        graft.CacheTracker.persistTracked(
-          GraftBridge.ofRows(df.sparkSession, child))
-        df
-      case _ => df
+    def sortChild(p: LogicalPlan): Option[LogicalPlan] = p match {
+      case Project(_, c) => sortChild(c)
+      case Sort(_, true, c, _) => Some(c)
+      case _ => None
     }
+    def opaque(e: Expression): Boolean = e.exists {
+      case _: ScalaUDF | _: ArraySetLike => true
+      case x => x.getClass.getName.startsWith("graft.functions.")
+    }
+    def topStageOpaque(p: LogicalPlan): Boolean = p match {
+      case _: BinaryNode | _: Aggregate | _: Window | _: Distinct |
+           _: Deduplicate | _: RepartitionOperation | _: GlobalLimit |
+           Sort(_, true, _, _) => false
+      case _ if GraftBridge.isCached(df.sparkSession, p) => false
+      case _: MapPartitions | _: MapElements | _: DeserializeToObject =>
+        true
+      case _ => p.expressions.exists(opaque) ||
+        p.children.exists(topStageOpaque)
+    }
+    sortChild(GraftBridge.analyzed(df)).filter(topStageOpaque).foreach(c =>
+      graft.CacheTracker.persistTracked(GraftBridge.ofRows(df.sparkSession, c)))
+    df
   }
 
   // Shared tokenizer fragment for oracle SQL (must match Text.tokens:
@@ -4884,33 +4909,9 @@ object Catalog {
         ORDER BY cluster_id"""))
   )
 
-  /** Rows that keep the final-sort child cache — r14 SELECTIVE
-    * application of r13's uniform wrapper. A paired full-catalog A/B
-    * (two runs each side, min-of-2 per query; OPTIMIZATION_r14.md)
-    * measured the wrapper as a net TAX on 77 of 141 rows (median
-    * −5.1% without it: the cache build + block-manager round trip
-    * costs more than re-running a cheap scan-side child twice) and a
-    * clear win only where the sort child is genuinely expensive —
-    * the codec pipelines (mm02/04/09/10), heavy verify stages
-    * (d42/d47/v14), per-row-heavy single-split scans (d02/d07/v08),
-    * and multi-consumer subtrees (d26/q31). Keep-set = rows where
-    * cache-ON won by ≥0.14 s in the A/B; everything else returns to
-    * the plain double-execution plan, which the same A/B measured as
-    * cheaper. This also retires the r13 ADVICE risk of pinning huge
-    * pair-enumeration intermediates (d41 — measured −1.18 s without
-    * the cache) in block-manager memory. */
-  private val sortCacheRows: Set[String] = Set(
-    "mm02_media_features", "mm04_audio_decode", "mm09_audio_chunks",
-    "mm10_video_frames", "d42_containment_pairs",
-    "d47_sorted_neighborhood", "v14_knn_label", "d02_token_stats",
-    "d07_rolling_fp", "v08_centroid_outliers", "d26_cluster_survivors",
-    "q31_hybrid_rrf")
-
-  /** The catalog, with the [[sortCacheRows]] rows' final global Sort
-    * single-executed (see [[cacheFinalSortChild]]). Identity
+  /** The catalog, each row's final global Sort single-executed where
+    * its plan calls for it (see [[singleExecuteFinalSort]]). Identity
     * transform on results. */
-  val all: Seq[Q] = raw.map(q =>
-    if (sortCacheRows(q.name))
-      q.copy(run = (s, d) => cacheFinalSortChild(q.run(s, d)))
-    else q)
+  val all: Seq[Q] =
+    raw.map(q => q.copy(run = (s, d) => singleExecuteFinalSort(q.run(s, d))))
 }

@@ -35,4 +35,12 @@ object GraftBridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
+
+  /** Whether the session's cache manager holds `plan`'s result. */
+  def isCached(spark: org.apache.spark.sql.SparkSession,
+               plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Boolean =
+    spark.sharedState.cacheManager.lookupCachedData(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+      .isDefined
 }

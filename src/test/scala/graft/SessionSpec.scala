@@ -2,8 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The session factory's config resolution and the
-  * `SPARK_GRAFT_EXTRA_CONF` parser, as pure functions. */
+/** The session factory's config resolution, as a pure function. */
 class SessionSpec extends AnyFunSuite {
 
   test("pinned configs win over an overlapping perfConf key") {
@@ -37,17 +36,5 @@ class SessionSpec extends AnyFunSuite {
     assert(!submitted.contains("spark.master"))
     assert(!submitted.contains("spark.sql.shuffle.partitions"))
     assert(submitted("spark.sql.adaptive.enabled") === "true")
-  }
-
-  test("extra-conf parser trims key and value separately") {
-    assert(Tables.parseExtraConf(" a.b = 1 ; c=x=y ;; ") ===
-      Seq("a.b" -> "1", "c" -> "x=y"))
-    assert(Tables.parseExtraConf("k=") === Seq("k" -> ""))
-    assert(Tables.parseExtraConf("  ") === Nil)
-  }
-
-  test("extra-conf parser fails on an entry with no '=' or no key") {
-    for (bad <- Seq("a.b", "a=1;flag", "=v", " = v"))
-      intercept[IllegalArgumentException](Tables.parseExtraConf(bad))
   }
 }

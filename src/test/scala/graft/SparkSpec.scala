@@ -10,15 +10,10 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** Built by the engine's session factory, so specs run under the
+    * same configs as Bench and Verify, at two cores. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.build(2, Map("spark.app.name" -> "graft-test"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

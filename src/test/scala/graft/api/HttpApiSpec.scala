@@ -645,7 +645,7 @@ class HttpApiSpec extends SparkSpec {
   }
 
   test("document validation: unknown fields and arguments are " +
-    "yoga-style named request errors; opt-out restores nulls") {
+    "yoga-style named request errors") {
     val node = gql(
       """{ socialPost(author: "alice", permlink: "v1") {
         |  permlinkz
@@ -684,12 +684,6 @@ class HttpApiSpec extends SparkSpec {
         |  spkvideo { play_urlz } } }""".stripMargin)
     assert(badStruct.path("errors").get(0).path("message").asText()
       .contains(""""play_urlz""""))
-    // opt-out: the permissive pre-validation contract
-    val loose = new GraftApi(spark, tables, validateDocuments = false)
-    val n2 = loose.execute(
-      """{ socialPost(author: "alice", permlink: "v1") { permlinkz } }""")
-    assert(!n2.has("errors") &&
-      n2.path("data").path("socialPost").path("permlinkz").isNull)
   }
 
   test("Ceramic-authored rows hydrate author.profile from the " +

@@ -2,13 +2,16 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.functions.WhitespaceTokens
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.StringSplit
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.joins.{CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import scala.collection.mutable
 
@@ -46,6 +49,10 @@ import scala.collection.mutable
   *     print-inflated. The guard found a real 3x in d40 (filter +
   *     heap key + output each carried the dag), fixed with
   *     `Predicates.evalOnce`.
+  *  5. The final global sort's child is persisted (single-executed)
+  *     by its plan's shape, never by the row's name: exactly when the
+  *     sort's top stage holds native, UDF, array-set or typed-object
+  *     work ([[Catalog.singleExecuteFinalSort]]).
   *
   * The walk recurses through AQE roots, cached-relation inner plans
   * (where persistTracked subtrees actually live) and subquery plans —
@@ -158,6 +165,62 @@ class PlanAuditSpec extends SparkSpec {
         .executedPlan) === 1)
       finally graft.CacheTracker.releaseAll()
     }
+
+  /** Invariant 5's read: the child of `df`'s root global Sort (seen
+    * through Projects), and whether the cache manager holds it. */
+  private def finalSortPersisted(df: DataFrame): Boolean = {
+    def child(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, c) => child(c)
+      case Sort(_, true, c, _) => c
+      case other => fail(s"root is not a global sort: ${other.nodeName}")
+    }
+    GraftBridge.isCached(spark, child(df.queryExecution.analyzed))
+  }
+
+  private def rowPersisted(name: String): Boolean = {
+    val row = Catalog.all.find(_.name == name).get
+    try finalSortPersisted(row.run(spark, d))
+    finally graft.CacheTracker.releaseAll()
+  }
+
+  test("invariant 5: one shape, one decision — d02, d03, d04 and d07 " +
+    "(scan → native tokenizer → per-row score → sort) all persist") {
+    val rows = Seq("d02_token_stats", "d03_lang_id", "d04_quality",
+      "d07_rolling_fp")
+    val decisions = rows.map(n => n -> rowPersisted(n))
+    assert(decisions.forall(_._2), decisions.mkString(", "))
+  }
+
+  test("invariant 5: a sort over built-in-only work (q01) is not " +
+    "persisted") {
+    assert(!rowPersisted("q01_where_algebra"))
+  }
+
+  test("invariant 5: a Project over a Sort with a native child is " +
+    "persisted, and the executed plan reads the cache") {
+    import graft.functions.Text
+    import org.apache.spark.sql.functions._
+    val df = graft.Tables.documents(spark, d)
+      .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
+      .orderBy("doc_id").select("doc_id")
+    assert(df.queryExecution.analyzed.isInstanceOf[Project])
+    try {
+      assert(finalSortPersisted(Catalog.singleExecuteFinalSort(df)))
+      assert(allNodes(df.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[InMemoryTableScanExec]))
+    } finally graft.CacheTracker.releaseAll()
+  }
+
+  test("invariant 5: native work only below an exchange " +
+    "(native → groupBy → orderBy) is not persisted") {
+    import graft.functions.Text
+    import org.apache.spark.sql.functions._
+    val df = graft.Tables.documents(spark, d)
+      .select(explode(Text.tokens(col("text"))).as("tok"))
+      .groupBy("tok").count().orderBy("tok")
+    try assert(!finalSortPersisted(Catalog.singleExecuteFinalSort(df)))
+    finally graft.CacheTracker.releaseAll()
+  }
 
   // ── negative controls: prove the WALKER sees what it audits (an
   //    audit that silently collected zero nodes would vacuously pass

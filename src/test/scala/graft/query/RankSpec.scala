@@ -1,10 +1,19 @@
 package graft.query
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class RankSpec extends SparkSpec {
+
+  /** ~5 MB of incompressible shuffle payload over 10k rows. AQE sizes
+    * cached plans by bytes (`Tables.perfConf`), so a KB-sized input
+    * would coalesce to one partition and hide the distribution the
+    * tests below assert. */
+  private def padded(df: DataFrame, key: String): DataFrame =
+    df.withColumn("__pad", concat((0 until 8).map(j =>
+      sha2(concat(col(key).cast("string"), lit(s"#$j")), 512)): _*))
 
   test("globalRowNumber == unpartitioned window row_number, no WindowExec") {
     val customers = graft.Tables.customer(spark, "/root/testdata/sf0.01")
@@ -35,7 +44,7 @@ class RankSpec extends SparkSpec {
       Window.orderBy("k").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)))
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val summed = Rank.globalRunningSum(df, Seq(col("k").asc),
+    val summed = Rank.globalRunningSum(padded(df, "k"), Seq(col("k").asc),
       col("n"), "cum")
     assert(summed.rdd.getNumPartitions > 1)
     val got = summed.select("k", "cum")
@@ -51,7 +60,7 @@ class RankSpec extends SparkSpec {
     // rank job actually uses multiple partitions (the point of the
     // operator) and still numbers 1..n densely
     val df = (1 to 10000).map(i => (i.toLong, s"u$i")).toDF("v", "u")
-    val ranked = Rank.globalRowNumber(df,
+    val ranked = Rank.globalRowNumber(padded(df, "u"),
       Seq(col("v").desc, col("u").asc))
     val nParts = ranked.rdd.getNumPartitions
     assert(nParts > 1, s"expected distributed sort, got $nParts partition")
