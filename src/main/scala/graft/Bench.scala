@@ -106,9 +106,11 @@ object Bench {
     // Self-record (VERDICT r4 #1): the official BENCH artifact only
     // keeps what the driver's tail capture catches, so ALSO write the
     // profile — full precision, one query per line for readable
-    // diffs — to a repo file committed each round.
+    // diffs — to a repo file committed each round. Relative to the
+    // working directory (the checkout root under `sbt run`), so a run
+    // from another checkout writes that checkout's file.
     val selfPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SELF",
-      "/root/repo/BENCH_SELF.json")
+      "BENCH_SELF.json")
     try {
       val body = results.map { case (k, (v, e)) =>
         s"""    "$k": {"sec": $v, "err": ${

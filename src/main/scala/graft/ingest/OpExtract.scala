@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.domain.Schemas
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Block → operation extraction (ingest plane, SURVEY.md §3.2).
@@ -20,7 +20,17 @@ import org.apache.spark.sql.functions._
 object OpExtract {
 
   /** blocks (Schemas.block) → one row per operation:
-    * (block_height, ts, trx_id, op_index, op_name, payload). */
+    * (block_height, ts, trx_id, op_index, op_name, payload,
+    * beneficiaries, authority_signed).
+    *
+    * The last two are the transaction's sibling-op facts (J10,
+    * hive-stream.ts:589-620): beneficiaries from the FIRST
+    * comment_options op and authority_signed from a 3speak-publish
+    * custom_json signed by threespeak. They are expressions over the
+    * transaction's own operations array, so reading them costs no
+    * second scan, groupBy or join. A consumer that does not read them
+    * (follows, votes) has them pruned from its plan; the comment path
+    * evaluates them only on the comment ops it keeps. */
   def ops(blocks: DataFrame): DataFrame =
     blocks
       .withColumn("block_height",
@@ -30,34 +40,34 @@ object OpExtract {
         explode(col("transactions")).as("tx"))
       .select(col("block_height"), col("ts"),
         col("tx.transaction_id").as("trx_id"),
+        beneficiaries(col("tx.operations")).as("beneficiaries"),
+        authoritySigned(col("tx.operations")).as("authority_signed"),
         posexplode(col("tx.operations")).as(Seq("op_index", "op")))
       .select(col("block_height"), col("ts"), col("trx_id"),
         col("op_index"),
         col("op.name").as("op_name"),
-        col("op.payload").as("payload"))
+        col("op.payload").as("payload"),
+        col("beneficiaries"), col("authority_signed"))
 
-  /** Per-transaction sibling-op facts (J10, hive-stream.ts:589-620):
-    * beneficiaries from the comment_options op and authority_signed
-    * from a 3speak-publish custom_json — ONE groupBy per batch instead
-    * of the reference's positional per-row lookups.
-    */
-  def txSiblingFacts(ops: DataFrame): DataFrame = {
-    val benefSchema = "array<struct<account:string,weight:int>>"
-    ops.groupBy("block_height", "trx_id").agg(
-      // FIRST comment_options op's beneficiaries extension — by
-      // op_index, not max() over the JSON string (which would pick
-      // the lexicographically greatest payload when a tx carries
-      // several comment_options ops)
-      from_json(
-        min_by(when(col("op_name") === "comment_options",
-          get_json_object(col("payload"),
-            "$.extensions[0][1].beneficiaries")),
-          when(col("op_name") === "comment_options", col("op_index"))),
-        graft.ddl(benefSchema)).as("beneficiaries"),
-      max(when(col("op_name") === "custom_json" &&
-        get_json_object(col("payload"), "$.id") === "3speak-publish" &&
-        get_json_object(col("payload"),
+  /** The first comment_options op's beneficiaries extension: array
+    * order is op_index order, so the first one wins when a tx carries
+    * several. Null when there is none, or when its extension is
+    * missing or malformed. */
+  private def beneficiaries(txOps: Column): Column =
+    from_json(
+      get_json_object(
+        try_element_at(
+          filter(txOps, o => o.getField("name") === "comment_options"),
+          lit(1)).getField("payload"),
+        "$.extensions[0][1].beneficiaries"),
+      graft.ddl("array<struct<account:string,weight:int>>"))
+
+  private def authoritySigned(txOps: Column): Column =
+    exists(txOps, o => coalesce(
+      o.getField("name") === "custom_json" &&
+        get_json_object(o.getField("payload"), "$.id") ===
+          "3speak-publish" &&
+        get_json_object(o.getField("payload"),
           "$.required_posting_auths[0]") === "threespeak",
-        lit(true)).otherwise(false)).as("authority_signed"))
-  }
+      lit(false)))
 }

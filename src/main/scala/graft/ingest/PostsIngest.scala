@@ -4,7 +4,8 @@ import graft.functions.Dmp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One comment-op event after payload parsing + sibling-op join.
+/** One comment-op event after payload parsing, with its transaction's
+  * sibling-op facts ([[OpExtract.ops]]).
   * `allowed_by_type` is per-event (each op is gated on its OWN
   * metadata); `allowed_by_parent` is filled by [[PostsIngest.gateEvents]].
   */
@@ -69,16 +70,14 @@ object PostsIngest {
     coalesce(appName === "3speak" || appName === "dBuzz", lit(false))
   }
 
-  /** comment ops → parsed events incl. sibling-op facts (J10, joined
-    * per transaction). */
+  /** comment ops → parsed events incl. the sibling-op facts (J10) the
+    * ops carry from their transaction. */
   def commentEvents(ops: DataFrame): DataFrame = {
-    val facts = OpExtract.txSiblingFacts(ops)
     val meta = from_json(col("json_metadata_raw"),
       graft.domain.Schemas.commentMeta)
     ops.filter(col("op_name") === "comment")
       .withColumn("p", from_json(col("payload"), graft.ddl(payloadSchema)))
       .filter(col("p.author").isNotNull && col("p.permlink").isNotNull)
-      .join(facts, Seq("block_height", "trx_id"), "left")
       .select(
         col("p.author").as("author"),
         col("p.permlink").as("permlink"),

@@ -91,10 +91,23 @@ object StreamIngest {
     val aqeBefore = sessions.map(s =>
       s -> s.conf.get("spark.sql.adaptive.enabled", "true"))
     sessions.foreach(_.conf.set("spark.sql.adaptive.enabled", "false"))
+    // each phase below describes its Spark jobs; the caller's
+    // description comes back after, and the job group is left alone
+    // (callers attribute the batch's jobs by it)
+    val sc = spark.sparkContext
+    val description = sc.getLocalProperty("spark.job.description")
     try mergeBlocksBatchImpl(spark, blocks, postsDir, keyBuckets,
       replyIndexDir)
-    finally aqeBefore.foreach { case (s, v) =>
-      s.conf.set("spark.sql.adaptive.enabled", v) }
+    finally {
+      // the batch's caches and checkpoints (parsed events, gate
+      // fixpoint sets, stored view, ingested rows) — release them
+      // HERE or a long-running stream pins one set per micro-batch
+      // forever
+      graft.CacheTracker.releaseAll()
+      sc.setLocalProperty("spark.job.description", description)
+      aqeBefore.foreach { case (s, v) =>
+        s.conf.set("spark.sql.adaptive.enabled", v) }
+    }
   }
 
   private def mergeBlocksBatchImpl(spark: SparkSession,
@@ -105,6 +118,9 @@ object StreamIngest {
     implicit val s: SparkSession = spark
     val monthCol = graft.state.Layout.monthBucket(col("created_at"))
     val ops = OpExtract.ops(blocks)
+    def phase(name: String): Unit =
+      spark.sparkContext.setJobDescription(s"mergeBlocksBatch: $name")
+    phase("bucket discovery") // the layout probe, then the batch's buckets
     // explicit FS existence check — Spark 4 resolves reads lazily, so
     // a try/catch around read.parquet may not fire until deep inside
     // the ingest plan (entry-point-dependent); the FS probe is
@@ -157,12 +173,18 @@ object StreamIngest {
         case None => keyBuckets
       }
     // parse once: bucket discovery, the gate fixpoint and the fold
-    // all read the same events (released via CacheTracker below)
+    // all read the same events (released at batch end)
     val evs = graft.CacheTracker.persistTracked(
       PostsIngest.commentEvents(ops))
     // the bucket-pruned stored view is read FOUR times per batch
-    // (gate seeds, fold seeds, restore joins, merge union) — cache it
-    // so the listing + scan happen once. The read is LEAF-ENUMERATED
+    // (gate seeds, fold seeds, restore joins, merge union), and the
+    // posts write below overwrites the partitions it came from — so
+    // it is read ONCE into a CHECKPOINT, which has no lineage. A
+    // persisted read would keep it: the write's `recacheByPath` would
+    // clear and re-list it and every cache derived from it, and the
+    // reply-index step would re-run the gate and fold over the rows
+    // just written. With no cached plan reading `postsDir`, the write
+    // invalidates nothing. The read is LEAF-ENUMERATED
     // (Layout.readBucketLeaves): the batch's own key buckets name the
     // exact leaf dirs, so Spark's file index is built over ≤|batch
     // keys| leaves instead of a full n×months listing — the same
@@ -171,34 +193,34 @@ object StreamIngest {
     // full read; no bucket column to enumerate by). None of the
     // batch's buckets on disk ⇒ no stored row can match any batch
     // key: an empty stored view with the leaf probe's schema.
-    val pruned = leafView.map(lv => graft.CacheTracker.persistTracked(
+    val pruned = leafView.map(lv => graft.CacheTracker.checkpointTracked(
       if (legacyLayout) spark.read.parquet(postsDir)
       else graft.state.Layout.postsStoreTable(postsDir)
         .readBuckets(spark, batchKeyBuckets(evs, n))
         .getOrElse(lv.filter(lit(false)))))
-    // persisted: the pair-discovery collect and the merge union both
-    // read it — without the cache the whole ingest (gate fixpoint +
-    // fold) would run twice
     val partCols =
       if (legacyLayout) Seq("created_month")
       else Seq("created_month", "key_bucket")
+    phase("gate") // the fixpoint's jobs; the fold is lazy
     val fresh0 = PostsIngest
       .ingestEvents(evs, pruned.map(
         _.drop("created_month", "key_bucket")))
       .withColumn("created_month", monthCol)
-    val fresh =
-      (if (legacyLayout) fresh0
-       else fresh0.withColumn("key_bucket",
-         graft.state.Layout.keyBucket(col("author"), col("permlink"),
-           n)))
-        .persist()
+    // checkpointed: the pair discovery, the merge union and the
+    // reply-index delta all read the batch's ingested rows
+    phase("fold")
+    val fresh = graft.CacheTracker.checkpointTracked(
+      if (legacyLayout) fresh0
+      else fresh0.withColumn("key_bucket",
+        graft.state.Layout.keyBucket(col("author"), col("permlink"), n)))
+    phase("posts write")
     val merged = pruned match {
       // Tie-break prefers the EXISTING row: the reference's monotonic
       // guard is strict (`stored.block_height < edit.block_height`,
       // hive-stream.ts:538), so a replayed batch that adds nothing new
       // must leave the stored row (incl. metadata_status) untouched.
       // (fresh's keys ⊆ batch keys, so its partition pairs are all
-      // inside the cached pruned view.)
+      // inside the pruned view.)
       case Some(ex) =>
         // exact partitions touched — bounded by the batch's keys
         val pairPred =
@@ -232,46 +254,39 @@ object StreamIngest {
           ties = Seq(col("__src"))).drop("__src")
       case None => fresh
     }
-    try {
-      // marker BEFORE data, but only on table CREATE: for an
-      // existing table the modulus was just READ from this marker —
-      // re-writing it every batch (a truncating create) opens a
-      // recurring crash window that leaves a zero-byte marker and
-      // wedges every subsequent batch on "corrupt layout marker"
-      if (!legacyLayout && pruned.isEmpty)
-        writeLayoutMarker(fs, tablePath, n)
-      merged
-        .repartition(partCols.map(col): _*)
-        .sortWithinPartitions("author", "permlink")
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCols: _*)
-        .parquet(postsDir)
-      // maintained alongside, AFTER the store write (a crash between
-      // the two leaves the index one batch stale; the replayed batch
-      // repairs both idempotently). `fresh` is still persisted here —
-      // the index delta is exactly the batch's ingested rows. A store
-      // that PRE-DATES the index triggers a one-time full bootstrap
-      // from the merged table instead (the delta is not the history).
-      // thunked, not eager: DataFrameReader.parquet triggers a full
-      // file listing + schema inference of the whole bucketed store,
-      // and the bootstrap branch consumes it at most ONCE per index
-      // lifetime — paying that per 2s trigger would double the
-      // merge's fixed overhead (ADVICE r8)
-      replyIndexDir.foreach(d =>
-        refreshReplyIndex(spark, fresh, d, keyBuckets,
-          bootstrapFrom =
-            if (leafView.isDefined)
-              Some(() => spark.read.parquet(postsDir))
-            else None))
-    } finally {
-      fresh.unpersist(blocking = false)
-      // the ingest pipeline registers per-batch caches (gate fixpoint
-      // sets, parsed events) — release them HERE or a long-running
-      // stream pins one cached table per micro-batch forever
-      graft.CacheTracker.releaseAll()
-    }
+    // marker BEFORE data, but only on table CREATE: for an
+    // existing table the modulus was just READ from this marker —
+    // re-writing it every batch (a truncating create) opens a
+    // recurring crash window that leaves a zero-byte marker and
+    // wedges every subsequent batch on "corrupt layout marker"
+    if (!legacyLayout && pruned.isEmpty)
+      writeLayoutMarker(fs, tablePath, n)
+    merged
+      .repartition(partCols.map(col): _*)
+      .sortWithinPartitions("author", "permlink")
+      .write
+      .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCols: _*)
+      .parquet(postsDir)
+    // maintained alongside, AFTER the store write (a crash between
+    // the two leaves the index one batch stale; the replayed batch
+    // repairs both idempotently). The index delta is exactly the
+    // batch's ingested rows, read from `fresh`'s checkpoint. A store
+    // that PRE-DATES the index triggers a one-time full bootstrap
+    // from the merged table instead (the delta is not the history).
+    // thunked, not eager: DataFrameReader.parquet triggers a full
+    // file listing + schema inference of the whole bucketed store,
+    // and the bootstrap branch consumes it at most ONCE per index
+    // lifetime — paying that per 2s trigger would double the
+    // merge's fixed overhead (ADVICE r8)
+    phase("reply index")
+    replyIndexDir.foreach(d =>
+      refreshReplyIndex(spark, fresh, d, keyBuckets,
+        bootstrapFrom =
+          if (leafView.isDefined)
+            Some(() => spark.read.parquet(postsDir))
+          else None))
   }
 
   /** Incrementally maintain a reply index

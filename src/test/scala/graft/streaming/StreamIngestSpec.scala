@@ -122,6 +122,96 @@ class StreamIngestSpec extends SparkSpec {
         Seq("alice", "p1", "erin", "r3"))
   }
 
+  test("a merge into an existing table reads its blocks once, and the " +
+    "touched posts and reply-index buckets once each") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-readonce").toString
+    val postsDir = s"$dir/posts"
+    val idxDir = s"$dir/reply_index"
+    val n = 8
+    val roots = (1 to 12).map(i =>
+      (s"t$i", Seq(("comment", comment(s"author$i", s"p$i", s"root $i")))))
+    val replies = (1 to 4).map(i =>
+      (s"r$i", Seq(("comment", comment(s"replier$i", s"re$i", s"re $i",
+        parentAuthor = s"author$i", parentPermlink = s"p$i")))))
+    StreamIngest.mergeBlocksBatch(spark,
+      spark.read.schema(graft.domain.Schemas.block).json(
+        Seq(block(100, "2024-05-01T12:00:00", roots ++ replies: _*)).toDS()),
+      postsDir, keyBuckets = n, replyIndexDir = Some(idxDir))
+
+    // the next batch arrives as three block files: edits of a root and
+    // a reply, new replies to stored posts, and a new root post
+    val inDir = new java.io.File(s"$dir/blocks")
+    inDir.mkdirs()
+    val batch = Seq(
+      block(101, "2024-05-01T12:00:03",
+        ("e1", Seq(("comment", comment("author2", "p2", "root 2 v2")))),
+        ("e2", Seq(("comment", comment("replier1", "re1", "re 1 v2",
+          parentAuthor = "author1", parentPermlink = "p1"))))),
+      block(102, "2024-05-01T12:00:06",
+        ("n1", Seq(("comment", comment("replier5", "re5", "re 5",
+          parentAuthor = "author5", parentPermlink = "p5"))))),
+      block(103, "2024-05-01T12:00:09",
+        ("n2", Seq(("comment", comment("newbie", "q1", "new root")))),
+        ("n3", Seq(("comment", comment("replier6", "re6", "re 6",
+          parentAuthor = "author1", parentPermlink = "p1"))))))
+    batch.zipWithIndex.foreach { case (b, i) =>
+      Files.writeString(java.nio.file.Paths.get(s"$inDir/b$i.json"), b) }
+    val keys = Seq(("author2", "p2"), ("replier1", "re1"),
+      ("replier5", "re5"), ("newbie", "q1"), ("replier6", "re6"))
+    val parents = Seq(("author1", "p1"), ("author5", "p5"))
+    def bucketsOf(ks: Seq[(String, String)]) = ks.toDF("a", "p")
+      .select(graft.state.Layout.keyBucket(col("a"), col("p"), n))
+      .distinct().as[Int].collect().toSeq
+    val postBuckets = bucketsOf(keys ++ parents)
+    val replyBuckets = bucketsOf(parents)
+    val touchedPosts = spark.read.parquet(postsDir)
+      .filter(col("key_bucket").isin(postBuckets: _*)).count()
+    val touchedIndex = spark.read.parquet(idxDir)
+      .filter(col("reply_bucket").isin(replyBuckets: _*)).count()
+    assert(touchedPosts > keys.size && touchedIndex > 0)
+
+    val scans = new ScanRows(Map("blocks" -> inDir.toString,
+      "posts" -> postsDir, "index" -> idxDir))
+    val descriptions =
+      new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(String.valueOf(
+          e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(scans)
+    sc.addSparkListener(jobs)
+    sc.setJobDescription("caller")
+    try {
+      StreamIngest.mergeBlocksBatch(spark,
+        spark.read.schema(graft.domain.Schemas.block).json(inDir.toString),
+        postsDir, keyBuckets = n, replyIndexDir = Some(idxDir))
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      scans.drain(spark)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(scans)
+      sc.removeSparkListener(jobs)
+    }
+    assert(scans("blocks") == batch.size, scans.toString)
+    assert(scans("posts") == touchedPosts, scans.toString)
+    assert(scans("index") == touchedIndex, scans.toString)
+    // every merge job names its phase (the last job is the fence)
+    import scala.jdk.CollectionConverters._
+    assert(descriptions.asScala.toSeq.dropRight(1).distinct ==
+      Seq("bucket discovery", "gate", "fold", "posts write",
+        "reply index").map(p => s"mergeBlocksBatch: $p"))
+
+    val after = spark.read.parquet(postsDir)
+    assert(after.count() == roots.size + replies.size + 3)
+    assert(after.filter(col("permlink") === "p2").head()
+      .getAs[String]("body") == "root 2 v2")
+    assert(spark.read.parquet(idxDir).count() == replies.size + 2)
+  }
+
   test("reply-less bootstrap records the empty generation: later " +
     "batches take the incremental path and never force the " +
     "bootstrap thunk") {
