@@ -272,14 +272,14 @@ object PostQueries {
 
   /** Partition-prune a graft-layout posts source to the key buckets
     * the page's parent refs can hash into — the hydration-side twin
-    * of `StreamIngest.prunedExisting` (same keyBucket contract). The
+    * of the stream merge's key-bucket prune (same keyBucket contract). The
     * bucket list comes from the page's rows: no job for a [[local]]
     * page. The win scales with n / |page keys| — a point page touches
     * 1 bucket of n, a 100-row page on a 4096-bucket production store
     * ~2.5%. `children` CANNOT prune on this layout (rows bucket by
     * their OWN key, not their parent's) — that probe goes through the
     * reply index ([[childrenForIndexed]]). Top-level rows' empty ("","")
-    * parent ref is excluded like prunedExisting. Sources without the
+    * parent ref is excluded as in the merge's prune. Sources without the
     * layout pass through. */
   def parentPruned(page: DataFrame, source: DataFrame,
                    keyBuckets: Int): DataFrame =

@@ -750,7 +750,10 @@ object Layout {
     descend(root)
   }
 
-  /** Write an entity table with the feed-serving layout. */
+  /** Write an entity table with the feed-serving layout
+    * (month-partitioned, no key buckets, no layout marker). The
+    * stream merge does not accept such a table: build a mergeable
+    * posts table with `StreamIngest.mergeBlocksBatch` instead. */
   def writePosts(posts: DataFrame, dir: String): Unit =
     posts
       .withColumn("created_month", monthBucket(col("created_at")))

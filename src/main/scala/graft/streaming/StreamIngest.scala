@@ -3,6 +3,7 @@ package graft.streaming
 import graft.ingest.{GraphIngest, OpExtract, PostsIngest}
 import graft.state.Merge
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -67,37 +68,35 @@ object StreamIngest {
     * table's recorded modulus (the `_graft_layout.json` marker) wins,
     * because pruning or writing with a different n than the stored
     * rows were hashed with would silently split keys across buckets.
-    * Tables written before the bucketed layout (no `key_bucket`
-    * column) merge month-scoped in their own layout. */
+    * The merge accepts only tables it created itself (bucketed, with
+    * the marker): a table with data but no marker is refused before
+    * anything is written, and so is data outside the bucket tree.
+    *
+    * The merge runs on its own clone of `spark` (same context, cache
+    * manager and registered functions) with AQE off: AQE materializes
+    * every shuffle stage as its own job to re-plan — the right trade
+    * for big queries, pure fixed overhead for a micro-batch whose
+    * shuffles are a few thousand rows (profiled: ~50 of the merge's
+    * ~75 driver jobs were AQE stage jobs). The caller's session conf
+    * is never written, so a server thread sharing it plans as before
+    * while a merge runs. */
   def mergeBlocksBatch(spark: SparkSession, blocks: DataFrame,
                        postsDir: String,
                        keyBuckets: Int = 64,
                        replyIndexDir: Option[String] = None): Unit = {
-    implicit val s: SparkSession = spark
-    // AQE materializes every shuffle stage as its own job to re-plan —
-    // the right trade for big queries, pure fixed overhead for a
-    // micro-batch whose shuffles are a few thousand rows (profiled:
-    // ~50 of the merge's ~75 driver jobs were AQE stage jobs). Turn it
-    // off for the span of this batch; restore the caller's setting
-    // after (foreachBatch runs batches sequentially, so the toggle
-    // cannot race a concurrent query).
-    // toggle on BOTH sessions: under foreachBatch the micro-batch
-    // DataFrame is bound to the query's cloned session (conf copied
-    // at query start — the outer session's setting is invisible to
-    // plans rooted at the batch), while the stored-table reads are
-    // rooted at the outer session
-    val sessions =
-      Seq(blocks.sparkSession, spark).distinct
-    val aqeBefore = sessions.map(s =>
-      s -> s.conf.get("spark.sql.adaptive.enabled", "true"))
-    sessions.foreach(_.conf.set("spark.sql.adaptive.enabled", "false"))
+    val m = GraftBridge.cloneSession(spark)
+    m.conf.set("spark.sql.adaptive.enabled", "false")
     // each phase below describes its Spark jobs; the caller's
     // description comes back after, and the job group is left alone
     // (callers attribute the batch's jobs by it)
     val sc = spark.sparkContext
     val description = sc.getLocalProperty("spark.job.description")
-    try mergeBlocksBatchImpl(spark, blocks, postsDir, keyBuckets,
-      replyIndexDir)
+    // blocks re-rooted on the merge session: under foreachBatch the
+    // micro-batch is bound to the query's own session, whose conf
+    // would otherwise plan every read of it
+    try mergeBlocksBatchImpl(m,
+      GraftBridge.ofRows(m, GraftBridge.analyzed(blocks)), postsDir,
+      keyBuckets, replyIndexDir)
     finally {
       // the batch's caches and checkpoints (parsed events, gate
       // fixpoint sets, stored view, ingested rows) — release them
@@ -105,8 +104,6 @@ object StreamIngest {
       // forever
       graft.CacheTracker.releaseAll()
       sc.setLocalProperty("spark.job.description", description)
-      aqeBefore.foreach { case (s, v) =>
-        s.conf.set("spark.sql.adaptive.enabled", v) }
     }
   }
 
@@ -120,7 +117,7 @@ object StreamIngest {
     val ops = OpExtract.ops(blocks)
     def phase(name: String): Unit =
       spark.sparkContext.setJobDescription(s"mergeBlocksBatch: $name")
-    phase("bucket discovery") // the layout probe, then the batch's buckets
+    phase("bucket discovery")
     // explicit FS existence check — Spark 4 resolves reads lazily, so
     // a try/catch around read.parquet may not fire until deep inside
     // the ingest plan (entry-point-dependent); the FS probe is
@@ -133,45 +130,23 @@ object StreamIngest {
     // is written before the data (see below), so this is the
     // recovery path and the merge restarts as a fresh create
     val hasData = graft.state.Layout.hasDataFiles(fs, tablePath)
-    // schema/layout probe from ONE data leaf (basePath restores the
-    // partition columns), NOT a fresh full read: a fresh partitioned
-    // read lists EVERY leaf dir to build its file index — at a
-    // production modulus (n=4096 × months) that per-trigger driver
-    // listing dwarfs the merge's task time, the same wall
-    // Layout.readBucketLeaves closed for point probes (BENCH_NOTES
-    // r10). A root with entries but no parquet anywhere degrades to
-    // the full read (can only be a tiny/degenerate table).
-    val leafView =
-      if (!hasData) None
-      else Some(graft.state.Layout.firstDataLeaf(spark, postsDir)
-        .map(l => spark.read.option("basePath", postsDir).parquet(l))
-        .getOrElse(spark.read.parquet(postsDir)))
-    // A table written before the bucketed layout (month-only
-    // partitions, no key_bucket column) CANNOT be merged bucketed:
-    // the bucket predicate would not resolve, and a (month, bucket)
-    // dynamic overwrite would leave the old month-level files in
-    // place next to the new bucket dirs (duplicate keys). Merge such
-    // tables month-scoped in their own layout; migrating to buckets
-    // is an explicit offline rewrite.
-    val legacyLayout =
-      leafView.exists(v => !v.columns.contains("key_bucket"))
     // the modulus is a property of the TABLE, not the call: pruning
     // or writing with a different n than the stored rows were hashed
-    // with silently splits keys across buckets. The first bucketed
-    // create records n in the marker BEFORE writing data (so no
-    // crash window can leave bucketed data without its modulus); a
-    // bucketed table with data but NO marker is therefore foreign or
-    // corrupted — refuse rather than guess (guessing the caller's
-    // default was the silent key-splitting hazard).
-    val n = if (legacyLayout) 1
-      else leafView match {
-        case Some(_) => storedKeyBuckets(fs, tablePath).getOrElse(
-          throw new IllegalStateException(
-            s"bucketed table at $postsDir has no _graft_layout.json; " +
-              "cannot infer its bucket modulus — restore the marker " +
-              "or migrate the table"))
-        case None => keyBuckets
-      }
+    // with silently splits keys across buckets. The create records n
+    // in the marker BEFORE writing data (so no crash window can leave
+    // data without its modulus); a table with data but NO marker was
+    // therefore not written by this merge (e.g. Layout.writePosts'
+    // month-only layout) — refuse rather than guess (guessing the
+    // caller's default was the silent key-splitting hazard)
+    val n =
+      if (!hasData) keyBuckets
+      else storedKeyBuckets(fs, tablePath).getOrElse(
+        throw new IllegalStateException(
+          s"posts table at $postsDir has data but no " +
+            "_graft_layout.json; the stream merge accepts only the " +
+            "bucketed tables it creates itself — build the table " +
+            "with StreamIngest.mergeBlocksBatch into an empty dir " +
+            "(Layout.writePosts' month-only tables cannot be merged)"))
     // parse once: bucket discovery, the gate fixpoint and the fold
     // all read the same events (released at batch end)
     val evs = graft.CacheTracker.persistTracked(
@@ -187,20 +162,15 @@ object StreamIngest {
     // invalidates nothing. The read is LEAF-ENUMERATED
     // (Layout.readBucketLeaves): the batch's own key buckets name the
     // exact leaf dirs, so Spark's file index is built over ≤|batch
-    // keys| leaves instead of a full n×months listing — the same
-    // contract as prunedExisting's isin prune, moved from plan time
-    // to listing time (legacy month-only tables pass through as the
-    // full read; no bucket column to enumerate by). None of the
+    // keys| leaves instead of a full n×months listing. None of the
     // batch's buckets on disk ⇒ no stored row can match any batch
-    // key: an empty stored view with the leaf probe's schema.
-    val pruned = leafView.map(lv => graft.CacheTracker.checkpointTracked(
-      if (legacyLayout) spark.read.parquet(postsDir)
+    // key: no stored view, as for a create.
+    val pruned =
+      if (!hasData) None
       else graft.state.Layout.postsStoreTable(postsDir)
         .readBuckets(spark, batchKeyBuckets(evs, n))
-        .getOrElse(lv.filter(lit(false)))))
-    val partCols =
-      if (legacyLayout) Seq("created_month")
-      else Seq("created_month", "key_bucket")
+        .map(graft.CacheTracker.checkpointTracked)
+    val partCols = Seq("created_month", "key_bucket")
     phase("gate") // the fixpoint's jobs; the fold is lazy
     val fresh0 = PostsIngest
       .ingestEvents(evs, pruned.map(
@@ -210,8 +180,7 @@ object StreamIngest {
     // reply-index delta all read the batch's ingested rows
     phase("fold")
     val fresh = graft.CacheTracker.checkpointTracked(
-      if (legacyLayout) fresh0
-      else fresh0.withColumn("key_bucket",
+      fresh0.withColumn("key_bucket",
         graft.state.Layout.keyBucket(col("author"), col("permlink"), n)))
     phase("posts write")
     val merged = pruned match {
@@ -223,21 +192,13 @@ object StreamIngest {
       // inside the pruned view.)
       case Some(ex) =>
         // exact partitions touched — bounded by the batch's keys
-        val pairPred =
-          if (legacyLayout) {
-            val months = fresh.select("created_month").distinct()
-              .collect().map(_.getString(0)).toSeq
-            if (months.isEmpty) lit(false)
-            else col("created_month").isin(months: _*)
-          } else {
-            val pairs = fresh.select("created_month", "key_bucket")
-              .distinct().collect()
-              .map(r => (r.getString(0), r.getInt(1)))
-            pairs.groupBy(_._1).map { case (m, bs) =>
-              col("created_month") === m &&
-                col("key_bucket").isin(bs.map(_._2).toSeq: _*)
-            }.reduceOption(_ || _).getOrElse(lit(false))
-          }
+        val pairs = fresh.select("created_month", "key_bucket")
+          .distinct().collect()
+          .map(r => (r.getString(0), r.getInt(1)))
+        val pairPred = pairs.groupBy(_._1).map { case (m, bs) =>
+          col("created_month") === m &&
+            col("key_bucket").isin(bs.map(_._2).toSeq: _*)
+        }.reduceOption(_ || _).getOrElse(lit(false))
         Merge.latestWins(
           ex.filter(pairPred)
             .withColumn("__src", lit(1))
@@ -259,8 +220,7 @@ object StreamIngest {
     // re-writing it every batch (a truncating create) opens a
     // recurring crash window that leaves a zero-byte marker and
     // wedges every subsequent batch on "corrupt layout marker"
-    if (!legacyLayout && pruned.isEmpty)
-      writeLayoutMarker(fs, tablePath, n)
+    if (!hasData) writeLayoutMarker(fs, tablePath, n)
     merged
       .repartition(partCols.map(col): _*)
       .sortWithinPartitions("author", "permlink")
@@ -284,8 +244,7 @@ object StreamIngest {
     replyIndexDir.foreach(d =>
       refreshReplyIndex(spark, fresh, d, keyBuckets,
         bootstrapFrom =
-          if (leafView.isDefined)
-            Some(() => spark.read.parquet(postsDir))
+          if (hasData) Some(() => spark.read.parquet(postsDir))
           else None))
   }
 
@@ -394,28 +353,13 @@ object StreamIngest {
       table: org.apache.hadoop.fs.Path, n: Int): Unit =
     graft.state.Layout.writeLayoutMarker(fs, table, "key_buckets", n)
 
-  /** The existing-table view the seed lookups read: partition-pruned
-    * to the key buckets this batch can possibly match — the batch's
-    * own (author, permlink) keys (fold seeds / restore joins) plus
-    * its referenced parents (gate seeds). The bucket list is ≤
-    * min(keys, n) ints, so the discovery collect is driver-trivial;
-    * tables written before the bucketed layout pass through unpruned
-    * (month-only fallback). */
-  def prunedExisting(existing: DataFrame, evs: DataFrame,
-                     keyBuckets: Int): DataFrame =
-    if (!existing.columns.contains("key_bucket")) existing
-    else existing.filter(col("key_bucket")
-      .isin(batchKeyBuckets(evs, keyBuckets): _*))
-
   /** The key buckets a batch's events can possibly touch: the batch's
     * own (author, permlink) keys (fold seeds / restore joins) plus
-    * its referenced parents (gate seeds) — ONE bucket-discovery
-    * collect shared by the isin-prune form ([[prunedExisting]]) and
-    * the merge's leaf-enumerated read, so the two prunes can never
-    * cover different key sets. ≤ min(batch keys, n) ints —
+    * its referenced parents (gate seeds): the leaves the merge's
+    * stored view enumerates. ≤ min(batch keys, n) ints —
     * driver-trivial. */
-  private[graft] def batchKeyBuckets(evs: DataFrame,
-                                     keyBuckets: Int): Seq[Int] = {
+  private def batchKeyBuckets(evs: DataFrame,
+                              keyBuckets: Int): Seq[Int] = {
     val bucketOf = graft.state.Layout.keyBucket(
       col("author"), col("permlink"), keyBuckets)
     // top-level posts carry the empty ("","") parent ref — its hash

@@ -456,32 +456,8 @@ object ScaleEvidence {
       spark.read.parquet(postsDir)
         .filter(col("body") === "edited body text").count()
     }
-    // seed-lookup pruning proof at scale: partitions read vs total
-    if (stageSelected(s"micro-batch merge: 20 edits vs $nPosts stored")) {
-      val existing = spark.read.parquet(postsDir)
-      val evs = graft.ingest.PostsIngest.commentEvents(
-        graft.ingest.OpExtract.ops(
-          blocksFor(600, 20, nPosts * 2, lit("x"), stride = 6)))
-      val prunedDf = graft.streaming.StreamIngest.prunedExisting(
-        existing, evs, 64)
-      prunedDf.collect()
-      val finalPlan = prunedDf.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive
-          .AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val scan = finalPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.head
-      val total = existing.select("created_month", "key_bucket")
-        .distinct().count()
-      println(s"seed-lookup scan: " +
-        s"${scan.metrics("numPartitions").value} of $total " +
-        s"(month, bucket) partitions read")
-    }
-    // safety-net release OUTSIDE the gate: the merge stages persist
-    // internally, and on a filtered run that skips the seed-lookup
-    // block those caches must not leak into later measured stages
+    // safety-net release: the merge stages persist internally, and
+    // those caches must not leak into later measured stages
     graft.CacheTracker.releaseAll()
 
     // ── round-3 operators at the same scale ─────────────────────────

@@ -73,12 +73,12 @@ object Serve {
     * `_graft_layout.json` marker (the file `StreamIngest` maintains) —
     * when present, the API's point lookups and parent_post hydration
     * partition-prune their store probes to the relevant key buckets.
-    */
+    * An absent marker serves unpruned; a present but unreadable one
+    * throws with its path. */
   private def storedKeyBuckets(spark: SparkSession,
-                               postsDir: String): Option[Int] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(postsDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.streaming.StreamIngest.storedKeyBuckets(fs, p)
-    } catch { case _: Exception => None }
+                               postsDir: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(postsDir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.streaming.StreamIngest.storedKeyBuckets(fs, p)
+  }
 }

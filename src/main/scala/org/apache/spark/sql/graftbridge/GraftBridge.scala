@@ -29,6 +29,14 @@ object GraftBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A session with its own copy of `spark`'s conf (cloneSession is
+    * private[sql]); it shares the context, the cache manager and the
+    * registered functions. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .cloneSession()
+
   /** A DataFrame's analyzed logical plan + its session's experimental
     * methods — both private[sql]/classic-typed. */
   def analyzed(df: org.apache.spark.sql.DataFrame)

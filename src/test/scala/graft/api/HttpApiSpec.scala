@@ -485,6 +485,23 @@ class HttpApiSpec extends SparkSpec {
       .contains("not configured"))
   }
 
+  test("Serve.tables: an absent posts layout marker serves unpruned; " +
+    "a corrupt one fails with its path") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-store-marker").toString
+    tables.posts.write.parquet(s"$dir/posts")
+    tables.follows.write.parquet(s"$dir/follows")
+    tables.profiles.write.parquet(s"$dir/profiles")
+    assert(graft.tools.Serve.tables(spark, dir).keyBuckets.isEmpty)
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/posts/_graft_layout.json"),
+      "not json")
+    val e = intercept[IllegalStateException] {
+      graft.tools.Serve.tables(spark, dir)
+    }
+    assert(e.getMessage.contains(s"$dir/posts"), e.getMessage)
+  }
+
   test("multi-level hydration: children { author { profile } }, " +
     "children { parent_post }, children { children } recurse like " +
     "the reference's field thunks (posts.ts:140-258)") {

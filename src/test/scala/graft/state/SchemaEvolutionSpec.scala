@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** Schema evolution on a long-lived parquet table — the operations
   * story a 100 TB table needs when a column is added years in:
   * mixed-schema reads (mergeSchema), the ingest union contract
-  * (unionByName allowMissingColumns — what StreamIngest relies on for
-  * legacy-layout tables), and partition-scoped backfill via dynamic
+  * (unionByName allowMissingColumns — how StreamIngest unions stored
+  * rows with a batch's rows), and partition-scoped backfill via dynamic
   * overwrite (only the partitions being backfilled are rewritten;
   * history stays byte-identical on disk). */
 class SchemaEvolutionSpec extends SparkSpec {

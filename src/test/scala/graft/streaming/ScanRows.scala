@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListenerEvent,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{
   SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
@@ -15,12 +14,10 @@ import java.util.concurrent.ConcurrentHashMap
   * metric; the metric's accumulator id comes with the plan of every
   * SQL execution (cached plans included), so reading a cache or a
   * checkpoint counts nothing and re-reading a file counts again. */
-final class ScanRows(locations: Map[String, String]) extends SparkListener {
+final class ScanRows(locations: Map[String, String])
+    extends FencedListener {
   private val labelOf = new ConcurrentHashMap[Long, String]
   private val rows = new ConcurrentHashMap[String, java.lang.Long]
-  private val fenceGroup = s"scan-rows-fence-${System.identityHashCode(this)}"
-  @volatile private var fenceJob = -1
-  @volatile private var fenced = false
 
   private def register(p: SparkPlanInfo): Unit = {
     if (p.nodeName.startsWith("Scan "))
@@ -45,26 +42,6 @@ final class ScanRows(locations: Map[String, String]) extends SparkListener {
         rows.merge(label, a.update.get.asInstanceOf[Long],
           (x: java.lang.Long, y: java.lang.Long) => x + y))
     }
-
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    if (Option(e.properties).exists(p =>
-        p.getProperty("spark.jobGroup.id") == fenceGroup))
-      fenceJob = e.jobId
-
-  override def onJobEnd(e: SparkListenerJobEnd): Unit =
-    if (e.jobId == fenceJob) fenced = true
-
-  /** Wait until every event posted before this call has been counted:
-    * the bus delivers in order, so a fence job's end comes last. */
-  def drain(spark: SparkSession): Unit = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(fenceGroup, fenceGroup)
-    try sc.parallelize(Seq(1), 1).count()
-    finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (!fenced && System.nanoTime() < deadline) Thread.sleep(5)
-    assert(fenced, "the fence job's end never arrived")
-  }
 
   def apply(label: String): Long = rows.getOrDefault(label, 0L)
 

@@ -175,11 +175,20 @@ class StreamIngestSpec extends SparkSpec {
       "posts" -> postsDir, "index" -> idxDir))
     val descriptions =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // a parquet schema-inference job: a parquet read's own job, run
+    // outside any SQL execution; recorded by its phase
+    val inference =
+      new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val jobs = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        descriptions.add(String.valueOf(
-          e.properties.getProperty("spark.job.description")))
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = String.valueOf(
+          e.properties.getProperty("spark.job.description"))
+        descriptions.add(d)
+        if (e.properties.getProperty("spark.sql.execution.id") == null &&
+            e.stageInfos.exists(_.name.startsWith("parquet at")))
+          inference.add(d)
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(scans)
@@ -204,6 +213,11 @@ class StreamIngestSpec extends SparkSpec {
     assert(descriptions.asScala.toSeq.dropRight(1).distinct ==
       Seq("bucket discovery", "gate", "fold", "posts write",
         "reply index").map(p => s"mergeBlocksBatch: $p"))
+    // one schema inference per stored table read: the posts leaves in
+    // bucket discovery, the reply-index leaves in its own phase
+    assert(inference.asScala.toSeq == Seq("bucket discovery",
+      "reply index").map(p => s"mergeBlocksBatch: $p"),
+      inference.asScala.mkString("; "))
 
     val after = spark.read.parquet(postsDir)
     assert(after.count() == roots.size + replies.size + 3)
@@ -438,59 +452,6 @@ class StreamIngestSpec extends SparkSpec {
     assert(after.collect().map(_.getAs[String]("body")).toSeq == before)
   }
 
-  test("seed lookup partition-prunes to the batch's key buckets (metric-proven)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-bucketprune").toString
-    val postsDir = s"$dir/posts"
-    def mergeBlock(json: String): Unit =
-      StreamIngest.mergeBlocksBatch(spark,
-        spark.read.schema(graft.domain.Schemas.block)
-          .json(Seq(json).toDS()),
-        postsDir)
-
-    // seed the table with 20 authors spread across key buckets
-    val inserts = (1 to 20).map(i =>
-      (s"t$i", Seq(("comment", comment(s"author$i", s"p$i", s"body $i")))))
-    mergeBlock(block(100, "2024-05-01T12:00:00", inserts: _*))
-    val existing = spark.read.parquet(postsDir)
-    val totalParts = existing.select("created_month", "key_bucket")
-      .distinct().count()
-    assert(totalParts >= 8, s"want spread-out buckets, got $totalParts")
-
-    // a batch touching ONE key: the seed lookup's existing-table view
-    // must scan only that key's bucket, not the table
-    val editOps = graft.ingest.OpExtract.ops(
-      spark.read.schema(graft.domain.Schemas.block)
-        .json(Seq(block(101, "2024-05-01T12:00:05",
-          ("tx", Seq(("comment",
-            comment("author7", "p7", "edited body")))))).toDS()))
-    val evs = graft.ingest.PostsIngest.commentEvents(editOps)
-    val pruned = StreamIngest.prunedExisting(existing, evs, 64)
-    assert(pruned.collect().map(_.getAs[String]("author")).toSet
-      == Set("author7"))
-    val finalPlan = pruned.queryExecution.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive
-        .AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val scan = finalPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.head
-    val partsRead = scan.metrics("numPartitions").value
-    // author7 + its (empty-parent) bucket — far below the table's
-    // partition count, and independent of table size
-    assert(partsRead <= 2 && partsRead < totalParts,
-      s"seed scan read $partsRead of $totalParts partitions")
-
-    // end-to-end: the pruned merge still produces the right row
-    mergeBlock(block(101, "2024-05-01T12:00:05",
-      ("tx", Seq(("comment", comment("author7", "p7", "edited body"))))))
-    val after = spark.read.parquet(postsDir)
-    assert(after.count() == 20)
-    assert(after.filter(col("author") === "author7").head()
-      .getAs[String]("body") == "edited body")
-  }
-
   test("leaf-enumerated stored view: a batch editing an existing key " +
     "AND inserting a key whose bucket dir does not exist yet merges " +
     "both correctly") {
@@ -529,35 +490,96 @@ class StreamIngestSpec extends SparkSpec {
     assert(after.select("key_bucket").distinct().count() == 2)
   }
 
-  test("legacy month-only table: merge stays in-layout, no bucket refs") {
+  test("a month-only table written by Layout.writePosts is refused, " +
+    "and its files are left as they were") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-legacy").toString
+    val dir = Files.createTempDirectory("graft-monthonly").toString
     val postsDir = s"$dir/posts"
-    // a table written by the pre-bucket layout (month-only partitions,
-    // no key_bucket column)
     val ops = toOps(spark, block(100, "2024-05-01T12:00:00",
       ("t1", Seq(("comment", comment("alice", "p1", "v1 body")))),
       ("t2", Seq(("comment", comment("bob", "p2", "other"))))))
     graft.state.Layout.writePosts(
       graft.ingest.PostsIngest.ingest(ops)(spark), postsDir)
-    assert(!spark.read.parquet(postsDir).columns.contains("key_bucket"))
-    // merging into it must not reference the missing bucket column and
-    // must not write bucket sub-dirs next to the month-level files
-    // (mixed layouts = duplicate keys on read)
+    def files(): Seq[(String, Long, Long)] = {
+      val root = java.nio.file.Paths.get(postsDir)
+      val walk = Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+          (root.relativize(f).toString, Files.size(f),
+            Files.getLastModifiedTime(f).toMillis)
+        }.toSeq.sorted
+      } finally walk.close()
+    }
+    val before = files()
+    assert(before.exists(_._1.endsWith(".parquet")))
+    val e = intercept[IllegalStateException] {
+      StreamIngest.mergeBlocksBatch(spark,
+        spark.read.schema(graft.domain.Schemas.block)
+          .json(Seq(block(101, "2024-05-01T12:00:03",
+            ("t3", Seq(("comment",
+              comment("alice", "p1", "v2 body")))))).toDS()),
+        postsDir)
+    }
+    assert(e.getMessage.contains(postsDir), e.getMessage)
+    assert(e.getMessage.contains("StreamIngest.mergeBlocksBatch"),
+      e.getMessage)
+    assert(!e.getMessage.contains("migrate"), e.getMessage)
+    assert(files() == before)
+  }
+
+  test("a merge leaves the caller's session conf alone and plans its " +
+    "own executions without AQE") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-mergesession").toString
+    val postsDir = s"$dir/posts"
+    def blocksDf(s: String) = spark.read
+      .schema(graft.domain.Schemas.block).json(Seq(s).toDS())
+    val key = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(key) == "true")
+    val inserts = (1 to 10).map(i =>
+      (s"t$i", Seq(("comment", comment(s"a$i", s"p$i", s"b$i")))))
     StreamIngest.mergeBlocksBatch(spark,
-      spark.read.schema(graft.domain.Schemas.block)
-        .json(Seq(block(101, "2024-05-01T12:00:03",
-          ("t3", Seq(("comment",
-            comment("alice", "p1", "v2 body")))))).toDS()),
-      postsDir)
+      blocksDf(block(100, "2024-05-01T12:00:00", inserts: _*)), postsDir,
+      keyBuckets = 4)
+
+    val plans = new SqlPlans
+    val sc = spark.sparkContext
+    sc.addSparkListener(plans)
+    @volatile var done = false
+    val samples = new java.util.concurrent.atomic.AtomicLong
+    val off = new java.util.concurrent.atomic.AtomicLong
+    val sampler = new Thread(() =>
+      while (!done) {
+        if (spark.conf.get(key) != "true") off.incrementAndGet()
+        samples.incrementAndGet()
+        Thread.sleep(1)
+      })
+    sampler.start()
+    try {
+      StreamIngest.mergeBlocksBatch(spark,
+        blocksDf(block(101, "2024-05-01T12:00:05",
+          ("e1", Seq(("comment", comment("a3", "p3", "edited")))),
+          ("r1", Seq(("comment", comment("b1", "r1", "reply",
+            parentAuthor = "a1", parentPermlink = "p1")))))),
+        postsDir, keyBuckets = 4)
+      plans.drain(spark)
+    } finally {
+      done = true
+      sampler.join()
+      sc.removeSparkListener(plans)
+    }
+    assert(samples.get() > 10, s"${samples.get()} samples")
+    assert(off.get() == 0,
+      s"${off.get()} of ${samples.get()} samples read AQE off")
+    assert(spark.conf.get(key) == "true")
+    val execs = plans.nodeNames
+    assert(execs.nonEmpty)
+    assert(execs.forall(!_.contains("AdaptiveSparkPlan")), execs)
     val after = spark.read.parquet(postsDir)
-    assert(after.count() == 2)
-    assert(after.filter(col("permlink") === "p1").head()
-      .getAs[String]("body") == "v2 body")
-    assert(!after.columns.contains("key_bucket"))
-    val monthDir = new java.io.File(s"$postsDir/created_month=2024-05")
-    assert(monthDir.listFiles()
-      .forall(f => !f.getName.startsWith("key_bucket=")))
+    assert(after.count() == 11)
+    assert(after.filter(col("author") === "a3").head()
+      .getAs[String]("body") == "edited")
   }
 
   test("bucket modulus is pinned by the layout marker across merges") {
