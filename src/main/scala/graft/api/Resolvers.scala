@@ -24,10 +24,11 @@ final case class ApiTables(
       * (block_lag, sync_eta_seconds, block_lag_diff). */
     syncStats: Option[DataFrame] = None,
     /** The posts store's graft-layout bucket modulus
-      * (`_graft_layout.json`, `state.Layout.keyBucket`) when the
-      * table carries a `key_bucket` partition column — point lookups
-      * and parent_post hydration then PARTITION-PRUNE their store
-      * probes (Serve.tables reads the marker automatically). */
+      * (`_graft_layout.json`, `state.Layout.authorBucket`) when the
+      * table carries a `key_bucket` partition column — point lookups,
+      * byCreator feeds and parent_post hydration then PARTITION-PRUNE
+      * their store probes (Serve.tables reads the marker
+      * automatically). */
     keyBuckets: Option[Int] = None,
     /** A reply-index table ([[graft.state.Layout.writeReplyIndex]])
       * with its bucket modulus — `children` hydration then reads only
@@ -349,7 +350,8 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
       case "socialFeed" =>
         feedOutput(PostQueries.socialFeed(projectedPosts,
           tables.follows, feedArgs(args),
-          socialConnections = tables.socialConnections),
+          socialConnections = tables.socialConnections,
+          keyBuckets = tables.keyBuckets),
           f.selections, vars)
       case "trendingFeed" =>
         val by =
@@ -357,13 +359,15 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
           else PostQueries.ByComments
         feedOutput(PostQueries.trendingFeed(projectedPosts,
           tables.follows, feedArgs(args), by,
-          socialConnections = tables.socialConnections),
+          socialConnections = tables.socialConnections,
+          keyBuckets = tables.keyBuckets),
           f.selections, vars)
       case "searchFeed" =>
         feedOutput(PostQueries.searchFeed(projectedPosts,
           tables.follows, feedArgs(args),
           str("searchTerm").getOrElse(""),
-          socialConnections = tables.socialConnections),
+          socialConnections = tables.socialConnections,
+          keyBuckets = tables.keyBuckets),
           f.selections, vars)
       case "relatedFeed" =>
         feedOutput(PostQueries.relatedFeed(projectedPosts,
@@ -720,10 +724,12 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
           val df =
             if (sub.name == "latestFeed")
               PostQueries.socialFeed(projectedPosts, tables.follows,
-                fa, socialConnections = tables.socialConnections)
+                fa, socialConnections = tables.socialConnections,
+                keyBuckets = tables.keyBuckets)
             else PostQueries.trendingFeed(projectedPosts,
               tables.follows, fa,
-              socialConnections = tables.socialConnections)
+              socialConnections = tables.socialConnections,
+              keyBuckets = tables.keyBuckets)
           obj.set[ObjectNode](sub.alias,
             feedOutput(df, sub.selections, vars))
         case "roles" =>

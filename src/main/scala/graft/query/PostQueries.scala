@@ -111,21 +111,57 @@ object PostQueries {
 
   private def filtered(posts: DataFrame, follows: DataFrame,
                        a: FeedArgs,
-                       socialConnections: Option[DataFrame] = None)
-      : DataFrame = {
-    val base = posts.filter(feedPredicate(a))
+                       socialConnections: Option[DataFrame],
+                       keyBuckets: Option[Int]): DataFrame = {
+    val base = creatorPruned(posts, a, keyBuckets)
+      .filter(feedPredicate(a))
     a.byFollower.fold(base)(f =>
       applyFollower(base, follows, f, socialConnections))
   }
 
+  /** The authors a feed's rows must come from, when its arguments
+    * name them: the string `_eq` of `byCreator`, else its `_in` list
+    * when every value is a string. None when `byFollower` is set (it
+    * overrides `byCreator`, see [[feedPredicate]]) or when no such
+    * value is given. An `_or` branch's `byCreator` is not counted: the
+    * branches are ORed. A non-string value is not counted either: its
+    * comparison casts, and its hash differs from the matching name's. */
+  def creatorAuthors(a: FeedArgs): Option[Seq[String]] =
+    if (a.byFollower.nonEmpty) None
+    else a.byCreator.flatMap { w =>
+      w.eq.collect { case s: String => Seq(s) }.orElse(
+        w.in.filter(vs => vs.nonEmpty && vs.forall(_.isInstanceOf[String]))
+          .map(_.map(_.asInstanceOf[String]).distinct))
+    }
+
+  /** Partition-prune a graft-layout posts source to the author buckets
+    * of [[creatorAuthors]] ([[graft.state.Layout.authorBucket]]): an
+    * author's feed page then reads one bucket file per month instead
+    * of all n. The added predicate follows from the feed's own
+    * `author` filter, so the answer does not change. The bucket
+    * expressions are over literals and fold to constants, so Catalyst
+    * plans them as a partition filter. Sources without the layout,
+    * and feeds that name no authors, pass through unchanged. */
+  def creatorPruned(posts: DataFrame, a: FeedArgs,
+                    keyBuckets: Option[Int]): DataFrame =
+    (for {
+      n <- keyBuckets if posts.columns.contains("key_bucket")
+      authors <- creatorAuthors(a)
+    } yield posts.filter(col("key_bucket").isin(authors.map(x =>
+      graft.state.Layout.authorBucket(lit(x), n)): _*)))
+      .getOrElse(posts)
+
   /** Q8 socialFeed: newest-first page. `socialConnections` routes a
     * `did:` byFollower to the Ceramic social graph instead of the
-    * Hive follows table (resolvers/index.ts:126-146). */
+    * Hive follows table (resolvers/index.ts:126-146). `keyBuckets`
+    * prunes a byCreator page on a graft-layout store to its authors'
+    * buckets ([[creatorPruned]]), as it does for every feed here. */
   def socialFeed(posts: DataFrame, follows: DataFrame,
                  a: FeedArgs,
-                 socialConnections: Option[DataFrame] = None)
+                 socialConnections: Option[DataFrame] = None,
+                 keyBuckets: Option[Int] = None)
       : DataFrame =
-    Feeds.page(filtered(posts, follows, a, socialConnections),
+    Feeds.page(filtered(posts, follows, a, socialConnections, keyBuckets),
       lit(true),
       Seq(col("created_at").desc, col("author").asc,
         col("permlink").asc),
@@ -142,10 +178,12 @@ object PostQueries {
   def searchFeed(posts: DataFrame, follows: DataFrame, a: FeedArgs,
                  term: String,
                  socialConnections: Option[DataFrame] = None,
-                 stem: Boolean = false)
+                 stem: Boolean = false,
+                 keyBuckets: Option[Int] = None)
       : DataFrame = {
     val terms = term.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
-    Feeds.search(filtered(posts, follows, a, socialConnections),
+    Feeds.search(filtered(posts, follows, a, socialConnections,
+      keyBuckets),
       col("body"), terms,
         requireAll = false, stem = stem)
       .orderBy(col("created_at").desc, col("author").asc,
@@ -162,13 +200,15 @@ object PostQueries {
     */
   def trendingFeed(posts: DataFrame, follows: DataFrame, a: FeedArgs,
                    by: TrendingBy = ByComments,
-                   socialConnections: Option[DataFrame] = None)
+                   socialConnections: Option[DataFrame] = None,
+                   keyBuckets: Option[Int] = None)
       : DataFrame = {
     val metric = by match {
       case ByComments => col("stats.num_comments")
       case ByPayout   => col("stats.total_hive_reward")
     }
-    Feeds.trending(filtered(posts, follows, a, socialConnections),
+    Feeds.trending(filtered(posts, follows, a, socialConnections,
+      keyBuckets),
       lit(true),
       col("created_at"), expr("INTERVAL 3 DAYS"),
       Seq(metric.desc, col("author").asc, col("permlink").asc),
@@ -178,7 +218,8 @@ object PostQueries {
   /** Q11 relatedFeed: posts sharing tags with the anchor (or same
     * community for top-level anchors), uniform seeded sample of 25
     * (resolvers/index.ts:268-307). `keyBuckets` partition-prunes the
-    * anchor lookup on a graft-layout store, like [[socialPost]]. */
+    * anchor lookup on a graft-layout store, like [[socialPost]], and
+    * a byCreator sample like [[socialFeed]]. */
   def relatedFeed(posts: DataFrame, follows: DataFrame, a: FeedArgs,
                   author: String, permlink: String,
                   seed: Long = 42L,
@@ -209,7 +250,8 @@ object PostQueries {
     // NB: the reference does NOT exclude the anchor post itself —
     // it matches its own tags and can appear in the sample
     // (resolvers/index.ts:279-296)
-    val related = filtered(posts, follows, a, socialConnections)
+    val related = filtered(posts, follows, a, socialConnections,
+      keyBuckets)
       .filter(
         arrays_overlap(col("tags"), aTagsLit) ||
           (lit(r.getAs[String]("parent_author") == "") &&
@@ -236,18 +278,19 @@ object PostQueries {
       .filter(col("author") === author && col("permlink") === permlink)
 
   /** Point-lookup partition pruning for a graft-layout store
-    * (`created_month / key_bucket = H(author, permlink) mod n`,
-    * `state.Layout.keyBucket` — the layout StreamIngest merges
-    * into): the key's bucket is a CONSTANT-FOLDABLE expression over
-    * literals, so Catalyst turns it into a partition filter and the
-    * scan touches 1/n of the store instead of all of it. Sources
-    * without the layout pass through unchanged. */
+    * (`created_month / key_bucket = H(author) mod n`,
+    * `state.Layout.authorBucket` — the layout StreamIngest merges
+    * into): the key's bucket is its author's, a CONSTANT-FOLDABLE
+    * expression over a literal, so Catalyst turns it into a partition
+    * filter and the scan touches 1/n of the store instead of all of
+    * it. `permlink` does not enter the bucket. Sources without the
+    * layout pass through unchanged. */
   def bucketPointPruned(posts: DataFrame, author: String,
                         permlink: String,
                         keyBuckets: Option[Int]): DataFrame =
     keyBuckets.filter(_ => posts.columns.contains("key_bucket"))
       .map(n => posts.filter(col("key_bucket") ===
-        graft.state.Layout.keyBucket(lit(author), lit(permlink), n)))
+        graft.state.Layout.authorBucket(lit(author), n)))
       .getOrElse(posts)
 
   /** A page-bounded frame collected ONCE and re-entered as a local
@@ -263,30 +306,29 @@ object PostQueries {
         java.util.Arrays.asList(df.collect(): _*), df.schema)
     }
 
-  /** The distinct graft-layout buckets of the (author, permlink) keys in
+  /** The distinct values of the bucket expression `bucket` over
     * `rows` — no job when `rows` is [[local]]. */
-  private def bucketsOf(rows: DataFrame, author: Column, permlink: Column,
-                        n: Int): Seq[Int] =
-    rows.select(graft.state.Layout.keyBucket(author, permlink, n))
-      .collect().map(_.getInt(0)).distinct.toSeq
+  private def bucketsOf(rows: DataFrame, bucket: Column): Seq[Int] =
+    rows.select(bucket).collect().map(_.getInt(0)).distinct.toSeq
 
-  /** Partition-prune a graft-layout posts source to the key buckets
-    * the page's parent refs can hash into — the hydration-side twin
-    * of the stream merge's key-bucket prune (same keyBucket contract). The
+  /** Partition-prune a graft-layout posts source to the author buckets
+    * the page's parent refs hash into — the hydration-side twin of
+    * the stream merge's bucket prune (same authorBucket contract). The
     * bucket list comes from the page's rows: no job for a [[local]]
-    * page. The win scales with n / |page keys| — a point page touches
-    * 1 bucket of n, a 100-row page on a 4096-bucket production store
-    * ~2.5%. `children` CANNOT prune on this layout (rows bucket by
-    * their OWN key, not their parent's) — that probe goes through the
-    * reply index ([[childrenForIndexed]]). Top-level rows' empty ("","")
-    * parent ref is excluded as in the merge's prune. Sources without the
-    * layout pass through. */
+    * page. The win scales with n / |page parent authors| — a point
+    * page touches 1 bucket of n, a 100-row page on a 4096-bucket
+    * production store ~2.5%. `children` CANNOT prune on this layout
+    * (rows bucket by their OWN author, not their parent's) — that
+    * probe goes through the reply index ([[childrenForIndexed]]).
+    * Top-level rows' empty ("","") parent ref is excluded as in the
+    * merge's prune. Sources without the layout pass through. */
   def parentPruned(page: DataFrame, source: DataFrame,
                    keyBuckets: Int): DataFrame =
     if (!source.columns.contains("key_bucket")) source
     else source.filter(col("key_bucket").isin(bucketsOf(
-      page.filter(col("parent_author") =!= ""), col("parent_author"),
-      col("parent_permlink"), keyBuckets): _*))
+      page.filter(col("parent_author") =!= ""),
+      graft.state.Layout.authorBucket(col("parent_author"), keyBuckets))
+      : _*))
 
   /** Q3 children: one level of the reply tree with skip/limit
     * (posts.ts:161-231). */
@@ -383,7 +425,7 @@ object PostQueries {
   /** Q3 page form, served through a REPLY-INDEX layout
     * ([[graft.state.Layout.writeReplyIndex]]) — the scale path for
     * the one API probe the key-bucketed store cannot prune (rows
-    * bucket by their own key, children look up by their PARENT's).
+    * bucket by their own author, children look up by their PARENT's).
     * Same results as [[childrenFor]]; different plan:
     *   1. the page is collected once ([[local]]; a no-op for a page
     *      that already is one) and its rows give the ≤|page keys|
@@ -416,7 +458,8 @@ object PostQueries {
                          sourceKeyBuckets: Option[Int] = None)
       : DataFrame = {
     val p = local(page)
-    val pb = bucketsOf(p, col("author"), col("permlink"), indexBuckets)
+    val pb = bucketsOf(p, graft.state.Layout.keyBucket(col("author"),
+      col("permlink"), indexBuckets))
     childrenForIndexedCore(p,
       replyIndex.filter(col("reply_bucket").isin(pb: _*)),
       sourceKeyBuckets.filter(_ => source.columns.contains("key_bucket")),
@@ -487,12 +530,12 @@ object PostQueries {
           graft.state.Layout.emptyReplyIndexRows(spark)
             .drop("reply_bucket").schema)))
     val p = local(page)
-    val pb = bucketsOf(p, col("author"), col("permlink"), idxN)
+    val pb = bucketsOf(p, graft.state.Layout.keyBucket(col("author"),
+      col("permlink"), idxN))
     val idx = graft.state.Layout.replyIndexTable(indexDir)
       .readBuckets(spark, pb)
       .getOrElse(graft.state.Layout.emptyReplyIndexRows(spark))
-    val storeN = graft.state.Layout.markedBuckets(spark, sourceDir,
-      "key_buckets")
+    val storeN = graft.state.Layout.postsKeyBuckets(spark, sourceDir)
     // empty-result schema source: the ONE data leaf found above, not
     // a full listing (the data-less case already short-circuited)
     def emptyStore(): DataFrame = sourceView(spark.read
@@ -547,8 +590,8 @@ object PostQueries {
         col("_rk"))
       // one row per document key (see childrenForIndexed)
       .dropDuplicates("_pa", "_pp", "_ka", "_kp"))
-    val fetchBase = sourceFor(kbModulus.map(
-      bucketsOf(pagedKeys, col("_ka"), col("_kp"), _)))
+    val fetchBase = sourceFor(kbModulus.map(n => bucketsOf(pagedKeys,
+      graft.state.Layout.authorBucket(col("_ka"), n))))
     val ranked = fetchBase.join(broadcast(pagedKeys),
       fetchBase("parent_author") === pagedKeys("_pa") &&
         fetchBase("parent_permlink") === pagedKeys("_pp") &&

@@ -21,27 +21,46 @@ object Layout {
   def monthBucket(ts: Column): Column =
     date_format(ts, "yyyy-MM")
 
-  /** Key-hash sub-partition for the streaming-merge layout
-    * (`created_month=…/key_bucket=…`): a deterministic hash bucket of
-    * the post key, so a point/seed lookup with known keys prunes to
-    * the buckets those keys hash into — the (author, permlink)
-    * analogue of bucketBy, expressed as a partition column because
-    * (a) partition pruning works on ANY literal predicate over it
-    * (bucketBy pruning is single-column-only), (b) it composes with
-    * dynamic partition overwrite on a plain parquet path (no
-    * metastore), and (c) it ALSO scopes the write: a micro-batch
-    * rewrites only the (month, bucket) pairs it touches.
-    *
-    * Sizing at 100 TB: choose n so table_size/n ≈ a few GB (e.g.
-    * n=4096) — a micro-batch touching K keys then reads ≤ K buckets
-    * ≈ K·(table/n), independent of how the other buckets grow. */
+  /** Hash bucket of a composite key: `xxhash64(author, permlink) mod
+    * n`. The reply index buckets its rows by their PARENT key with it
+    * ([[replyIndexRows]]), so a `children(of: key)` probe prunes to
+    * the bucket of that one key. The posts store does not use it: its
+    * rows bucket by [[authorBucket]]. */
   def keyBucket(author: Column, permlink: Column, n: Int): Column =
     pmod(xxhash64(author, permlink), lit(n.toLong)).cast("int")
+
+  /** The posts store's bucket (`created_month=…/key_bucket=…`, the
+    * layout the streaming merge writes): `xxhash64(author) mod n`.
+    * All of one author's posts share one bucket per month, so both
+    * access paths with a known author prune to it:
+    *   - a point read or a merge seed with a known (author, permlink)
+    *     key reads 1 bucket of n;
+    *   - an author's feed page (`byCreator` `_eq`/`_in`) reads one
+    *     bucket per author instead of all n
+    *     ([[graft.query.PostQueries.creatorPruned]]).
+    * The bucket is a partition column, so partition pruning works on
+    * any literal predicate over it. It composes with dynamic partition
+    * overwrite on a plain parquet path (no metastore), and it scopes
+    * the write: a micro-batch rewrites only the (month, bucket) pairs
+    * it touches.
+    *
+    * The price is skew: a prolific author's bucket is larger than the
+    * mean (a generated 30,080-post store at n = 64: 3,694 rows in the
+    * largest bucket, against a mean of 470 and a largest of 509 under
+    * the old `(author, permlink)` hash).
+    * The marker records the hash key ([[PostsKeyHash]]); a table
+    * written under the old hash is refused ([[postsKeyBuckets]]).
+    *
+    * Sizing at 100 TB: choose n so table_size/n ≈ a few GB (e.g.
+    * n=4096) — a micro-batch touching K authors then reads ≤ K buckets
+    * ≈ K·(table/n), independent of how the other buckets grow. */
+  def authorBucket(author: Column, n: Int): Column =
+    pmod(xxhash64(author), lit(n.toLong)).cast("int")
 
   /** The reply-tree access path's OWN layout — the secondary-index
     * analogue of the reference's `{parent_permlink, parent_author}`
     * Mongo index (it declares one for exactly this query). The posts
-    * store buckets rows by their own key, so a `children(of: key)`
+    * store buckets rows by their own author, so a `children(of: key)`
     * probe cannot prune there; this slim projection (parent key,
     * child key, the child-page ordering column) is bucketed by the
     * PARENT key instead: a children page then reads ≤|page keys|
@@ -125,15 +144,16 @@ object Layout {
     write
   }
 
-  /** A bucketed table's modulus from its layout marker (None =
-    * unmarked/flat/unreadable → consumers must scan, not prune). */
+  /** A bucketed table's modulus from its layout marker. None = no
+    * marker (consumers scan, not prune); a present but corrupt marker
+    * throws with its path, because serving around it would silently
+    * drop the index it describes. */
   def markedBuckets(spark: SparkSession, dir: String,
-                    markerKey: String): Option[Int] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      layoutMarker(p.getFileSystem(
-        spark.sparkContext.hadoopConfiguration), p, markerKey)
-    } catch { case _: Exception => None }
+                    markerKey: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    layoutMarker(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p, markerKey, strict = true)
+  }
 
   /** Does the table dir hold DATA (any non-underscore/dot entry)? A
     * dir holding only a layout marker is a crashed create. */
@@ -145,7 +165,7 @@ object Layout {
     }
 
   /** The reply index's bucket modulus from its layout marker (None =
-    * no marker / unreadable → treat the table as un-indexed). */
+    * no marker → treat the table as un-indexed; corrupt → throws). */
   def replyIndexBuckets(spark: SparkSession, dir: String)
       : Option[Int] =
     markedBuckets(spark, dir, "reply_buckets")
@@ -528,12 +548,13 @@ object Layout {
   private val LayoutMarkerFile = "_graft_layout.json"
 
   /** Read `"<key>": n` from `<table>/_graft_layout.json` — the ONE
-    * marker reader every layout shares (posts stores carry
-    * `key_buckets`, reply indexes `reply_buckets`). None = no marker.
-    * `strict` = a PRESENT but unparseable marker throws instead of
-    * answering None: the merge path must refuse rather than prune
-    * with a guessed modulus (that silently splits keys); read-side
-    * consumers degrade to unpruned instead. */
+    * marker reader every layout shares (reply indexes carry
+    * `reply_buckets`, dedup side tables `band_buckets`/`sets_buckets`;
+    * the posts store's marker is read by [[postsKeyBuckets]]). None =
+    * no marker. `strict` = a PRESENT but unparseable marker throws
+    * instead of answering None: a write must refuse rather than prune
+    * with a guessed modulus (that silently splits keys), and a reader
+    * must not silently drop the index ([[markedBuckets]]). */
   def layoutMarker(fs: org.apache.hadoop.fs.FileSystem,
                    table: org.apache.hadoop.fs.Path, key: String,
                    strict: Boolean = false): Option[Int] = {
@@ -572,12 +593,58 @@ object Layout {
 
   def writeLayoutMarker(fs: org.apache.hadoop.fs.FileSystem,
                         table: org.apache.hadoop.fs.Path, key: String,
-                        n: Int): Unit = {
+                        n: Int): Unit =
+    writeMarker(fs, table, s"""{"$key": $n}""")
+
+  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
+                          table: org.apache.hadoop.fs.Path,
+                          body: String): Unit = {
     val out = fs.create(
       new org.apache.hadoop.fs.Path(table, LayoutMarkerFile), true)
-    try out.write(s"""{"$key": $n}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  /** The hash key the posts store's `key_bucket` is computed from
+    * ([[authorBucket]]), recorded in its marker as `"key_hash"`. */
+  val PostsKeyHash = "author"
+
+  /** The posts store's marker: `{"key_buckets": n, "key_hash":
+    * "author"}`. */
+  def writePostsMarker(fs: org.apache.hadoop.fs.FileSystem,
+                       table: org.apache.hadoop.fs.Path, n: Int): Unit =
+    writeMarker(fs, table,
+      s"""{"key_buckets": $n, "key_hash": "$PostsKeyHash"}""")
+
+  /** The posts store's bucket modulus from its marker. None = no
+    * marker. A corrupt marker throws, and so does a marker without
+    * `"key_hash": "author"`: that table was bucketed by
+    * `(author, permlink)` ([[keyBucket]]), and pruning it by
+    * [[authorBucket]] would silently drop rows. Both errors name the
+    * marker's path. */
+  def postsKeyBuckets(fs: org.apache.hadoop.fs.FileSystem,
+                      table: org.apache.hadoop.fs.Path): Option[Int] =
+    layoutMarkerRaw(fs, table).map { raw =>
+      val marker = new org.apache.hadoop.fs.Path(table, LayoutMarkerFile)
+      val n = """"key_buckets"\s*:\s*(\d+)""".r.findFirstMatchIn(raw)
+        .getOrElse(throw new IllegalStateException(
+          s"corrupt layout marker at $marker: $raw")).group(1).toInt
+      if ((""""key_hash"\s*:\s*"""" + PostsKeyHash + "\"").r
+          .findFirstIn(raw).isEmpty)
+        throw new IllegalStateException(
+          s"posts table at $table was bucketed by (author, permlink): " +
+            s"its marker $marker reads $raw, without " +
+            s""""key_hash": "$PostsKeyHash". The store now buckets """ +
+            "posts by author; rebuild the table with " +
+            "StreamIngest.mergeBlocksBatch into an empty dir")
+      n
+    }
+
+  /** [[postsKeyBuckets]] of the table at `dir`. */
+  def postsKeyBuckets(spark: SparkSession, dir: String): Option[Int] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    postsKeyBuckets(p.getFileSystem(spark.sparkContext.hadoopConfiguration),
+      p)
   }
 
   // ── Leaf-pruned reads: the layout IS the manifest ─────────────────

@@ -42,10 +42,10 @@ object StreamIngest {
     *
     * Scale design — BOTH sides of the merge are partition-scoped:
     *
-    *   - layout: `created_month=yyyy-MM / key_bucket=H(author,
-    *     permlink) mod n` (Layout.monthBucket / Layout.keyBucket).
-    *     Edits keep their stored created_at via the seeded fold, so a
-    *     post never migrates partitions.
+    *   - layout: `created_month=yyyy-MM / key_bucket=H(author) mod n`
+    *     (Layout.monthBucket / Layout.authorBucket). Edits keep their
+    *     stored created_at via the seeded fold, so a post never
+    *     migrates partitions.
     *   - read side: the gate-seed / fold-seed / restore lookups no
     *     longer scan the table — the hash buckets of the batch's keys
     *     (and referenced parents) are computed first
@@ -68,9 +68,11 @@ object StreamIngest {
     * table's recorded modulus (the `_graft_layout.json` marker) wins,
     * because pruning or writing with a different n than the stored
     * rows were hashed with would silently split keys across buckets.
-    * The merge accepts only tables it created itself (bucketed, with
-    * the marker): a table with data but no marker is refused before
-    * anything is written, and so is data outside the bucket tree.
+    * The merge accepts only tables it created itself (bucketed by
+    * author, with the marker): a table with data but no marker is
+    * refused before anything is written, and so are a marker written
+    * under the old `(author, permlink)` hash (no `"key_hash":
+    * "author"`) and data outside the bucket tree.
     *
     * The merge runs on its own clone of `spark` (same context, cache
     * manager and registered functions) with AQE off: AQE materializes
@@ -137,10 +139,11 @@ object StreamIngest {
     // data without its modulus); a table with data but NO marker was
     // therefore not written by this merge (e.g. Layout.writePosts'
     // month-only layout) — refuse rather than guess (guessing the
-    // caller's default was the silent key-splitting hazard)
+    // caller's default was the silent key-splitting hazard). A marker
+    // of the old (author, permlink) hash refuses inside the read.
     val n =
       if (!hasData) keyBuckets
-      else storedKeyBuckets(fs, tablePath).getOrElse(
+      else graft.state.Layout.postsKeyBuckets(fs, tablePath).getOrElse(
         throw new IllegalStateException(
           s"posts table at $postsDir has data but no " +
             "_graft_layout.json; the stream merge accepts only the " +
@@ -181,7 +184,7 @@ object StreamIngest {
     phase("fold")
     val fresh = graft.CacheTracker.checkpointTracked(
       fresh0.withColumn("key_bucket",
-        graft.state.Layout.keyBucket(col("author"), col("permlink"), n)))
+        graft.state.Layout.authorBucket(col("author"), n)))
     phase("posts write")
     val merged = pruned match {
       // Tie-break prefers the EXISTING row: the reference's monotonic
@@ -220,7 +223,7 @@ object StreamIngest {
     // re-writing it every batch (a truncating create) opens a
     // recurring crash window that leaves a zero-byte marker and
     // wedges every subsequent batch on "corrupt layout marker"
-    if (!hasData) writeLayoutMarker(fs, tablePath, n)
+    if (!hasData) graft.state.Layout.writePostsMarker(fs, tablePath, n)
     merged
       .repartition(partCols.map(col): _*)
       .sortWithinPartitions("author", "permlink")
@@ -336,40 +339,21 @@ object StreamIngest {
     graft.state.Layout.writeReplyIndexRows(merged, idxDir)
   }
 
-  /** Bucket modulus the table at `table` was written with, recorded
-    * by [[writeLayoutMarker]] (delegates to the shared
-    * [[graft.state.Layout.layoutMarker]]; strict — a present but
-    * unreadable marker must REFUSE the merge: falling back to the
-    * caller's modulus could prune the wrong buckets and silently
-    * split keys). */
-  private[graft] def storedKeyBuckets(
-      fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path): Option[Int] =
-    graft.state.Layout.layoutMarker(fs, table, "key_buckets",
-      strict = true)
-
-  private[streaming] def writeLayoutMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      table: org.apache.hadoop.fs.Path, n: Int): Unit =
-    graft.state.Layout.writeLayoutMarker(fs, table, "key_buckets", n)
-
-  /** The key buckets a batch's events can possibly touch: the batch's
-    * own (author, permlink) keys (fold seeds / restore joins) plus
-    * its referenced parents (gate seeds): the leaves the merge's
-    * stored view enumerates. ≤ min(batch keys, n) ints —
-    * driver-trivial. */
+  /** The key buckets a batch's events can possibly touch: the buckets
+    * of the batch's own authors (fold seeds / restore joins) plus
+    * those of its referenced parents' authors (gate seeds): the
+    * leaves the merge's stored view enumerates. ≤ min(batch authors,
+    * n) ints — driver-trivial. */
   private def batchKeyBuckets(evs: DataFrame,
                               keyBuckets: Int): Seq[Int] = {
-    val bucketOf = graft.state.Layout.keyBucket(
-      col("author"), col("permlink"), keyBuckets)
     // top-level posts carry the empty ("","") parent ref — its hash
     // bucket can never match a stored key (gateEvents filters the
     // same case), so keep it out of the pruned scan
-    evs.select(col("author"), col("permlink"))
+    evs.select(col("author"))
       .unionByName(evs.filter(col("parent_author") =!= "")
-        .select(col("parent_author").as("author"),
-          col("parent_permlink").as("permlink")))
-      .select(bucketOf.as("b")).distinct()
+        .select(col("parent_author").as("author")))
+      .select(graft.state.Layout.authorBucket(col("author"), keyBuckets)
+        .as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq
   }
 

@@ -61,24 +61,15 @@ object Serve {
       communities = opt("communities"),
       socialConnections = opt("social_connections"),
       syncStats = opt("sync_stats"),
-      keyBuckets = storedKeyBuckets(spark, s"$store/posts"),
+      // an absent marker serves unpruned; a corrupt or old-hash one
+      // fails the load with its path
+      keyBuckets = graft.state.Layout.postsKeyBuckets(spark,
+        s"$store/posts"),
+      // the marker first: a corrupt one fails the load with its path
       replyIndex = for {
-        df <- opt("reply_index")
         n <- graft.state.Layout.replyIndexBuckets(spark,
           s"$store/reply_index")
+        df <- opt("reply_index")
       } yield (df, n))
-  }
-
-  /** The posts store's graft-layout bucket modulus, read from its
-    * `_graft_layout.json` marker (the file `StreamIngest` maintains) —
-    * when present, the API's point lookups and parent_post hydration
-    * partition-prune their store probes to the relevant key buckets.
-    * An absent marker serves unpruned; a present but unreadable one
-    * throws with its path. */
-  private def storedKeyBuckets(spark: SparkSession,
-                               postsDir: String): Option[Int] = {
-    val p = new org.apache.hadoop.fs.Path(postsDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.streaming.StreamIngest.storedKeyBuckets(fs, p)
   }
 }

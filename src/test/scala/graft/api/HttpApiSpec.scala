@@ -820,13 +820,15 @@ class HttpApiSpec extends SparkSpec {
     tables.posts
       .withColumn("created_month",
         date_format(col("created_at"), "yyyy-MM"))
-      .withColumn("key_bucket", graft.state.Layout.keyBucket(
-        col("author"), col("permlink"), 8))
+      .withColumn("key_bucket", graft.state.Layout.authorBucket(
+        col("author"), 8))
       .write.partitionBy("created_month", "key_bucket")
       .parquet(s"$dir/posts")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/posts/_graft_layout.json"),
-      """{"key_buckets": 8}""".getBytes)
+    locally {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/posts")
+      graft.state.Layout.writePostsMarker(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, 8)
+    }
     tables.follows.write.parquet(s"$dir/follows")
     tables.profiles.write.parquet(s"$dir/profiles")
     val loaded = graft.tools.Serve.tables(spark, dir + "/")

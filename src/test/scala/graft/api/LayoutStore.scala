@@ -53,13 +53,15 @@ object LayoutStore {
       .toString
     PostsIngest.ingest(ops)(spark)
       .withColumn("created_month", date_format(col("created_at"), "yyyy-MM"))
-      .withColumn("key_bucket", graft.state.Layout.keyBucket(
-        col("author"), col("permlink"), 8))
+      .withColumn("key_bucket", graft.state.Layout.authorBucket(
+        col("author"), 8))
       .write.partitionBy("created_month", "key_bucket")
       .parquet(s"$d/posts")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$d/posts/_graft_layout.json"),
-      """{"key_buckets": 8}""".getBytes)
+    locally {
+      val p = new org.apache.hadoop.fs.Path(s"$d/posts")
+      graft.state.Layout.writePostsMarker(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, 8)
+    }
     graft.state.Layout.writeReplyIndex(spark.read.parquet(s"$d/posts"),
       s"$d/reply_index", 8)
     GraphIngest.follows(ops).write.parquet(s"$d/follows")

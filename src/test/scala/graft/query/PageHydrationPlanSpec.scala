@@ -169,8 +169,8 @@ class PageHydrationPlanSpec extends SparkSpec {
     posts
       .withColumn("created_month",
         date_format(col("created_at"), "yyyy-MM"))
-      .withColumn("key_bucket", graft.state.Layout.keyBucket(
-        col("author"), col("permlink"), 8))
+      .withColumn("key_bucket", graft.state.Layout.authorBucket(
+        col("author"), 8))
       .write.partitionBy("created_month", "key_bucket")
       .parquet(dir)
     val stored = spark.read.parquet(dir)
@@ -211,8 +211,8 @@ class PageHydrationPlanSpec extends SparkSpec {
     posts
       .withColumn("created_month",
         date_format(col("created_at"), "yyyy-MM"))
-      .withColumn("key_bucket", graft.state.Layout.keyBucket(
-        col("author"), col("permlink"), 8))
+      .withColumn("key_bucket", graft.state.Layout.authorBucket(
+        col("author"), 8))
       .write.partitionBy("created_month", "key_bucket")
       .parquet(s"$base/posts")
     val stored = spark.read.parquet(s"$base/posts")
@@ -253,8 +253,8 @@ class PageHydrationPlanSpec extends SparkSpec {
     val many = posts.withColumn("parent_author", lit("user1"))
       .withColumn("parent_permlink", lit("pX"))
       .withColumn("created_month", lit("2024-05"))
-      .withColumn("key_bucket", graft.state.Layout.keyBucket(
-        col("author"), col("permlink"), 8))
+      .withColumn("key_bucket", graft.state.Layout.authorBucket(
+        col("author"), 8))
     many.write.partitionBy("created_month", "key_bucket")
       .parquet(s"$base/many")
     val manyStored = spark.read.parquet(s"$base/many")
@@ -280,15 +280,14 @@ class PageHydrationPlanSpec extends SparkSpec {
     posts
       .withColumn("created_month",
         date_format(col("created_at"), "yyyy-MM"))
-      .withColumn("key_bucket", graft.state.Layout.keyBucket(
-        col("author"), col("permlink"), 8))
+      .withColumn("key_bucket", graft.state.Layout.authorBucket(
+        col("author"), 8))
       .write.partitionBy("created_month", "key_bucket")
       .parquet(s"$base/posts")
     locally { // the store's modulus marker (the merge writes it)
       val p = new org.apache.hadoop.fs.Path(s"$base/posts")
-      graft.state.Layout.writeLayoutMarker(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-        "key_buckets", 8)
+      graft.state.Layout.writePostsMarker(
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, 8)
     }
     val stored = spark.read.parquet(s"$base/posts")
     graft.state.Layout.writeReplyIndex(stored, s"$base/idx", 8)
@@ -336,12 +335,13 @@ class PageHydrationPlanSpec extends SparkSpec {
     // children instead of throwing (ADVICE r10)
     val emptyBase = java.nio.file.Files
       .createTempDirectory("graft-replyidx-empty").toString
-    Seq(s"$emptyBase/posts" -> "key_buckets",
-        s"$emptyBase/idx" -> "reply_buckets").foreach { case (d, k) =>
+    Seq(s"$emptyBase/posts", s"$emptyBase/idx").foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(p)
-      graft.state.Layout.writeLayoutMarker(fs, p, k, 8)
+      if (d.endsWith("/posts"))
+        graft.state.Layout.writePostsMarker(fs, p, 8)
+      else graft.state.Layout.writeLayoutMarker(fs, p, "reply_buckets", 8)
     }
     val onEmpty = PostQueries.childrenForIndexedAt(spark,
       lonely.select("author", "permlink"),

@@ -160,11 +160,13 @@ class StreamIngestSpec extends SparkSpec {
     val keys = Seq(("author2", "p2"), ("replier1", "re1"),
       ("replier5", "re5"), ("newbie", "q1"), ("replier6", "re6"))
     val parents = Seq(("author1", "p1"), ("author5", "p5"))
-    def bucketsOf(ks: Seq[(String, String)]) = ks.toDF("a", "p")
-      .select(graft.state.Layout.keyBucket(col("a"), col("p"), n))
-      .distinct().as[Int].collect().toSeq
-    val postBuckets = bucketsOf(keys ++ parents)
-    val replyBuckets = bucketsOf(parents)
+    def bucketsOf(ks: Seq[(String, String)], b: (String, String) =>
+        org.apache.spark.sql.Column) = ks.toDF("a", "p")
+      .select(b("a", "p")).distinct().as[Int].collect().toSeq
+    val postBuckets = bucketsOf(keys ++ parents, (a, _) =>
+      graft.state.Layout.authorBucket(col(a), n))
+    val replyBuckets = bucketsOf(parents, (a, p) =>
+      graft.state.Layout.keyBucket(col(a), col(p), n))
     val touchedPosts = spark.read.parquet(postsDir)
       .filter(col("key_bucket").isin(postBuckets: _*)).count()
     val touchedIndex = spark.read.parquet(idxDir)
@@ -474,8 +476,8 @@ class StreamIngestSpec extends SparkSpec {
       .select("key_bucket").head().getInt(0)
     // pick an author hashing to the OTHER bucket (n=2 ⇒ exists)
     val other = (1 to 50).map(i => s"user$i").find { a =>
-      spark.range(1).select(graft.state.Layout.keyBucket(
-          lit(a), lit("pnew"), 2).as("b"))
+      spark.range(1).select(graft.state.Layout.authorBucket(
+          lit(a), 2).as("b"))
         .head().getInt(0) != aliceBucket
     }.get
     mergeBlock(block(101, "2024-05-01T12:00:05",
@@ -608,7 +610,7 @@ class StreamIngestSpec extends SparkSpec {
       .map(_.getInt(0)).forall(_ < 8))
     val p = new org.apache.hadoop.fs.Path(postsDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(StreamIngest.storedKeyBuckets(fs, p).contains(8))
+    assert(graft.state.Layout.postsKeyBuckets(fs, p).contains(8))
 
     // a corrupt marker must REFUSE the merge, not fall back to the
     // caller's modulus (which could prune the wrong buckets)
@@ -616,7 +618,7 @@ class StreamIngestSpec extends SparkSpec {
     val out = fs.create(marker, true)
     out.write("not json".getBytes("UTF-8")); out.close()
     intercept[IllegalStateException] {
-      StreamIngest.storedKeyBuckets(fs, p)
+      graft.state.Layout.postsKeyBuckets(fs, p)
     }
   }
 
