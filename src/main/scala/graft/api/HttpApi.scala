@@ -34,7 +34,7 @@ final class HttpApi(api: GraftApi, port: Int = 0, threads: Int = 4) {
   // owned pool, shut down by stop(): HttpServer.stop() does NOT stop
   // a caller-supplied executor, and its non-daemon threads keep any
   // embedding JVM alive after the server is gone (surfaced by the
-  // ScaleEvidence e2e stage — the runMain JVM never exited)
+  // StoreScale e2e stage — the runMain JVM never exited)
   private val pool =
     java.util.concurrent.Executors.newFixedThreadPool(threads)
   server.setExecutor(pool)

@@ -68,7 +68,12 @@ final case class ApiTables(
   * a deliberate divergence, because an uncapped collect of a
   * production-sized table onto the driver is exactly the failure the
   * O(page) contract above exists to prevent. Counts stay exact
-  * (distributed aggregates, not capped).
+  * (distributed aggregates, not capped). For the same reason a
+  * client-chosen page size above `maxPage` — a feed's
+  * `pagination.limit`, `children(limit)` or `trendingTags(limit)` — is
+  * a named request error, where the reference accepts any limit
+  * (`resolvers/index.ts:178`, `posts.ts:161-231`). The resolvers'
+  * default page sizes (100; relatedFeed 25) are the reference's.
   *
   * Selections and argument names are validated against the SERVED
   * schema shape ([[SchemaShape]], derived from the entity DataFrames
@@ -395,8 +400,8 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
             col("block_lag_diff").as("latestBlockLagDiff"))
         single(stats, f.selections)
       case "trendingTags" =>
-        val k = Option(args.get("limit")).filterNot(_.isNull)
-          .map(_.asInt()).filter(_ > 0).getOrElse(5)
+        val k = pageLimit("trendingTags(limit)", Option(args.get("limit"))
+          .filterNot(_.isNull).map(_.asInt()).filter(_ > 0).getOrElse(5))
         val tags = PostQueries.trendingTags(tables.posts, now(), k)
         val obj = nf.objectNode()
         GraphQL.collectFields(f.selections, None).foreach { sub =>
@@ -541,7 +546,7 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
       val a = argsNode(ch.args, vars)
       def i(n: String, d: Int) = Option(a.get(n)).filterNot(_.isNull)
         .map(_.asInt()).filter(_ > 0).getOrElse(d)
-      val limit = i("limit", 100)
+      val limit = pageLimit("children(limit)", i("limit", 100))
       val skip = Option(a.get("skip"))
         .filterNot(_.isNull).map(_.asInt()).getOrElse(0)
       val outCol = HydPrefix + ch.alias
@@ -791,7 +796,17 @@ final class GraftApi(spark: SparkSession, tables: ApiTables,
         merged.set[ObjectNode]("_or", arr)
       }
     }
-    ArgsJson.parse(mapper.writeValueAsString(merged))
+    val fa = ArgsJson.parse(mapper.writeValueAsString(merged))
+    pageLimit("pagination.limit", fa.limit)
+    fa
+  }
+
+  /** `n`, or a request error naming `arg` when it is above
+    * [[maxPage]]. */
+  private def pageLimit(arg: String, n: Int): Int = {
+    if (n > maxPage) throw new IllegalArgumentException(
+      s"$arg $n is above the page cap $maxPage")
+    n
   }
 
   // ── variables ──────────────────────────────────────────────────────

@@ -484,58 +484,23 @@ object Multimodal {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** splitmix64 finalizer — the salted-fixture texture mixer. */
-  @inline private def mix64(v: Long): Long = {
-    var z = v + 0x9E3779B97F4A7C15L
-    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-    z ^ (z >>> 31)
-  }
-
   /** Deterministic synthetic PNG: dimensions derived from the id
     * (width = 16 + id mod 32, height = 8 + id mod 16), gradient fill.
     * ENCODED through the real PNG writer, so decoding it back is a
     * true codec roundtrip, not a formula echo. */
-  private[multimodal] def syntheticPng(id: Long,
-                                       salt: Long = 0L): Array[Byte] = {
+  private[multimodal] def syntheticPng(id: Long): Array[Byte] = {
     val w = 16 + (id % 32).toInt
     val h = 8 + (id % 16).toInt
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    // salt mixes a per-pixel texture term into the channels, not a
-    // constant brightness shift (which would leave the aHash bit
-    // pattern — cell mean vs global mean — unchanged). The term
-    // depends on id ONLY through id % 256, so within-salt alias
-    // classes (the truth near-dup pairs) stay bit-identical, while
-    // distinct salts give uncorrelated textures. Coefficient-only
-    // tweaks (the first cut of this knob) were NOT enough: aHash of
-    // a near-linear ramp collapses to a handful of bit patterns
-    // regardless of gradient frequency, so cross-salt band keys
-    // still collided en masse (28.7M candidates for 50k images at
-    // 10×). A splitmix64-mixed per-cell term makes cross-salt
-    // hashes effectively uniform. salt=0 reproduces the original
-    // formula bit-for-bit (the oracle fixture). (VERDICT r4 #3)
-    // salt hygiene (ADVICE r5): math.abs(Long.MinValue) stays
-    // negative (the s%5 coefficients below would too), so pin that
-    // one corner; and fold ALL 64 salt bits into the texture via a
-    // pre-mix — the old `s << 40` pack aliased salts ≥ 2^24 to the
-    // same texture (harmless for today's replica-index salts, a
-    // footgun for other callers).
-    val s = if (salt == Long.MinValue) Long.MaxValue else math.abs(salt)
-    val sMix = if (s == 0L) 0L else mix64(s)
     val px = new Array[Int](w * h)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        val n = if (s == 0L) 0L
-          else mix64(sMix ^ ((id % 256) | (x.toLong << 16) |
-            (y.toLong << 32)))
-        val r = ((id + x * (1 + s % 5) + s + (n & 0xFF)) % 256).toInt
-        val g = ((id * 7 + y * (1 + s % 3) + s * 11 +
-          ((n >> 8) & 0xFF)) % 256).toInt
-        val b = ((x * y * (1 + s % 2) + id + s * 13 +
-          ((n >> 16) & 0xFF)) % 256).toInt
+        val r = ((id + x) % 256).toInt
+        val g = ((id * 7 + y) % 256).toInt
+        val b = ((x * y + id) % 256).toInt
         px(y * w + x) = (r << 16) | (g << 8) | b
         x += 1
       }
@@ -550,13 +515,12 @@ object Multimodal {
   /** Fixture/bench source: real PNG media rows generated executor-
     * side from an id column (no driver bottleneck, no fixture files —
     * the generator runs inside the scan stage). */
-  def syntheticPngMedia(ids: DataFrame, idCol: String = "doc_id",
-                        saltOf: Long => Long = _ => 0L)
+  def syntheticPngMedia(ids: DataFrame, idCol: String = "doc_id")
       (implicit spark: SparkSession): Dataset[MediaRow] = {
     import spark.implicits._
     ids.select(col(idCol).cast("long")).as[Long].mapPartitions { it =>
       it.map { id =>
-        val bytes = syntheticPng(id, saltOf(id))
+        val bytes = syntheticPng(id)
         MediaRow(id, "image", bytes, "image/png",
           16 + (id % 32).toInt, 8 + (id % 16).toInt, 0L)
       }

@@ -4401,9 +4401,9 @@ object Catalog {
       (s, d) => {
         val emb = Tables.embeddingsSpread(s, d)
         // allowExact: this row IS the documented quadratic oracle
-        // gate (and the ScaleEvidence 100× boundary probe) — every
-        // corpus-scale caller routes to v16 / marginMiningIvf, and
-        // marginMining itself refuses large inputs without this flag
+        // gate — every corpus-scale caller routes to v16 /
+        // marginMiningIvf, and marginMining itself refuses large
+        // inputs without this flag
         Vectors.marginMining(
           emb.filter(col("label") < 5), emb.filter(col("label") >= 5),
           "embedding", "vec_id", k = 4, allowExact = true)

@@ -249,8 +249,8 @@ object Layout {
 
   /** ~128-MB output files — the standard parquet bin-pack target
     * (one comfortable HDFS/object-store block, the same size
-    * ScaleEvidence's compaction stages use); partitions already at
-    * or under it are never rewritten. */
+    * `tools.StoreScale`'s compaction stage uses); partitions already
+    * at or under it are never rewritten. */
   val DefaultCompactTargetBytes: Long = 128L << 20
 
   /** What [[maintain]] ran: the fold's stats when the layout is

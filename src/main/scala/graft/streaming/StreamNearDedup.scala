@@ -95,9 +95,10 @@ object StreamNearDedup {
       * (flat O(corpus) re-band term). Any change that shrinks the
       * bucketed fixed costs — leaf-write batching, a cheaper probe
       * listing, auto-fold keeping leaf counts lower — moves the
-      * crossover DOWN; re-run the d44e flat-vs-bucketed A/B at two
-      * decades (ScaleEvidence "d44e" stages) and reset the floor to
-      * the new geometric midpoint. */
+      * crossover DOWN; re-run the flat-vs-bucketed A/B (one 20-doc
+      * [[probeAndAppend]] trigger against a seeded side table, each
+      * mode) at two corpus decades and reset the floor to the new
+      * geometric midpoint. */
     val BucketedCorpusFloor = 1000000L
   }
 

@@ -438,6 +438,27 @@ class HttpApiSpec extends SparkSpec {
     assert(bad.has("errors") && !bad.has("data"))
   }
 
+  test("a client page size above maxPage is a named request error") {
+    val capped = new GraftApi(spark, tables, maxPage = 2)
+    def err(q: String, field: String) = {
+      val r = capped.execute(q)
+      assert(r.path("data").path(field).isNull, r.toString)
+      r.path("errors").get(0).path("message").asText()
+    }
+    assert(err("{ socialFeed(pagination: {limit: 3}) { items { author } } }",
+      "socialFeed") == "pagination.limit 3 is above the page cap 2")
+    assert(err("""{ socialPost(author: "alice", permlink: "v1")
+      |  { children(limit: 5) { permlink } } }""".stripMargin,
+      "socialPost") == "children(limit) 5 is above the page cap 2")
+    assert(err("{ trendingTags(limit: 9) { tags { tag } } }",
+      "trendingTags") == "trendingTags(limit) 9 is above the page cap 2")
+    // at the cap the page is served
+    val ok = capped.execute(
+      "{ socialFeed(pagination: {limit: 2}) { items { author } } }")
+    assert(!ok.has("errors") &&
+      ok.path("data").path("socialFeed").path("items").size() == 2, ok)
+  }
+
   test("REST create_stream_id: existing-id read; unknown post and " +
     "ungranted post answer null (controller.ts:8-39 read half)") {
     def rest(body: String) = {
