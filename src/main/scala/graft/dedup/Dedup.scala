@@ -3,7 +3,7 @@ package graft.dedup
 import graft.CacheTracker
 import graft.functions.{SigExprs, Text}
 import graft.state.Merge
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for the training-data pipeline
@@ -770,10 +770,10 @@ object Dedup {
 
   /** The banded-signature projection of a shingle-set table: one
     * (id, band, key) row per document per band — BOTH the internal
-    * step of every LSH form here and the SIDE TABLE an incremental
-    * pipeline persists (bucketBy(key) at scale) so a probe never
-    * re-bands the corpus ([[minhashLshProbeBands]]). Same
-    * k/bands/seed ⇒ bit-identical keys across all forms. */
+    * step of every LSH form here and the band SIDE TABLE an
+    * incremental pipeline persists so a probe never re-bands the
+    * corpus ([[minhashLshProbeBandsPruned]]). Same k/bands/seed ⇒
+    * bit-identical keys across all forms. */
   def minhashBandRows(sets: DataFrame, k: Int, bands: Int,
                       seed: Long): DataFrame =
     sets
@@ -787,42 +787,13 @@ object Dedup {
         col("bk.key").as("key"))
 
   /** The band side table's partition key: ONE expression shared by
-    * [[writeBandSideTable]] and the probe's pruning filter, so the
-    * two can never hash differently (the reply-index keyBucket
-    * contract). Bucketing by (band, key) — the probe's join key —
-    * lets a micro-batch probe prune the stored band table to the
+    * the table's writer ([[graft.streaming.StreamNearDedup]]) and the
+    * probe's bucket discovery, so the two can never hash differently
+    * (the reply-index keyBucket contract). Bucketing by (band, key) —
+    * the probe's join key — lets a micro-batch probe read only the
     * buckets its own ≤ |delta|·bands keys hash into. */
   def bandBucket(band: Column, key: Column, n: Int): Column =
     pmod(xxhash64(band, key), lit(n.toLong)).cast("int")
-
-  /** Persist a [[minhashBandRows]] projection as a BUCKETED layout —
-    * the scale form the probe's scaladoc promises: partitioned by
-    * [[bandBucket]] (marker-before-data, one file per bucket), so
-    * [[minhashLshProbeBands]] with `bandBuckets = Some(n)` prunes the
-    * corpus-band scan to the delta's own key buckets instead of
-    * reading the whole table. Full-rebuild form; a continuous
-    * pipeline appends each batch's band rows with the same bucket
-    * column under a dynamic-partition write (the
-    * [[graft.streaming.StreamNearDedup]] side-table pattern). */
-  def writeBandSideTable(bandRows: DataFrame, dir: String,
-                         n: Int): Unit =
-    graft.state.Layout.rebuildWithMarker(bandRows.sparkSession, dir,
-      "band_buckets", n) {
-      bandRows
-        .withColumn("band_bucket",
-          bandBucket(col("band"), col("key"), n))
-        .repartition(col("band_bucket"))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("band_bucket")
-        .parquet(dir)
-    }
-
-  /** The bucketed band table's modulus from its layout marker (None =
-    * unmarked/flat → the probe must scan, not prune). */
-  def bandSideBuckets(spark: SparkSession, dir: String): Option[Int] =
-    graft.state.Layout.markedBuckets(spark, dir, "band_buckets")
 
   /** The shingle-set side table's partition key — the candidate-FETCH
     * analogue of [[bandBucket]]: the probe's verification step pulls
@@ -832,39 +803,15 @@ object Dedup {
   def idBucket(id: Column, n: Int): Column =
     pmod(xxhash64(id), lit(n.toLong)).cast("int")
 
-  /** Persist an (id, sh) shingle-set table partitioned by
-    * [[idBucket]] (marker-before-data, one file per bucket) — with
-    * [[writeBandSideTable]] this completes the probe's persisted-
-    * artifact pair: [[minhashLshProbeBands]] with `setsBuckets =
-    * Some(n)` prunes the candidate fetch the way `bandBuckets`
-    * prunes the band join. */
-  def writeSetsSideTable(sets: DataFrame, dir: String, n: Int): Unit =
-    graft.state.Layout.rebuildWithMarker(sets.sparkSession, dir,
-      "sets_buckets", n) {
-      sets
-        .withColumn("id_bucket", idBucket(col("id"), n))
-        .repartition(col("id_bucket"))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("id_bucket")
-        .parquet(dir)
-    }
-
-  /** The bucketed sets table's modulus from its layout marker. */
-  def setsSideBuckets(spark: SparkSession, dir: String): Option[Int] =
-    graft.state.Layout.markedBuckets(spark, dir, "sets_buckets")
-
-  /** Shingle-set-level probe — the corpus side is (id, sh) rows, i.e.
-    * exactly the persisted signature side table an incremental
-    * pipeline maintains ([[graft.streaming.StreamNearDedup]] feeds
-    * this from parquet; [[minhashLshProbe]] from raw text).
+  /** Shingle-set-level probe — the corpus side is (id, sh) rows; the
+    * batch reference form ([[minhashLshProbe]] feeds it from raw
+    * text) that the banded probe is spec-pinned against.
     *
     * NB measured (d44b, 5M-doc corpus): this form re-BANDS the whole
     * corpus on every probe — ~8.8 GB of banding shuffle per
     * micro-batch at that scale, O(corpus) however small the delta.
-    * Continuous pipelines should persist the banded table too and
-    * call [[minhashLshProbeBands]], which moves only delta bands +
+    * Continuous pipelines persist the banded table too and call
+    * [[minhashLshProbeBandsPruned]], which moves only delta bands +
     * candidate sets (measured O(delta), d44c). */
   def minhashLshProbeSets(corpusSets: DataFrame, deltaSets: DataFrame,
                           k: Int, bands: Int, threshold: Double,
@@ -926,150 +873,62 @@ object Dedup {
   }
 
   /** The TRUE O(delta) incremental probe: both corpus-side artifacts
-    * are PERSISTED side tables a continuous pipeline maintains —
-    * `corpusBands` = [[minhashBandRows]] of the corpus — persist it
-    * with [[writeBandSideTable]] and pass `bandBuckets = Some(n)` and
-    * the band scan PRUNES to the delta's own key buckets
-    * (directory-level, ≤ |delta|·bands of n buckets read; on a flat
-    * table the probe scans but still never shuffles the corpus) —
-    * `corpusSets` = the (id, sh) shingle table — persist with
-    * [[writeSetsSideTable]] and pass `setsBuckets = Some(n)` and the
-    * candidate FETCH directory-prunes to the candidates' id buckets
-    * the same way.
-    * Per-probe cluster work is then O(delta banding + candidate
+    * are PERSISTED side tables a continuous pipeline maintains (the
+    * band rows, [[minhashBandRows]] of the corpus, and the (id, sh)
+    * shingle sets), supplied as BUCKET-VALUE PROVIDERS. The probe
+    * computes its bucket values first — the delta's [[bandBucket]]s,
+    * then the candidates' [[idBucket]]s — and hands them to the
+    * providers, which read exactly those buckets. Over a
+    * batch-appended layout a provider ENUMERATES the leaf dirs
+    * (bucket → directory is computable, the layout is its own
+    * manifest), so neither the scan nor the driver's file listing
+    * touches the rest of the table
+    * ([[graft.state.Layout.BucketedTable.readBuckets]]; a fresh
+    * partitioned read would list every `bucket=…/batch_id=…` leaf per
+    * probe, BENCH_NOTES r10).
+    *
+    * Per-probe cluster work is O(delta banding + candidate
     * verification): the delta is banded (micro-batch-sized), joined
-    * against the stored band table, and shingle sets are fetched for
+    * against the stored band rows, and shingle sets are fetched for
     * CANDIDATE ids only. Measured against [[minhashLshProbeSets]] on
     * the same 5M-doc corpus / 2k delta: 8,831 MB → single-digit MB of
-    * shuffle (d44b vs d44c, BENCH_NOTES r9) — the sets-level form
-    * re-bands the corpus every probe, this one never touches
-    * non-candidate corpus rows beyond the (bucket-prunable) band-key
-    * join.
+    * shuffle (d44b vs d44c, BENCH_NOTES r9).
     *
     * Output and recall are IDENTICAL to [[minhashLshProbeSets]] with
-    * the same k/bands/seed (spec-pinned): same banding expression,
-    * same latest-wins delta-supersedes rule, same intra-batch
-    * canonicalization, same exact-Jaccard verification.
-    *
-    * MODULUS CONTRACT: `bandBuckets`/`setsBuckets` must be exactly
-    * the modulus each table's rows were WRITTEN with — a mismatched n
-    * makes the isin prune silently drop corpus rows that would have
-    * matched (lost true duplicates, no error). Hardcoding n in a
-    * caller is therefore forbidden: batch callers should use
-    * [[minhashLshProbeBandsAt]] (resolves both moduli from the
-    * tables' own layout markers) or resolve via
-    * [[bandSideBuckets]]/[[setsSideBuckets]] themselves; the
-    * streaming path ([[graft.streaming.StreamNearDedup]]) validates
-    * its configured modulus against both markers every batch. */
-  def minhashLshProbeBands(corpusBands: DataFrame,
-                           corpusSets: DataFrame,
-                           deltaSets: DataFrame,
-                           k: Int, bands: Int, threshold: Double,
-                           seed: Long,
-                           bandBuckets: Option[Int] = None,
-                           setsBuckets: Option[Int] = None)
-      : DataFrame =
-    probeBandsCore(
-      // layout pruning ([[writeBandSideTable]]): a stored band row
-      // can only join the candidate probe if it shares a (band, key)
-      // with some delta row — so restricting the scan to the DELTA's
-      // key buckets is semantics-preserving, and the isin on the
-      // partition column turns it into directory-level pruning
-      // (≤ |delta|·bands of n buckets read; the discovery collect is
-      // delta-sized)
-      bNewEarly => (bandBuckets match {
-        case Some(n) if corpusBands.columns.contains("band_bucket") =>
-          corpusBands.filter(col("band_bucket")
-            .isin(deltaBandBuckets(bNewEarly, n): _*))
-        case _ => corpusBands
-      }).drop("band_bucket"),
-      // layout pruning ([[writeSetsSideTable]]): the fetch only keeps
-      // candidate-id rows (broadcast inner join in the core), so
-      // restricting the stored-sets scan to the CANDIDATES' id
-      // buckets is semantics-preserving — one candidate-sized
-      // discovery collect turns the corpus-sets read into
-      // ≤ |candidates| of n directories
-      candIds => (setsBuckets match {
-        case Some(n) if corpusSets.columns.contains("id_bucket") =>
-          corpusSets.filter(col("id_bucket")
-            .isin(candIdBuckets(candIds, n): _*))
-        case _ => corpusSets
-      }).drop("id_bucket"),
-      deltaSets, k, bands, threshold, seed)
-
-  /** ONE spelling of each probe-side bucket-discovery collect,
-    * shared by the isin-prune and leaf-enumeration forms (the same
-    * no-drift rule as [[probeBandsCore]] itself): the delta's band
-    * rows → their [[bandBucket]] values; the candidate ids → their
-    * [[idBucket]] values. Both collects are delta-/candidate-sized
-    * (driver-trivial) and ride their frames' caches. */
-  private def deltaBandBuckets(bandRows: DataFrame, n: Int): Seq[Int] =
-    bandRows.select(bandBucket(col("band"), col("key"), n).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-
-  private def candIdBuckets(ids: DataFrame, n: Int): Seq[Int] =
-    ids.select(idBucket(col("id"), n).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-
-  /** [[minhashLshProbeBands]] with the corpus sides supplied as
-    * BUCKET-VALUE PROVIDERS — the LISTING-cost form for streaming
-    * callers over batch-appended layouts. The isin form above prunes
-    * the SCAN, but the fresh partitioned read it filters still lists
-    * every `bucket=…/batch_id=…` leaf of both side tables per probe
-    * to build its file index; a long-lived bucketed store makes that
-    * per-trigger driver listing the dominant fixed cost (the same
-    * wall [[graft.state.Layout.readBucketLeaves]] closed for point
-    * probes, BENCH_NOTES r10). Here the probe computes its bucket
-    * values first — the delta's band buckets, then the candidates' id
-    * buckets — and hands them to the providers, which enumerate
-    * exactly those leaf dirs (bucket → directory is computable; the
-    * layout is its own manifest).
+    * the same k/bands/seed over the same stored rows (spec-pinned):
+    * same banding expression, same latest-wins delta-supersedes rule,
+    * same intra-batch canonicalization, same exact-Jaccard
+    * verification.
     *
     * Provider contract: `corpusBandsFor(bk)` must return EVERY stored
-    * band row whose [[bandBucket]] (modulus `bandBuckets` — each
-    * table's own recorded modulus, they may differ) is in `bk`, as
-    * (id, band, key); `corpusSetsFor(ib)` every stored set row whose
-    * [[idBucket]] (modulus `setsBuckets`) is in `ib`, as (id, sh). A
-    * superset is
-    * semantics-preserving (the joins match exactly); a SUBSET loses
-    * true duplicates silently — the same contract as the modulus
-    * handshake. Output is identical to [[minhashLshProbeBands]] over
-    * the same stored rows (spec-pinned via the streaming parity
-    * spec). */
+    * band row whose [[bandBucket]] (modulus `bandBuckets`) is in `bk`,
+    * as (id, band, key); `corpusSetsFor(ib)` every stored set row
+    * whose [[idBucket]] (modulus `setsBuckets`) is in `ib`, as
+    * (id, sh). A superset is semantics-preserving (the joins match
+    * exactly); a SUBSET loses true duplicates silently — so each
+    * modulus must be exactly the one its table's rows were WRITTEN
+    * with ([[graft.streaming.StreamNearDedup]] validates its modulus
+    * against both tables' layout markers every batch). Both
+    * providers are called with values collected from PERSISTED
+    * delta-/candidate-sized frames. */
   def minhashLshProbeBandsPruned(corpusBandsFor: Seq[Int] => DataFrame,
                                  corpusSetsFor: Seq[Int] => DataFrame,
                                  deltaSets: DataFrame,
                                  k: Int, bands: Int, threshold: Double,
                                  seed: Long, bandBuckets: Int,
                                  setsBuckets: Int)
-      : DataFrame =
-    probeBandsCore(
-      bNewEarly =>
-        corpusBandsFor(deltaBandBuckets(bNewEarly, bandBuckets)),
-      candIds => corpusSetsFor(candIdBuckets(candIds, setsBuckets)),
-      deltaSets, k, bands, threshold, seed)
-
-  /** Shared relational core of the banded probes: the corpus sides
-    * arrive as functions of the probe's own discovery frames — the
-    * delta's band rows (for the band-side prune) and the candidate
-    * ids (for the sets-side prune) — so the isin-prune and
-    * leaf-enumeration forms cannot drift on join shape, latest-wins
-    * rule, canonicalization, or verification. Both callbacks may run
-    * eager collects; they execute against PERSISTED frames. */
-  private def probeBandsCore(corpusBandsFor: DataFrame => DataFrame,
-                             corpusSetsFor: DataFrame => DataFrame,
-                             deltaSets: DataFrame,
-                             k: Int, bands: Int, threshold: Double,
-                             seed: Long): DataFrame = {
+      : DataFrame = {
     val shNew = CacheTracker.persistTracked(deltaSets)
     // delta ids are micro-batch-sized by contract — broadcast them
     // into both latest-wins anti-joins so neither side table shuffles
     val newIds = broadcast(shNew.select("id"))
-    val bNewEarly = CacheTracker.persistTracked(
+    val bNew = CacheTracker.persistTracked(
       minhashBandRows(shNew, k, bands, seed))
-    val bOldSrc = corpusBandsFor(bNewEarly)
-    val bOld = bOldSrc.join(newIds, Seq("id"), "left_anti")
-    val bNew = bNewEarly
+    val deltaBandBuckets = bNew
+      .select(bandBucket(col("band"), col("key"), bandBuckets).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val bOld = corpusBandsFor(deltaBandBuckets)
+      .join(newIds, Seq("id"), "left_anti")
     val bAll = bOld.withColumn("was_new", lit(false))
       .unionByName(bNew.withColumn("was_new", lit(true)))
     val cand = bNew.select(col("band"), col("key"),
@@ -1083,15 +942,18 @@ object Dedup {
       .distinct()
     // candidate-bounded verification in ONE streamed pass over the
     // sets table: fetch the shingle sets of candidate ids (broadcast
-    // id probe — at scale the id-bucketed table makes this a point
-    // fetch), then both pair joins run small-vs-small on the fetched
-    // frame — the corpus is never shuffled and never scanned twice
+    // id probe over the candidates' id buckets), then both pair
+    // joins run small-vs-small on the fetched frame — the corpus is
+    // never shuffled and never scanned twice
     val candP = CacheTracker.persistTracked(cand)
     val candIds = candP.select(col("new_id").as("id"))
       .unionByName(candP.select(col("old_id").as("id"))).distinct()
-    // the sets-side callback's discovery collect rides candP's cache
-    val shOldSrc = corpusSetsFor(candIds)
-    val shAll = shOldSrc.join(newIds, Seq("id"), "left_anti")
+    // the bucket discovery collect rides candP's cache
+    val candIdBuckets = candIds
+      .select(idBucket(col("id"), setsBuckets).as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val shAll = corpusSetsFor(candIdBuckets)
+      .join(newIds, Seq("id"), "left_anti")
       .unionByName(shNew)
     val fetched = CacheTracker.persistTracked(
       shAll.join(broadcast(candIds), Seq("id")))
@@ -1112,49 +974,6 @@ object Dedup {
       .select(col("new_id"), col("old_id"), col("n_inter"),
         col("n_union"))
   }
-
-  /** [[minhashLshProbeBands]] BY TABLE DIRECTORY — the batch-caller
-    * form of the modulus contract: each table's prune modulus is
-    * resolved from its own `_graft_layout.json` marker (written by
-    * [[writeBandSideTable]]/[[writeSetsSideTable]] before any data),
-    * so a probe can never prune with a modulus the rows were not
-    * hashed with, even across a rebuild that changed n — the two
-    * moduli are independent. A MARKED table's read is LEAF-ENUMERATED
-    * ([[minhashLshProbeBandsPruned]] over the
-    * [[graft.state.Layout.BucketedTable]] facade — the one home of
-    * the (bucketCol, markerKey) pairing): the probe's own bucket
-    * values name the leaf dirs, so neither the scan NOR the driver
-    * listing touches the rest of the layout; a marked table whose
-    * data is NOT bucket-partitioned refuses loud (the facade's strict
-    * read) instead of serving an empty corpus. An unmarked (flat)
-    * table — or one whose bucket column is absent — degrades to the
-    * scan-but-never-shuffle form: slower, never lossy. */
-  def minhashLshProbeBandsAt(spark: org.apache.spark.sql.SparkSession,
-                             bandDir: String, setsDir: String,
-                             deltaSets: DataFrame,
-                             k: Int, bands: Int, threshold: Double,
-                             seed: Long): DataFrame =
-    (bandSideBuckets(spark, bandDir),
-     setsSideBuckets(spark, setsDir)) match {
-      case (Some(bn), Some(sn)) =>
-        minhashLshProbeBandsPruned(
-          bk => graft.state.Layout.bandSideTable(bandDir)
-            .readBuckets(spark, bk)
-            .map(_.select("id", "band", "key"))
-            .getOrElse(minhashBandRows(deltaSets.filter(lit(false)),
-              k, bands, seed)),
-          ib => graft.state.Layout.setsSideTable(setsDir)
-            .readBuckets(spark, ib)
-            .map(_.select("id", "sh"))
-            .getOrElse(deltaSets.filter(lit(false)).select("id", "sh")),
-          deltaSets, k, bands, threshold, seed,
-          bandBuckets = bn, setsBuckets = sn)
-      case (bn, sn) =>
-        minhashLshProbeBands(
-          spark.read.parquet(bandDir), spark.read.parquet(setsDir),
-          deltaSets, k, bands, threshold, seed,
-          bandBuckets = bn, setsBuckets = sn)
-    }
 
   /** Sorted-neighborhood near-dup (Hernández & Stolfo 1995): sort
     * the corpus by a domain sort key (here a normalized text

@@ -1105,8 +1105,10 @@ object Catalog {
 
     // ── §7.5 embedding-cosine near-dup pairs: random-hyperplane LSH
     //    → banded candidates → exact-cosine verify. Duplicates are
-    //    constructed from the table (ids +100000) so recall is exact
-    //    and the oracle can enumerate the true pair set. ─────────────
+    //    constructed from the table (ids +100000) so the answer is
+    //    never empty; the oracle searches ALL pairs of the same
+    //    union for cosine ≥ 0.99, so a pair the LSH misses is a
+    //    recall failure, not a silently smaller answer. ───────────────
     Q("v03_cosine_pairs",
       (s, d) => {
         val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
@@ -1118,14 +1120,21 @@ object Catalog {
           .withColumn("cosine", round(col("cosine"), 4))
           .orderBy("id_a", "id_b")
       },
-      Some("""SELECT vec_id AS id_a,
-          CAST(vec_id + 100000 AS BIGINT) AS id_b,
-          round(list_dot_product(e, e) /
-            (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(e, e))),
-            4) AS cosine
-        FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e
-              FROM embeddings WHERE vec_id < 10)
-        ORDER BY id_a, id_b""")),
+      Some("""WITH e AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm
+          FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                  FROM embeddings
+                UNION ALL
+                SELECT vec_id + 100000, CAST(embedding AS DOUBLE[])
+                  FROM embeddings WHERE vec_id < 10)),
+        p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+            CASE WHEN a.nrm * b.nrm = 0 THEN 0.0
+              ELSE list_dot_product(a.v, b.v) / (a.nrm * b.nrm)
+            END AS c
+          FROM e a JOIN e b ON a.vec_id < b.vec_id)
+      SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
+        round(c, 4) AS cosine
+      FROM p WHERE c >= 0.99
+      ORDER BY id_a, id_b""")),
 
     // ── §7.5 batch ANN: exact top-k per QUERY (5 queries × top-3) —
     //    the many-queries retrieval shape, two-phase distributed

@@ -1,6 +1,6 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -460,120 +460,12 @@ object PostQueries {
     val p = local(page)
     val pb = bucketsOf(p, graft.state.Layout.keyBucket(col("author"),
       col("permlink"), indexBuckets))
-    childrenForIndexedCore(p,
-      replyIndex.filter(col("reply_bucket").isin(pb: _*)),
-      sourceKeyBuckets.filter(_ => source.columns.contains("key_bucket")),
-      {
-        case Some(kb) => source.filter(col("key_bucket").isin(kb: _*))
-        case None => source
-      },
-      limit, skip, outCol, hydrate)
-  }
-
-  /** [[childrenForIndexed]] BY TABLE DIRECTORY — the listing-cost
-    * form. A fresh partitioned read lists EVERY leaf dir to build
-    * its file index; at a production modulus that driver listing
-    * dwarfs a point probe's task time (measured 43 s wall over
-    * 1.5 s task at store+index n=4096, BENCH_NOTES r9). Here both
-    * legs go through [[graft.state.Layout.readBucketLeaves]]: the
-    * bucket values are computed first (the same page-bounded
-    * discovery collects), the leaf dirs are ENUMERATED from them —
-    * the layout is its own manifest, bucket → directory is
-    * computable — and Spark's file index only ever sees the ≤|keys|
-    * leaves the probe will read. So the bucket lists must be values
-    * before the plan exists: the page and the ranked child keys are
-    * collected ([[local]]) and the lists read off their rows. Moduli
-    * come from the tables' own layout markers (hardcoding n is the
-    * silent mis-prune hazard); an unmarked store degrades to the full
-    * read.
-    *
-    * `sourceView` is a row-local view (projection/filter) applied to
-    * every store read — identity in production; test/bench harnesses
-    * that derive a virtual forest from the flat store hook it here.
-    * Results are identical to [[childrenForIndexed]] over the same
-    * tables (spec-pinned).
-    *
-    * EMPTY-STORE SCHEMA CAVEAT: a store with no data leaves at all
-    * answers with `outCol` typed as an array of the SLIM reply-index
-    * projection (parent/child keys + `created_at` — the only schema
-    * an empty store pair still defines), while a data-bearing store
-    * yields arrays of (hydrated) store rows. A consumer that binds to
-    * store columns inside `outCol`, or unions pages across store
-    * states, must treat the empty page's arrays as schema-less
-    * emptiness (e.g. gate on the store's emptiness, or select only
-    * the index columns) — the store's own row schema does not exist
-    * on disk to derive in that state. */
-  def childrenForIndexedAt(spark: SparkSession, page: DataFrame,
-                           sourceDir: String, indexDir: String,
-                           limit: Int = 100, skip: Int = 0,
-                           outCol: String = "children",
-                           hydrate: DataFrame => DataFrame = identity,
-                           sourceView: DataFrame => DataFrame =
-                             identity): DataFrame = {
-    val idxN = graft.state.Layout.replyIndexBuckets(spark, indexDir)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$indexDir has no reply_buckets layout marker — build it " +
-          "with Layout.writeReplyIndex"))
-    // a store with NO data leaves at all (legitimately empty — e.g.
-    // freshly bootstrapped, empty-generation-marked) answers the
-    // page with EMPTY children without running the probe: its index
-    // is empty too, and running the core would need a store schema
-    // that does not exist (`sourceView`/`hydrate` referencing store
-    // columns would crash on any surrogate). The empty arrays are
-    // typed as the slim index projection — the one schema an empty
-    // store pair still defines; once data lands, the element type is
-    // the (hydrated) store row as usual.
-    val firstLeaf = graft.state.Layout.firstDataLeaf(spark, sourceDir)
-    if (firstLeaf.isEmpty)
-      return page.withColumn(outCol, array().cast(
-        org.apache.spark.sql.types.ArrayType(
-          graft.state.Layout.emptyReplyIndexRows(spark)
-            .drop("reply_bucket").schema)))
-    val p = local(page)
-    val pb = bucketsOf(p, graft.state.Layout.keyBucket(col("author"),
-      col("permlink"), idxN))
-    val idx = graft.state.Layout.replyIndexTable(indexDir)
-      .readBuckets(spark, pb)
-      .getOrElse(graft.state.Layout.emptyReplyIndexRows(spark))
-    val storeN = graft.state.Layout.postsKeyBuckets(spark, sourceDir)
-    // empty-result schema source: the ONE data leaf found above, not
-    // a full listing (the data-less case already short-circuited)
-    def emptyStore(): DataFrame = sourceView(spark.read
-      .option("basePath", sourceDir)
-      .parquet(firstLeaf.get).filter(lit(false)))
-    childrenForIndexedCore(p, idx, storeN,
-      {
-        case Some(kb) =>
-          if (kb.isEmpty) emptyStore()
-          else graft.state.Layout.postsStoreTable(sourceDir)
-            .readBuckets(spark, kb)
-            .map(sourceView).getOrElse(emptyStore())
-        case None => sourceView(spark.read.parquet(sourceDir))
-      },
-      limit, skip, outCol, hydrate)
-  }
-
-  /** Shared relational core of the two indexed-children forms: rank
-    * the (already index-bucket-pruned) slim index for the [[local]]
-    * `page`'s keys, page per parent, collect the surviving child keys
-    * once, then fetch their rows from the store obtained via
-    * `sourceFor` — called with `Some(childKeyBuckets)` when
-    * `kbModulus` is known (the caller prunes however its store form
-    * allows: isin filter or leaf enumeration), `None` otherwise. */
-  private def childrenForIndexedCore(page: DataFrame,
-                                     idxPruned: DataFrame,
-                                     kbModulus: Option[Int],
-                                     sourceFor: Option[Seq[Int]] =>
-                                       DataFrame,
-                                     limit: Int, skip: Int,
-                                     outCol: String,
-                                     hydrate: DataFrame => DataFrame)
-      : DataFrame = {
+    val idxPruned = replyIndex.filter(col("reply_bucket").isin(pb: _*))
     val sk = math.max(0, skip)
     // the page's keys are driver values: an IN over literal pairs,
     // not a join that must first broadcast them
     def key(a: Column, p: Column) = struct(a.as("author"), p.as("permlink"))
-    val keys = page.select(col("author"), col("permlink")).collect()
+    val keys = p.select(col("author"), col("permlink")).collect()
       .map(r => (r.getString(0), r.getString(1))).distinct.toSeq
     val cand = idxPruned.filter(key(col("parent_author"),
       col("parent_permlink")).isin(keys.map { case (a, p) =>
@@ -588,10 +480,15 @@ object PostQueries {
         col("parent_permlink").as("_pp"),
         col("author").as("_ka"), col("permlink").as("_kp"),
         col("_rk"))
-      // one row per document key (see childrenForIndexed)
+      // one row per document key (the 4-tuple identity above)
       .dropDuplicates("_pa", "_pp", "_ka", "_kp"))
-    val fetchBase = sourceFor(kbModulus.map(n => bucketsOf(pagedKeys,
-      graft.state.Layout.authorBucket(col("_ka"), n))))
+    val fetchBase = sourceKeyBuckets
+      .filter(_ => source.columns.contains("key_bucket")) match {
+        case Some(n) => source.filter(col("key_bucket").isin(
+          bucketsOf(pagedKeys,
+            graft.state.Layout.authorBucket(col("_ka"), n)): _*))
+        case None => source
+      }
     val ranked = fetchBase.join(broadcast(pagedKeys),
       fetchBase("parent_author") === pagedKeys("_pa") &&
         fetchBase("parent_permlink") === pagedKeys("_pp") &&
@@ -605,7 +502,7 @@ object PostQueries {
       .repartition(col("parent_author"), col("parent_permlink"))
       .dropDuplicates("parent_author", "parent_permlink", "author",
         "permlink")
-    assembleChildren(page, ranked, outCol, hydrate)
+    assembleChildren(p, ranked, outCol, hydrate)
   }
 
   /** Shared tail of the children operators: hydrate the ranked child

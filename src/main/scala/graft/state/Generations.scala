@@ -1,6 +1,6 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -52,9 +52,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * and call [[recover]] before reading a table whose folder may have
   * crashed ([[graft.streaming.StreamNearDedup.probeAndAppend]] does).
   *
-  * Works on both shapes the streaming pipeline writes:
-  * two-level `bucket=X/batch_id=N` (band + sets side tables) and
-  * one-level `batch_id=N` at the root (flat side table, pairs table).
+  * Works on the two-level `bucket=X/batch_id=N` shape (the band and
+  * sets side tables); a table with `batch_id=N` leaves at its root
+  * is refused (folding it would rewrite the whole table through one
+  * task).
   */
 object Generations {
 
@@ -78,13 +79,10 @@ object Generations {
   }
 
   /** Batch-id leaves of the table: `(parentDirRelativeToRoot, id)` —
-    * parent is "" for the one-level shape. Staging/marker entries
-    * (`.`/`_`) are skipped at both levels. `private[graft]`:
-    * [[Layout.maintain]] uses its non-emptiness as the
-    * batch-appended-vs-overwrite layout signal;
-    * [[graft.streaming.StreamNearDedup.migrateToBucketed]] reads the
-    * flat table's shape and max batch id from it. */
-  private[graft] def batchLeaves(fs: FileSystem, root: Path)
+    * parent is "" for a leaf at the root (the refused one-level
+    * shape). Staging/marker entries (`.`/`_`) are skipped at both
+    * levels. */
+  private def batchLeaves(fs: FileSystem, root: Path)
       : Seq[(String, Long)] = {
     if (!fs.exists(root)) return Nil
     def idOf(name: String): Option[Long] =
@@ -106,10 +104,8 @@ object Generations {
     }
   }
 
-  private def leafPath(root: Path, parent: String, id: Long): Path = {
-    val base = if (parent.isEmpty) root else new Path(root, parent)
-    new Path(base, s"batch_id=$id")
-  }
+  private def leafPath(root: Path, parent: String, id: Long): Path =
+    new Path(new Path(root, parent), s"batch_id=$id")
 
   /** Complete (or discard) a crashed fold. Cheap when clean: one
     * existence probe. MUST run before trusting a table whose folder
@@ -138,11 +134,7 @@ object Generations {
     * `batch_id` is the LAYOUT column: folded rows read back with
     * `batch_id = -1`. For the near-dup side tables that is invisible
     * (the probe only ever compares batch_id against the CURRENT
-    * batch, which is ≥ horizon by contract). A table whose consumers
-    * need exact per-batch provenance as data — e.g. the pairs output
-    * feed — trades that provenance away for aged rows when folded;
-    * keep its leaves (they are already one file per batch) or copy
-    * the batch id into a data column before folding. */
+    * batch, which is ≥ horizon by contract). */
   def foldBatches(spark: SparkSession, dir: String, horizon: Long)
       : FoldStats = {
     recover(spark, dir)
@@ -151,6 +143,9 @@ object Generations {
     val foldable = leaves.filter { case (_, id) =>
       id >= 0 && id < horizon }
     if (foldable.isEmpty) return FoldStats(0, 0L, 0L, 0L)
+    require(leaves.forall(_._1.nonEmpty),
+      s"$dir has batch_id leaves at its root: only the bucketed " +
+        "bucket=…/batch_id=… shape folds")
     val parents = foldable.map(_._1).distinct.sorted
     // merge each affected bucket's EXISTING base into the new one;
     // untouched buckets (base-only, or leaves all ≥ horizon) are
@@ -159,21 +154,6 @@ object Generations {
       id == BaseBatchId && parents.contains(p) }
     val readPaths = (foldable ++ bases).map { case (p, id) =>
       leafPath(root, p, id).toString }
-    // ONE-LEVEL layouts rewrite the WHOLE accumulated table through
-    // coalesce(1) — a single serial task that grows with the corpus.
-    // That is the right shape for a naturally-small table (the pairs
-    // output feed), and a scaling cliff for a corpus-sized one (which
-    // belongs in a bucketed layout — per-bucket parallel fold). The
-    // cliff must fail loud at the API, not only in
-    // StreamNearDedup.run's guard: warn when the serial rewrite is
-    // about to absorb a large leaf count.
-    if (foldable.forall(_._1.isEmpty) && foldable.size > 64)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"foldBatches($dir): one-level (flat) layout — folding " +
-          s"${foldable.size} leaves rewrites the ENTIRE accumulated " +
-          "table through a single serial task (O(corpus), grows " +
-          "every cadence). Corpus-sized tables should use a " +
-          "bucketed layout (per-bucket parallel fold).")
     val (foldedFiles, foldedBytes) = {
       // serial driver loop, O(foldable leaves) listing RPCs — bounded
       // by the very leaf count the fold is about to rewrite (the fold
@@ -190,24 +170,17 @@ object Generations {
       }
       (n, b)
     }
-    val twoLevel = parents.exists(_.nonEmpty)
-    require(!twoLevel || parents.forall(_.nonEmpty),
-      s"$dir mixes root-level and bucketed batch_id leaves")
-    val bucketCol =
-      if (twoLevel) parents.head.takeWhile(_ != '=') else ""
+    val bucketCol = parents.head.takeWhile(_ != '=')
     val staging = new Path(root, StagingDirName)
     fs.delete(staging, true)
     val dataDir = new Path(staging, "data")
     // basePath-anchored read re-infers the partition columns from the
     // leaf paths; the rewrite drops batch_id (the base carries it in
     // its own dir name) and lands one file per bucket
-    val df = spark.read.option("basePath", root.toString)
+    spark.read.option("basePath", root.toString)
       .parquet(readPaths: _*).drop("batch_id")
-    if (twoLevel)
-      df.repartition(col(bucketCol))
-        .write.partitionBy(bucketCol).parquet(dataDir.toString)
-    else
-      df.coalesce(1).write.parquet(dataDir.toString)
+      .repartition(col(bucketCol))
+      .write.partitionBy(bucketCol).parquet(dataDir.toString)
     // THE commit point: fold visible to recovery only from here on.
     // Written to a dot-temp name and RENAMED into place — a crash
     // mid-write must leave either no commit record (recovery
@@ -243,10 +216,9 @@ object Generations {
     * full [[foldBatches]] enumeration (O(buckets)) which runs only
     * when the decision fires. The base generation counts as one leaf
     * (it is one listed dir like any other). 0.0 for a missing table
-    * or a layout with no bucket dirs (the one-level flat shape keeps
-    * `batch_id=` at the root — no bucket denominator exists, and the
-    * flat fold is the documented serial-rewrite cliff the auto
-    * cadence must never trigger). */
+    * or a layout with no bucket dirs (`batch_id=` leaves at the root
+    * have no bucket denominator, and [[foldBatches]] refuses that
+    * shape). */
   def sampleLeavesPerBucket(spark: SparkSession, dir: String,
                             sample: Int = 16): Double = {
     require(sample >= 1, "sample >= 1")
@@ -390,14 +362,9 @@ object Generations {
       (s.substring(0, i), s.substring(i + 1).toLong)
     }.groupBy(_._1)
     c.parents.foreach { p =>
-      val staged =
-        if (p.isEmpty) dataDir else new Path(dataDir, p)
+      val staged = new Path(dataDir, p)
       val target = leafPath(root, p, BaseBatchId)
-      // one-level shape: the whole data dir IS the staged base; its
-      // _SUCCESS rides along harmlessly (underscore-ignored)
-      if (fs.exists(staged) &&
-          (p.nonEmpty || fs.listStatus(staged)
-            .exists(_.getPath.getName.endsWith(".parquet")))) {
+      if (fs.exists(staged)) {
         fs.delete(target, true)
         if (!fs.exists(target.getParent)) fs.mkdirs(target.getParent)
         if (!fs.rename(staged, target))

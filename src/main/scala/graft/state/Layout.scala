@@ -171,25 +171,13 @@ object Layout {
     markedBuckets(spark, dir, "reply_buckets")
 
   /** ONE bucketed graft layout as a value — the single home of the
-    * generation/lifecycle protocol that the reply index, the dedup
-    * band table, and the dedup sets table each instantiate (the
-    * posts store shares the marker half). Every primitive delegates
-    * to the shared implementations ([[layoutMarker]],
-    * [[rebuildWithMarker]], [[graft.state.Generations]],
-    * [[compact]]), so a protocol fix lands once; the facade exists
-    * so the three instances cannot re-spell the (bucketCol,
-    * markerKey) pairing or drift on sentinel/marker file names —
-    * and so ONE spec (LifecycleSpec) can exercise the whole
-    * lifecycle against all three layouts by construction.
-    *
-    * Lifecycle: `rebuild` (marker-before-data full create) →
-    * `ensureMarker`+incremental writes (streaming maintenance;
-    * batch-appended layouts add `batch_id` leaves) →
-    * `markEmptyGeneration` when a completed bootstrap wrote zero
-    * rows → aging: `fold` collapses replay-expired batch leaves
-    * into the per-bucket base generation (batch-appended layouts),
-    * `compactFiles` bin-packs per-leaf small files (overwrite
-    * layouts); `recover` completes either's crashed commit. */
+    * (bucketCol, markerKey) pairing that the reply index, the dedup
+    * band table, the dedup sets table and the posts store each
+    * instantiate. Every primitive delegates to the shared
+    * implementations ([[layoutMarker]], [[readBucketLeavesStrict]]),
+    * so the instances cannot re-spell the pairing or drift on marker
+    * file names, and ONE spec (LifecycleSpec) exercises the marker
+    * and read protocol against every layout by construction. */
   final case class BucketedTable(dir: String, bucketCol: String,
                                  markerKey: String) {
     private def fsPath(spark: SparkSession) = {
@@ -201,42 +189,16 @@ object Layout {
       val (fs, p) = fsPath(spark)
       layoutMarker(fs, p, markerKey, strict)
     }
-    def writeMarker(spark: SparkSession, n: Int): Unit = {
-      val (fs, p) = fsPath(spark)
-      fs.mkdirs(p)
-      writeLayoutMarker(fs, p, markerKey, n)
-    }
     /** Marker only when absent — the incremental-create rule (a
       * truncating re-write every batch would open a recurring
       * zero-byte-marker crash window; strict: present-but-corrupt
       * refuses rather than silently re-arming). */
     def ensureMarker(spark: SparkSession, n: Int): Unit =
-      if (modulus(spark, strict = true).isEmpty) writeMarker(spark, n)
-    def hasData(spark: SparkSession): Boolean = {
-      val (fs, p) = fsPath(spark)
-      hasDataFiles(fs, p)
-    }
-    def hasEmptyGeneration(spark: SparkSession): Boolean = {
-      val (fs, p) = fsPath(spark)
-      hasEmptyIndexMarker(fs, p)
-    }
-    def markEmptyGeneration(spark: SparkSession): Unit = {
-      val (fs, p) = fsPath(spark)
-      writeEmptyIndexMarker(fs, p)
-    }
-    def rebuild(spark: SparkSession, n: Int)(write: => Unit): Unit =
-      rebuildWithMarker(spark, dir, markerKey, n)(write)
-    def recover(spark: SparkSession): Unit =
-      Generations.recover(spark, dir)
-    def fold(spark: SparkSession, horizon: Long): Generations.FoldStats =
-      Generations.foldBatches(spark, dir, horizon)
-    def compactFiles(spark: SparkSession, targetBytes: Long)
-        : (Long, Long) = compact(spark, dir, targetBytes)
-    def maintain(spark: SparkSession,
-                 foldHorizon: Option[Long] = None,
-                 compactTargetBytes: Long = DefaultCompactTargetBytes)
-        : MaintainReport =
-      Layout.maintain(spark, dir, foldHorizon, compactTargetBytes)
+      if (modulus(spark, strict = true).isEmpty) {
+        val (fs, p) = fsPath(spark)
+        fs.mkdirs(p)
+        writeLayoutMarker(fs, p, markerKey, n)
+      }
     /** Leaf-enumerated read of `values`' buckets — STRICT
       * ([[readBucketLeavesStrict]]): this facade is only ever built
       * for marked layouts, where data without bucket dirs is a
@@ -245,273 +207,6 @@ object Layout {
     def readBuckets(spark: SparkSession, values: Seq[Int])
         : Option[DataFrame] =
       readBucketLeavesStrict(spark, dir, bucketCol, values)
-  }
-
-  /** ~128-MB output files — the standard parquet bin-pack target
-    * (one comfortable HDFS/object-store block, the same size
-    * `tools.StoreScale`'s compaction stage uses); partitions already
-    * at or under it are never rewritten. */
-  val DefaultCompactTargetBytes: Long = 128L << 20
-
-  /** What [[maintain]] ran: the fold's stats when the layout is
-    * batch-appended and a safe horizon existed, the (before, after)
-    * file counts when the overwrite layout was bin-packed, or the
-    * per-member fold stats when the dir carries a group manifest
-    * (the whole group ages off one call). At most one shape is set —
-    * the layout picks the op. `skipped` is the MANDATORY reason when
-    * nothing ran but maintenance was requested on a table that looks
-    * like it needs it (a batch-appended table with no safe horizon):
-    * a cron calling maintain() and never reading the report still
-    * gets the warn log, and a caller that does read it gets the why
-    * instead of a quiet `ran=false`. */
-  final case class MaintainReport(
-      fold: Option[Generations.FoldStats],
-      compacted: Option[(Long, Long)],
-      group: Seq[(String, Generations.FoldStats)] = Nil,
-      skipped: Option[String] = None) {
-    def ran: Boolean = fold.nonEmpty || compacted.nonEmpty ||
-      group.nonEmpty
-  }
-
-  /** ONE maintenance entry for any graft layout — the layout IS its
-    * own manifest for maintenance too: inspect the directory tree and
-    * run whichever aging op this layout needs, with crash recovery
-    * for BOTH protocols up front ([[Generations.recover]] completes a
-    * committed-but-unfinished fold; [[compact]] runs its own staging
-    * recovery internally). Batch-appended layouts (any `batch_id=`
-    * leaf present — the streaming side tables, an aged pairs table)
-    * FOLD replay-expired leaves into the per-bucket base generation;
-    * overwrite layouts (reply index, posts store) BIN-PACK small
-    * files toward `compactTargetBytes`. Same single-writer contract
-    * as both underlying ops: run between triggers or with the stream
-    * stopped.
-    *
-    * The fold horizon: `foldHorizon` when given, else the table's own
-    * replay watermark ([[Generations.lastBatchWatermark]] — the
-    * highest batch id whose writes ever STARTED; ids below it can
-    * never be re-delivered by foreachBatch, so `horizon = watermark`
-    * folds exactly the leaves no replay will target).
-    *
-    * GROUPED tables (a `_graft_group.json` manifest, maintained by
-    * the bucketed near-dup stream and [[
-    * graft.streaming.StreamNearDedup.migrateToBucketed]]): maintain()
-    * on ANY member folds the whole group in lockstep with the
-    * horizon source's watermark — the band/pairs tables, which carry
-    * no watermark of their own, age through their manifest. A
-    * STANDALONE batch-appended table with neither horizon nor
-    * watermark skips the fold LOG-LOUD with the reason on the report
-    * (`skipped`) — never a guessed horizon, never a quiet no-op. */
-  def maintain(spark: SparkSession, dir: String,
-               foldHorizon: Option[Long] = None,
-               compactTargetBytes: Long = DefaultCompactTargetBytes)
-      : MaintainReport = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a GROUP manifest trumps the single-table inspection: entering
-    // through ANY member (the band table, the un-aged pairs table)
-    // ages the whole group in lockstep with the shared horizon —
-    // the one case the single-table rule could not cover (band/pairs
-    // carry no watermark of their own, so standalone maintain() on
-    // them had to skip)
-    readGroupManifest(fs, root) match {
-      case Some(g) => return maintainGroup(spark, dir, g, foldHorizon)
-      case None => ()
-    }
-    Generations.recover(spark, dir)
-    // any batch_id= leaf — including a lone folded base — marks the
-    // batch-appended shape (a fully-folded store must not fall
-    // through to the overwrite branch)
-    val batchAppended = Generations.batchLeaves(fs, root).nonEmpty
-    if (batchAppended) {
-      val horizon = foldHorizon
-        .orElse(Generations.lastBatchWatermark(fs, root))
-      horizon match {
-        case Some(h) => MaintainReport(
-          Some(Generations.foldBatches(spark, dir, h)), None)
-        case None =>
-          // LOG-LOUD skip, never a quiet no-op: the table needs
-          // aging but no safe horizon exists — folding with a
-          // guessed one would break replay idempotence
-          val why = s"maintain($dir): batch-appended table with no " +
-            "replay watermark and no foldHorizon given — fold " +
-            "SKIPPED (a guessed horizon would break replay " +
-            "idempotence). Pass foldHorizon, or let the owning " +
-            "stream write a group manifest so the sets table's " +
-            "watermark can supply it."
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(why)
-          MaintainReport(None, None, skipped = Some(why))
-      }
-    } else if (hasDataFiles(fs, root))
-      MaintainReport(None, Some(compact(spark, dir, compactTargetBytes)))
-    else MaintainReport(None, None)
-  }
-
-  /** [[maintain]]'s group arm: fold every member in `g.fold` with the
-    * ONE shared horizon — `foldHorizon` when given, else the horizon
-    * source's replay watermark (the sets table: the highest batch id
-    * whose writes ever started; ids below it can never be
-    * re-delivered, on ANY sibling — the stream writes all members
-    * from the same foreachBatch). Missing members refuse (a stale
-    * manifest on a moved group must not fold half a group); a
-    * horizon source with no watermark is the log-loud skip (never
-    * guess). */
-  private def maintainGroup(spark: SparkSession, dir: String,
-                            g: MaintenanceGroup,
-                            foldHorizon: Option[Long])
-      : MaintainReport = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val missing = (g.horizonSource +: g.fold).distinct.filterNot { m =>
-      val p = new org.apache.hadoop.fs.Path(m)
-      p.getFileSystem(conf).exists(p)
-    }
-    require(missing.isEmpty,
-      s"maintain($dir): group manifest names missing member(s) " +
-        s"${missing.mkString(", ")} — the group moved or the " +
-        "manifest is stale; folding the remaining members alone " +
-        "would desynchronize the group. Restart the stream at the " +
-        "new paths (it rewrites the manifests) or delete the stale " +
-        "_graft_group.json.")
-    val hs = new org.apache.hadoop.fs.Path(g.horizonSource)
-    val horizon = foldHorizon.orElse(
-      Generations.lastBatchWatermark(hs.getFileSystem(conf), hs))
-    horizon match {
-      case Some(h) =>
-        MaintainReport(None, None,
-          group = g.fold.map(m =>
-            m -> Generations.foldBatches(spark, m, h)))
-      case None =>
-        val why = s"maintain($dir): group manifest's horizon source " +
-          s"${g.horizonSource} carries no replay watermark and no " +
-          "foldHorizon was given — group fold SKIPPED (a guessed " +
-          "horizon would break replay idempotence)."
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(why)
-        MaintainReport(None, None, skipped = Some(why))
-    }
-  }
-
-  private val GroupManifestFile = "_graft_group.json"
-
-  /** A maintenance GROUP: sibling tables one stream maintains
-    * together (the near-dup sets/band/pairs trio), recorded in each
-    * member's dir so [[maintain]] on ANY member ages the whole group.
-    * `horizonSource` is the member whose replay watermark supplies
-    * the shared fold horizon (the sets table — the one table the
-    * stream watermarks); `fold` is the members folded in lockstep
-    * (the pairs table appears only when its provenance mode lets it
-    * age — an entry dir absent from `fold` still triggers the
-    * group's fold, it just keeps its own leaves). */
-  final case class MaintenanceGroup(horizonSource: String,
-                                    fold: Seq[String])
-
-  /** Existence probe only — for guards that must refuse on ANY
-    * manifest, even a corrupt one (a parse there would fail-loud
-    * with the wrong diagnosis; the flat-mode sideDir guard). */
-  def hasGroupManifest(fs: org.apache.hadoop.fs.FileSystem,
-                       table: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(table, GroupManifestFile))
-
-  /** Member dir → its group manifest (None = not grouped). STRICT: a
-    * present-but-corrupt manifest throws — maintain() is a write
-    * path, and degrading to single-table maintenance would silently
-    * stop aging the siblings. */
-  def readGroupManifest(fs: org.apache.hadoop.fs.FileSystem,
-                        table: org.apache.hadoop.fs.Path)
-      : Option[MaintenanceGroup] = {
-    val p = new org.apache.hadoop.fs.Path(table, GroupManifestFile)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-      val hs = jsonStringsAfter(s, "\"horizon_source\"", 1)
-      val fold = jsonStringsAfter(s, "\"fold\"", Int.MaxValue)
-      if (hs.isEmpty || s.indexOf("\"fold\"") < 0)
-        throw new IllegalStateException(
-          s"corrupt group manifest at $p: $s")
-      Some(MaintenanceGroup(hs.head, fold))
-    }
-  }
-
-  /** Write the manifest via dot-temp + rename (the watermark-install
-    * rule: never truncate the live file in place). */
-  def writeGroupManifest(fs: org.apache.hadoop.fs.FileSystem,
-                         table: org.apache.hadoop.fs.Path,
-                         g: MaintenanceGroup): Unit = {
-    def esc(s: String) =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val body = s"""{"horizon_source": "${esc(g.horizonSource)}", """ +
-      s""""fold": [${g.fold.map(f => "\"" + esc(f) + "\"")
-        .mkString(", ")}]}"""
-    val tmp = new org.apache.hadoop.fs.Path(table,
-      "." + GroupManifestFile + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val dst = new org.apache.hadoop.fs.Path(table, GroupManifestFile)
-    val direct = try fs.rename(tmp, dst)
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!direct) {
-      fs.delete(dst, false)
-      if (!fs.rename(tmp, dst)) throw new IllegalStateException(
-        s"cannot install group manifest at $dst")
-    }
-  }
-
-  /** Keep every member's manifest current: read, rewrite only when
-    * absent or drifted (a moved/reconfigured group self-heals on the
-    * next trigger; an unchanged group costs one small read per
-    * member). Creates member dirs that don't exist yet (the pairs
-    * table before its first pair). */
-  def ensureGroupManifest(spark: SparkSession, members: Seq[String],
-                          g: MaintenanceGroup): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    members.distinct.foreach { m =>
-      val p = new org.apache.hadoop.fs.Path(m)
-      val fs = p.getFileSystem(conf)
-      val current =
-        try readGroupManifest(fs, p)
-        catch { case _: IllegalStateException => None } // corrupt: heal
-      if (!current.contains(g)) {
-        fs.mkdirs(p)
-        writeGroupManifest(fs, p, g)
-      }
-    }
-  }
-
-  /** The ≤`max` JSON string literals following `key` in `s` (first
-    * occurrence), scanned with real escape handling — paths are
-    * arbitrary strings, so the regex-over-JSON trick the int markers
-    * use is not safe here. Stops at the closing `]` for arrays; a
-    * bare string value reads one literal. */
-  private def jsonStringsAfter(s: String, key: String, max: Int)
-      : Seq[String] = {
-    val at = s.indexOf(key)
-    if (at < 0) return Nil
-    var i = at + key.length
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var inArray = false
-    var done = false
-    while (!done && i < s.length && out.size < max) {
-      s.charAt(i) match {
-        case '[' => inArray = true; i += 1
-        case ']' => done = true
-        case '"' =>
-          val sb = new StringBuilder
-          i += 1
-          while (i < s.length && s.charAt(i) != '"') {
-            if (s.charAt(i) == '\\' && i + 1 < s.length) {
-              sb.append(s.charAt(i + 1)); i += 2
-            } else { sb.append(s.charAt(i)); i += 1 }
-          }
-          i += 1
-          out += sb.toString
-          if (!inArray) done = true
-        case ',' | ':' | ' ' | '\t' | '\n' | '\r' => i += 1
-        case _ => done = true // next key / malformed — stop
-      }
-    }
-    out.toSeq
   }
 
   /** The three streaming-maintained instances + the store's marker
@@ -577,7 +272,7 @@ object Layout {
   /** The marker file's RAW contents (None = absent) — for guards that
     * must refuse on ANY marker, ours or foreign, with the found
     * contents in the diagnosis instead of a key-specific parse error
-    * (the flat-vs-bucketed mode guard). */
+    * (the near-dup stream's pairs-table guard, the posts marker). */
   def layoutMarkerRaw(fs: org.apache.hadoop.fs.FileSystem,
                       table: org.apache.hadoop.fs.Path)
       : Option[String] = {
@@ -669,16 +364,9 @@ object Layout {
     * side tables) and two-level `parent=…/bucketCol=V` (the posts
     * store's `created_month/key_bucket`) — shape is detected from
     * the single root listing. Missing buckets simply don't appear
-    * (hash buckets with no rows are never written). */
-  def bucketLeafDirs(spark: SparkSession, dir: String,
-                     bucketCol: String, values: Seq[Int])
-      : Seq[String] =
-    bucketLeafScan(spark, dir, bucketCol, values)._1
-
-  /** The single listing pass behind [[bucketLeafDirs]] /
-    * [[readBucketLeaves]]: (matching leaf dirs, whether ANY
-    * `bucketCol=` dir exists at either level, first UNBUCKETED data
-    * location or None). The second element distinguishes "the
+    * (hash buckets with no rows are never written). Returns
+    * (matching leaf dirs, whether ANY `bucketCol=` dir exists at
+    * either level, first UNBUCKETED data location or None). The second element distinguishes "the
     * requested buckets hold no rows" (normal: empty hash buckets are
     * never written) from "the table's data is not bucketed by
     * `bucketCol` at all"; the third catches the PARTIAL mix the
@@ -742,24 +430,13 @@ object Layout {
     }
   }
 
-  /** Bucket-pruned parquet read via [[bucketLeafDirs]]: Spark's file
-    * index is built over ONLY the requested leaves (`basePath` keeps
-    * the partition columns). None = no requested leaf exists (no
-    * matching rows — callers short-circuit with their empty frame).
-    * Semantics-preserving exactly when the caller's predicate
-    * implies `bucketCol ∈ values` — the same contract as the
-    * `isin`-prune forms, moved from plan time to listing time. */
-  def readBucketLeaves(spark: SparkSession, dir: String,
-                       bucketCol: String, values: Seq[Int])
-      : Option[DataFrame] = {
-    val dirs = bucketLeafDirs(spark, dir, bucketCol, values)
-    if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", dir).parquet(dirs: _*))
-  }
-
-  /** [[readBucketLeaves]] for a table KNOWN to be bucketed (a marked
-    * layout): additionally FAILS LOUD when the table holds data
-    * outside the `bucketCol=` partition tree — either NO bucket dir
+  /** Bucket-pruned parquet read of a table KNOWN to be bucketed (a
+    * marked layout) via [[bucketLeafScan]]: Spark's file index is
+    * built over ONLY the requested leaves (`basePath` keeps the
+    * partition columns) — semantics-preserving exactly when the
+    * caller's predicate implies `bucketCol ∈ values`. FAILS LOUD
+    * when the table holds data outside the `bucketCol=` partition
+    * tree — either NO bucket dir
     * exists anywhere (all-or-nothing mismatch) or SOME data sits
     * outside the bucket dirs (partial mix: a parent with raw files
     * and no `bucketCol=` children, a stray file at the root — e.g. a
@@ -793,28 +470,6 @@ object Layout {
             "layout does not match its marker; rebuild the table")
       None
     }
-  }
-
-  /** One data-bearing leaf dir of a (possibly partitioned) table —
-    * the cheap schema source for empty-result short-circuits (read
-    * it `filter(false)`): ~depth RPCs instead of a full listing. */
-  def firstDataLeaf(spark: SparkSession, dir: String)
-      : Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def descend(p: org.apache.hadoop.fs.Path): Option[String] = {
-      if (!fs.exists(p)) return None
-      val entries = fs.listStatus(p).filterNot { st =>
-        val nm = st.getPath.getName
-        nm.startsWith(".") || nm.startsWith("_")
-      }
-      if (entries.exists(st => !st.isDirectory &&
-          st.getPath.getName.endsWith(".parquet")))
-        Some(p.toString)
-      else entries.filter(_.isDirectory).toSeq.sortBy(_.getPath.getName)
-        .view.flatMap(st => descend(st.getPath)).headOption
-    }
-    descend(root)
   }
 
   /** Write an entity table with the feed-serving layout

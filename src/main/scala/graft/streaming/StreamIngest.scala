@@ -50,8 +50,8 @@ object StreamIngest {
     *     longer scan the table — the hash buckets of the batch's keys
     *     (and referenced parents) are computed first
     *     ([[batchKeyBuckets]]) and the stored view is read through
-    *     [[graft.state.Layout.readBucketLeaves]], so both the DRIVER
-    *     LISTING and the scan are bounded by the batch: O(batch keys ·
+    *     [[graft.state.Layout.BucketedTable.readBuckets]], so both the
+    *     DRIVER LISTING and the scan are bounded by the batch: O(batch keys ·
     *     table/n) per trigger, independent of table growth
     *     (metric-proven in StreamIngestSpec; the listing half measured
     *     in BENCH_NOTES r11).
@@ -163,8 +163,8 @@ object StreamIngest {
     // reply-index step would re-run the gate and fold over the rows
     // just written. With no cached plan reading `postsDir`, the write
     // invalidates nothing. The read is LEAF-ENUMERATED
-    // (Layout.readBucketLeaves): the batch's own key buckets name the
-    // exact leaf dirs, so Spark's file index is built over ≤|batch
+    // (Layout.BucketedTable.readBuckets): the batch's own key buckets
+    // name the exact leaf dirs, so Spark's file index is built over ≤|batch
     // keys| leaves instead of a full n×months listing. None of the
     // batch's buckets on disk ⇒ no stored row can match any batch
     // key: no stored view, as for a create.

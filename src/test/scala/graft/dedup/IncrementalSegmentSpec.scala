@@ -63,15 +63,18 @@ class IncrementalSegmentSpec extends SparkSpec {
     assert(!got.exists { case (n, o) => n < 10L && o < 10L })
   }
 
+  private def sets(df: org.apache.spark.sql.DataFrame) = df
+    .select(col("doc_id").as("id"),
+      graft.functions.Text.tokens(col("text")).as("toks"))
+    .select(col("id"),
+      graft.functions.Text.wordShingles(col("toks"), 3).as("sh"))
+
   test("probe-bands (persisted band side table) emits EXACTLY the " +
     "probe-sets pairs, including the latest-wins re-ingest rule") {
-    def sets(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id").as("id"),
-        graft.functions.Text.tokens(col("text")).as("toks"))
-      .select(col("id"),
-        graft.functions.Text.wordShingles(col("toks"), 3).as("sh"))
     val corpusSets = sets(corpus)
-    // the maintained artifacts: shingle sets + their banded projection
+    // the maintained artifacts: shingle sets + their banded projection,
+    // served whole by frame-backed providers (a superset of every
+    // requested bucket — the provider contract's safe direction)
     val corpusBands = Dedup.minhashBandRows(corpusSets, k = 32,
       bands = 8, seed = 42L)
     def run(d: org.apache.spark.sql.DataFrame) = {
@@ -79,9 +82,9 @@ class IncrementalSegmentSpec extends SparkSpec {
         k = 32, bands = 8, threshold = 0.2, seed = 42L)
         .as[(Long, Long, Long, Long)].collect().toSet
       graft.CacheTracker.releaseAll()
-      val viaBands = Dedup.minhashLshProbeBands(corpusBands,
-        corpusSets, sets(d), k = 32, bands = 8, threshold = 0.2,
-        seed = 42L)
+      val viaBands = Dedup.minhashLshProbeBandsPruned(_ => corpusBands,
+        _ => corpusSets, sets(d), k = 32, bands = 8, threshold = 0.2,
+        seed = 42L, bandBuckets = 8, setsBuckets = 4)
         .as[(Long, Long, Long, Long)].collect().toSet
       graft.CacheTracker.releaseAll()
       (viaSets, viaBands)
@@ -100,28 +103,30 @@ class IncrementalSegmentSpec extends SparkSpec {
   test("bucketed band + sets side tables: the fully-pruned probe " +
     "emits the probe-sets pairs and both scans carry their layout's " +
     "partition filter") {
-    def sets(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id").as("id"),
-        graft.functions.Text.tokens(col("text")).as("toks"))
-      .select(col("id"),
-        graft.functions.Text.wordShingles(col("toks"), 3).as("sh"))
     val corpusSets = sets(corpus)
+    // the side tables as the stream maintains them: batch 0 = the
+    // corpus, partitioned by (bucket, batch_id) under a modulus marker
     val dir = java.nio.file.Files
-      .createTempDirectory("band_side").toString + "/t"
-    Dedup.writeBandSideTable(
-      Dedup.minhashBandRows(corpusSets, k = 32, bands = 8,
-        seed = 42L), dir, n = 8)
-    // the marker round-trips the modulus (the probe's layout handshake)
-    assert(Dedup.bandSideBuckets(spark, dir).contains(8))
-    val setsDir = java.nio.file.Files
-      .createTempDirectory("sets_side").toString + "/t"
-    Dedup.writeSetsSideTable(corpusSets, setsDir, n = 4)
-    assert(Dedup.setsSideBuckets(spark, setsDir).contains(4))
-    val stored = spark.read.parquet(dir)
-    val storedSets = spark.read.parquet(setsDir)
-    val pruned = Dedup.minhashLshProbeBands(stored, storedSets,
+      .createTempDirectory("side_tables").toString
+    val setsDir = s"$dir/sets"; val bandDir = s"$dir/band"
+    graft.streaming.StreamNearDedup.probeAndAppend(spark, corpus, 0L,
+      setsDir, s"$dir/pairs", bandDir = bandDir, threshold = 0.2,
+      buckets = 8)
+    assert(graft.state.Layout.bandSideTable(bandDir).modulus(spark)
+      .contains(8))
+    assert(graft.state.Layout.setsSideTable(setsDir).modulus(spark)
+      .contains(8))
+    // providers that prune the stored tables with the probe's own
+    // bucket values as partition filters
+    val pruned = Dedup.minhashLshProbeBandsPruned(
+      bk => spark.read.parquet(bandDir)
+        .filter(col("band_bucket").isin(bk: _*))
+        .select("id", "band", "key"),
+      ib => spark.read.parquet(setsDir)
+        .filter(col("id_bucket").isin(ib: _*))
+        .select("id", "sh"),
       sets(delta), k = 32, bands = 8, threshold = 0.2, seed = 42L,
-      bandBuckets = Some(8), setsBuckets = Some(4))
+      bandBuckets = 8, setsBuckets = 8)
     val truth = Dedup.minhashLshProbeSets(corpusSets, sets(delta),
       k = 32, bands = 8, threshold = 0.2, seed = 42L)
       .as[(Long, Long, Long, Long)].collect().toSet
@@ -145,7 +150,7 @@ class IncrementalSegmentSpec extends SparkSpec {
       }.flatten
     val allScans = scans(pruned.queryExecution.executedPlan)
     val bandScan = allScans.filter(
-      _.relation.location.rootPaths.exists(_.toString.contains(dir)))
+      _.relation.location.rootPaths.exists(_.toString.contains(bandDir)))
     assert(bandScan.nonEmpty, "no scan over the band side table")
     assert(bandScan.forall(
         _.partitionFilters.exists(_.toString.contains("band_bucket"))),
@@ -157,74 +162,17 @@ class IncrementalSegmentSpec extends SparkSpec {
     assert(setsScan.forall(
         _.partitionFilters.exists(_.toString.contains("id_bucket"))),
       setsScan.map(_.partitionFilters.mkString(",")).mkString(" | "))
-    graft.CacheTracker.releaseAll()
-  }
-
-  test("probeBandsAt resolves each table's modulus from its own " +
-    "marker — correct across a rebuild that changed n (where a " +
-    "hardcoded modulus would silently mis-prune)") {
-    def sets(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("doc_id").as("id"),
-        graft.functions.Text.tokens(col("text")).as("toks"))
-      .select(col("id"),
-        graft.functions.Text.wordShingles(col("toks"), 3).as("sh"))
-    val corpusSets = sets(corpus)
-    val dir = java.nio.file.Files
-      .createTempDirectory("band_at").toString
-    val bandDir = s"$dir/band"; val setsDir = s"$dir/sets"
-    Dedup.writeBandSideTable(
-      Dedup.minhashBandRows(corpusSets, k = 32, bands = 8,
-        seed = 42L), bandDir, n = 8)
-    Dedup.writeSetsSideTable(corpusSets, setsDir, n = 4)
-    val truth = Dedup.minhashLshProbeSets(corpusSets, sets(delta),
-      k = 32, bands = 8, threshold = 0.2, seed = 42L)
+    // the stream's own leaf-enumerated providers give the same pairs
+    val viaLeaves = Dedup.minhashLshProbeBandsPruned(
+      bk => graft.state.Layout.bandSideTable(bandDir)
+        .readBuckets(spark, bk).get.select("id", "band", "key"),
+      ib => graft.state.Layout.setsSideTable(setsDir)
+        .readBuckets(spark, ib).get.select("id", "sh"),
+      sets(delta), k = 32, bands = 8, threshold = 0.2, seed = 42L,
+      bandBuckets = 8, setsBuckets = 8)
       .as[(Long, Long, Long, Long)].collect().toSet
     graft.CacheTracker.releaseAll()
-    def probeAt(): Set[(Long, Long, Long, Long)] = {
-      val r = Dedup.minhashLshProbeBandsAt(spark, bandDir, setsDir,
-        sets(delta), k = 32, bands = 8, threshold = 0.2, seed = 42L)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      graft.CacheTracker.releaseAll(); r
-    }
-    assert(probeAt() === truth)
-    // REBUILD both tables at different moduli: the overload re-reads
-    // the fresh markers, so the same call keeps matching truth — the
-    // caller-hardcoded-n failure mode cannot exist here
-    Dedup.writeBandSideTable(
-      Dedup.minhashBandRows(corpusSets, k = 32, bands = 8,
-        seed = 42L), bandDir, n = 16)
-    Dedup.writeSetsSideTable(corpusSets, setsDir, n = 8)
-    assert(Dedup.bandSideBuckets(spark, bandDir).contains(16))
-    assert(probeAt() === truth)
-    // MIXED markers (band bucketed, sets FLAT): the degrade branch —
-    // per-side Option pruning, same output (a swapped-moduli
-    // regression in the fallback forwarding would mis-prune here)
-    val flatSets = s"$dir/sets_flat"
-    corpusSets.write.mode("overwrite").parquet(flatSets)
-    locally {
-      val r = Dedup.minhashLshProbeBandsAt(spark, bandDir, flatSets,
-        sets(delta), k = 32, bands = 8, threshold = 0.2, seed = 42L)
-        .as[(Long, Long, Long, Long)].collect().toSet
-      graft.CacheTracker.releaseAll()
-      assert(r === truth)
-    }
-    // a MARKED table whose data is NOT bucket-partitioned refuses
-    // loud (strict facade read) instead of probing an empty corpus
-    val lying = s"$dir/sets_lying"
-    corpusSets.write.mode("overwrite").parquet(lying)
-    locally {
-      val p = new org.apache.hadoop.fs.Path(lying)
-      graft.state.Layout.writeLayoutMarker(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-        "sets_buckets", 8)
-    }
-    val e = intercept[IllegalStateException] {
-      Dedup.minhashLshProbeBandsAt(spark, bandDir, lying,
-        sets(delta), k = 32, bands = 8, threshold = 0.2, seed = 42L)
-        .count()
-    }
-    graft.CacheTracker.releaseAll()
-    assert(e.getMessage.contains("does not match its marker"))
+    assert(viaLeaves == truth)
   }
 
   test("segment dedup removes cross-doc boilerplate and rebuilds survivors") {

@@ -272,84 +272,6 @@ class PageHydrationPlanSpec extends SparkSpec {
     assert(kid == Seq("p60", "p180"))  // same page as childrenFor's
   }
 
-  test("childrenForIndexedAt (directory form): same results as the " +
-    "frame form, and BOTH file indexes hold only the probed leaf " +
-    "dirs — the listing never touches the rest of the table") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft-replyidx-at").toString
-    posts
-      .withColumn("created_month",
-        date_format(col("created_at"), "yyyy-MM"))
-      .withColumn("key_bucket", graft.state.Layout.authorBucket(
-        col("author"), 8))
-      .write.partitionBy("created_month", "key_bucket")
-      .parquet(s"$base/posts")
-    locally { // the store's modulus marker (the merge writes it)
-      val p = new org.apache.hadoop.fs.Path(s"$base/posts")
-      graft.state.Layout.writePostsMarker(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, 8)
-    }
-    val stored = spark.read.parquet(s"$base/posts")
-    graft.state.Layout.writeReplyIndex(stored, s"$base/idx", 8)
-    val page = stored.filter(col("permlink").isin("p2", "p5", "p7"))
-    val viaFrames = PostQueries.childrenForIndexed(page, stored,
-      spark.read.parquet(s"$base/idx"), 8, limit = 2,
-      sourceKeyBuckets = Some(8))
-    def kidsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("permlink"), transform(col("children"),
-          k => k.getField("permlink")).as("ks"))
-        .collect().map(r => r.getString(0) -> r.getSeq[String](1))
-        .toMap
-    val (viaDirs, ran) = executed(kidsOf(PostQueries.childrenForIndexedAt(
-      spark, page, s"$base/posts", s"$base/idx", limit = 2)))
-    assert(viaDirs == kidsOf(viaFrames))
-    assert(viaDirs("p2") == Seq("p3"))
-    assert(viaDirs("p7").isEmpty)
-    // the listing contract: every scan over the two tables is rooted
-    // at LEAF dirs (bucket-valued paths), never the table root — the
-    // file index was built from enumerated leaves only
-    val scans = ran.collect { case f: FileSourceScanExec => f }
-    val idxScans = scans.filter(_.relation.location.rootPaths
-      .exists(_.toString.contains(s"$base/idx")))
-    val storeScans = scans.filter(_.relation.location.rootPaths
-      .exists(_.toString.contains(s"$base/posts")))
-    assert(idxScans.nonEmpty && storeScans.nonEmpty)
-    assert(idxScans.forall(_.relation.location.rootPaths
-      .forall(_.toString.contains("reply_bucket="))),
-      idxScans.flatMap(_.relation.location.rootPaths).mkString(","))
-    // the page's own scan (caller-built from a full read) also roots
-    // at the store — the FETCH leg is the scan whose roots are all
-    // leaf dirs; it must exist, and enumerate ≤ |child keys| leaves
-    assert(storeScans.exists { s =>
-      val rp = s.relation.location.rootPaths
-      rp.nonEmpty && rp.forall(_.toString.contains("key_bucket="))
-    }, storeScans.flatMap(_.relation.location.rootPaths).mkString(","))
-    // a page whose parents have no replies: empty children, no error
-    // — and no store leaves are even enumerated for the fetch
-    val lonely = stored.filter(col("permlink") === "p7")
-    val none = PostQueries.childrenForIndexedAt(spark, lonely,
-      s"$base/posts", s"$base/idx", limit = 2)
-    assert(kidsOf(none)("p7").isEmpty)
-    // a LEGITIMATELY EMPTY store (marker-only dirs — a freshly
-    // bootstrapped pair before any data) answers the page with empty
-    // children instead of throwing (ADVICE r10)
-    val emptyBase = java.nio.file.Files
-      .createTempDirectory("graft-replyidx-empty").toString
-    Seq(s"$emptyBase/posts", s"$emptyBase/idx").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p)
-      if (d.endsWith("/posts"))
-        graft.state.Layout.writePostsMarker(fs, p, 8)
-      else graft.state.Layout.writeLayoutMarker(fs, p, "reply_buckets", 8)
-    }
-    val onEmpty = PostQueries.childrenForIndexedAt(spark,
-      lonely.select("author", "permlink"),
-      s"$emptyBase/posts", s"$emptyBase/idx", limit = 2)
-    assert(onEmpty.count() === 1)
-    assert(onEmpty.select(size(col("children"))).head().getInt(0) === 0)
-  }
-
   test("a served point read plans no single-partition exchange: its " +
     "limit sits above the JSON encoding, its scan is bucket-pruned") {
     val tables = graft.api.LayoutStore.tables(spark)

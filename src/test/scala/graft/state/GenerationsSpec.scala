@@ -49,7 +49,7 @@ class GenerationsSpec extends SparkSpec {
     def run(batchId: Long, docs: Seq[(Long, String)]): Long =
       StreamNearDedup.probeAndAppend(spark,
         docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8)
+        bandDir = band, threshold = 0.2, buckets = 8)
     def pairSet(): Set[(Long, Long, Long)] =
       spark.read.schema(pairSchema).parquet(pairs)
         .select(col("new_id"), col("old_id"), col("batch_id"))
@@ -123,7 +123,7 @@ class GenerationsSpec extends SparkSpec {
     def run(batchId: Long, docs: Seq[(Long, String)]): Long =
       StreamNearDedup.probeAndAppend(spark,
         docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8)
+        bandDir = band, threshold = 0.2, buckets = 8)
     def pairSet(): Set[(Long, Long, Long)] =
       spark.read.schema(pairSchema).parquet(pairs)
         .select(col("new_id"), col("old_id"), col("batch_id"))
@@ -150,100 +150,6 @@ class GenerationsSpec extends SparkSpec {
       .select("id").as[Long].collect().toSet === Set(1L))
   }
 
-  test("one-level shape (the pairs table) folds the same way — " +
-    "pair CONTENT survives, aged provenance collapses to the base " +
-    "(the documented trade)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("gen-flat").toString
-    val side = s"$dir/side"; val pairs = s"$dir/pairs"
-    def run(batchId: Long, docs: Seq[(Long, String)]): Long =
-      StreamNearDedup.probeAndAppend(spark,
-        docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2)
-    run(0L, Seq(1L -> base))
-    run(1L, Seq(10L -> base.replace("sigma", "SIGMA")))
-    run(2L, Seq(20L -> base.replace("tau", "TAU")))
-    val before = spark.read.schema(pairSchema).parquet(pairs)
-      .select(col("new_id"), col("old_id"), col("batch_id"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(before.nonEmpty)
-    val st = Generations.foldBatches(spark, pairs, horizon = 2L)
-    assert(st.foldedLeaves > 0)
-    val after = spark.read.schema(pairSchema).parquet(pairs)
-      .select(col("new_id"), col("old_id"), col("batch_id"))
-      .as[(Long, Long, Long)].collect().toSet
-    // pair content is intact; folded rows' provenance reads as the
-    // base generation (scaladoc: batch_id is the LAYOUT column)
-    assert(after.map(p => (p._1, p._2)) === before.map(p => (p._1, p._2)))
-    assert(after.map(_._3) ===
-      before.map(p => if (p._3 < 2L) Generations.BaseBatchId else p._3))
-    // the FLAT side table is also one-level batch_id — fold it too
-    val sideBefore = spark.read.parquet(side).select("id")
-      .as[Long].collect().toSet
-    Generations.foldBatches(spark, side, horizon = 2L)
-    assert(spark.read.parquet(side).select("id")
-      .as[Long].collect().toSet === sideBefore)
-  }
-
-  test("agePairs escape: provenance copied into the src_batch_id " +
-    "DATA column survives the pairs fold exactly") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("gen-agepairs").toString
-    val side = s"$dir/side"; val pairs = s"$dir/pairs"
-    val band = s"$dir/band"
-    def run(batchId: Long, docs: Seq[(Long, String)]): Long =
-      StreamNearDedup.probeAndAppend(spark,
-        docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8,
-        pairProvenanceCol = Some("src_batch_id"))
-    run(0L, Seq(1L -> base))
-    run(1L, Seq(10L -> base.replace("sigma", "SIGMA")))
-    run(2L, Seq(20L -> base.replace("tau", "TAU")))
-    val provSchema = "new_id long, old_id long, n_inter long, " +
-      "n_union long, src_batch_id long, batch_id long"
-    def rows(): Set[(Long, Long, Long, Long)] =
-      spark.read.schema(provSchema).parquet(pairs)
-        .select(col("new_id"), col("old_id"), col("src_batch_id"),
-          col("batch_id"))
-        .as[(Long, Long, Long, Long)].collect().toSet
-    val before = rows()
-    assert(before.nonEmpty)
-    // every pair's data-column provenance equals the layout column
-    // it was written under
-    assert(before.forall(p => p._3 == p._4))
-    val st = Generations.foldBatches(spark, pairs, horizon = 3L)
-    assert(st.foldedLeaves > 0)
-    val after = rows()
-    // the fold collapses the LAYOUT column to the base generation,
-    // but the provenance DATA column rides through untouched — the
-    // documented escape from the provenance-vs-aging trade
-    assert(after === before.map(p =>
-      (p._1, p._2, p._3, Generations.BaseBatchId)))
-    // the mode is pinned by the pair_provenance marker in BOTH
-    // directions: a provenance table refuses provenance-less writes…
-    val e1 = intercept[IllegalArgumentException] {
-      StreamNearDedup.probeAndAppend(spark,
-        Seq(30L -> base.replace("rho", "RHO")).toDF("doc_id", "text"),
-        3L, side, pairs, threshold = 0.2, bandDir = Some(band),
-        buckets = 8)
-    }
-    assert(e1.getMessage.contains("pair_provenance"))
-    // …and a provenance-less table refuses the flag (schema split →
-    // the fold would silently lose provenance)
-    val pairs2 = s"$dir/pairs2"
-    StreamNearDedup.probeAndAppend(spark,
-      Seq(40L -> base.replace("mu", "MU")).toDF("doc_id", "text"),
-      3L, side, pairs2, threshold = 0.2, bandDir = Some(band),
-      buckets = 8)
-    val e2 = intercept[IllegalArgumentException] {
-      StreamNearDedup.probeAndAppend(spark,
-        Seq(50L -> base.replace("xi", "XI")).toDF("doc_id", "text"),
-        4L, side, pairs2, threshold = 0.2, bandDir = Some(band),
-        buckets = 8, pairProvenanceCol = Some("src_batch_id"))
-    }
-    assert(e2.getMessage.contains("provenance"))
-  }
-
   test("crash recovery: staging without a commit record is " +
     "discarded; a committed fold is completed idempotently") {
     val dir = java.nio.file.Files
@@ -253,7 +159,7 @@ class GenerationsSpec extends SparkSpec {
     def run(batchId: Long, docs: Seq[(Long, String)]): Long =
       StreamNearDedup.probeAndAppend(spark,
         docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8)
+        bandDir = band, threshold = 0.2, buckets = 8)
     run(0L, Seq(1L -> base))
     run(1L, Seq(10L -> base.replace("sigma", "SIGMA")))
     val rows = spark.read.parquet(side).select("id")
@@ -341,6 +247,11 @@ class GenerationsSpec extends SparkSpec {
       Seq((1L, "x")).toDF("k", "v")
         .write.parquet(s"$f/batch_id=$b")
     assert(Generations.sampleLeavesPerBucket(spark, f) === 0.0)
+    // ...and the fold refuses that shape rather than rewrite the whole
+    // table through one task
+    val e = intercept[IllegalArgumentException] {
+      Generations.foldBatches(spark, f, horizon = 5L) }
+    assert(e.getMessage.contains("batch_id leaves at its root"))
   }
 
   test("watermark install: a failing delete+rename fallback still " +

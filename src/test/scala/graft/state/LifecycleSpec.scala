@@ -3,15 +3,15 @@ package graft.state
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** ONE lifecycle, THREE instances (VERDICT r9 #4): the reply index,
+/** ONE marker-and-read protocol, THREE instances: the reply index,
   * the dedup band table, and the dedup sets table each run the same
   * generation protocol — marker-before-data create, recorded-modulus
-  * wins, empty-generation sentinel, leaf-pruned reads, aging (fold
-  * for batch-appended layouts, file compaction for overwrite
-  * layouts), crash recovery. [[Layout.BucketedTable]] is the single
-  * home of that protocol; this spec drives the WHOLE lifecycle
-  * through the facade for all three layouts by construction, so a
-  * protocol regression cannot hide in any one instance. */
+  * wins, empty-generation sentinel, leaf-pruned reads.
+  * [[Layout.BucketedTable]] is the single home of the (bucketCol,
+  * markerKey) pairing; this spec drives the protocol for all three
+  * layouts by construction, so a regression cannot hide in any one
+  * instance. Aging is covered where it runs: the fold in
+  * GenerationsSpec, file compaction in ZorderCompactSpec. */
 class LifecycleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,20 +23,34 @@ class LifecycleSpec extends SparkSpec {
   private def rows(n: Int) =
     (0 until 40).map(i => (i.toLong, s"v$i", i % n))
 
+  private def fsp(t: Layout.BucketedTable) = {
+    val p = new org.apache.hadoop.fs.Path(t.dir)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def hasData(t: Layout.BucketedTable): Boolean = {
+    val (fs, p) = fsp(t)
+    Layout.hasDataFiles(fs, p)
+  }
+
+  private def rebuild(t: Layout.BucketedTable, n: Int)
+                     (write: => Unit): Unit =
+    Layout.rebuildWithMarker(spark, t.dir, t.markerKey, n)(write)
+
   for ((name, mk) <- layouts) {
     test(s"$name: marker-before-data create, recorded modulus wins, " +
       "crashed create is recognized, sentinel round-trips") {
       val t = mk(java.nio.file.Files
         .createTempDirectory(s"lc-$name").toString + "/t")
       // full rebuild: marker lands BEFORE data; modulus round-trips
-      t.rebuild(spark, 4) {
+      rebuild(t, 4) {
         rows(4).toDF("k", "v", t.bucketCol)
           .repartition(col(t.bucketCol))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(t.bucketCol).parquet(t.dir)
       }
-      assert(t.modulus(spark).contains(4) && t.hasData(spark))
+      assert(t.modulus(spark).contains(4) && hasData(t))
       // ensureMarker is a no-op on an existing marker (the
       // incremental-create rule: never truncate-rewrite per batch)
       t.ensureMarker(spark, 16)
@@ -46,30 +60,27 @@ class LifecycleSpec extends SparkSpec {
       val t2 = mk(java.nio.file.Files
         .createTempDirectory(s"lc2-$name").toString + "/t")
       intercept[RuntimeException] {
-        t2.rebuild(spark, 8) { sys.error("crash mid-create") }
+        rebuild(t2, 8) { sys.error("crash mid-create") }
       }
-      assert(t2.modulus(spark).contains(8) && !t2.hasData(spark))
+      assert(t2.modulus(spark).contains(8) && !hasData(t2))
       // empty generation: the sentinel distinguishes "bootstrap
       // completed with zero rows" from that crashed create
-      assert(!t2.hasEmptyGeneration(spark))
-      t2.markEmptyGeneration(spark)
-      assert(t2.hasEmptyGeneration(spark) && !t2.hasData(spark))
+      val (fs2, p2) = fsp(t2)
+      assert(!Layout.hasEmptyIndexMarker(fs2, p2))
+      Layout.writeEmptyIndexMarker(fs2, p2)
+      assert(Layout.hasEmptyIndexMarker(fs2, p2) && !hasData(t2))
       // a fresh rebuild clears the sentinel with the old generation
-      t2.rebuild(spark, 8) {
+      rebuild(t2, 8) {
         rows(8).toDF("k", "v", t2.bucketCol)
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(t2.bucketCol).parquet(t2.dir)
       }
-      assert(!t2.hasEmptyGeneration(spark) && t2.hasData(spark))
+      assert(!Layout.hasEmptyIndexMarker(fs2, p2) && hasData(t2))
       // a corrupt marker REFUSES strict consumers instead of
       // degrading (the write-path rule)
-      val (fs0, p0) = {
-        val p = new org.apache.hadoop.fs.Path(t2.dir)
-        (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      }
-      val out = fs0.create(
-        new org.apache.hadoop.fs.Path(p0, "_graft_layout.json"), true)
+      val out = fs2.create(
+        new org.apache.hadoop.fs.Path(p2, "_graft_layout.json"), true)
       out.write("{\"garbage\": true}".getBytes("UTF-8")); out.close()
       intercept[IllegalStateException] {
         t2.modulus(spark, strict = true) }
@@ -80,7 +91,7 @@ class LifecycleSpec extends SparkSpec {
       "buckets without touching the rest of the layout") {
       val t = mk(java.nio.file.Files
         .createTempDirectory(s"lc3-$name").toString + "/t")
-      t.rebuild(spark, 4) {
+      rebuild(t, 4) {
         rows(4).toDF("k", "v", t.bucketCol)
           .repartition(col(t.bucketCol))
           .write.mode("overwrite")
@@ -134,257 +145,5 @@ class LifecycleSpec extends SparkSpec {
       .write.parquet(s"$dir3/id_bucket=0/batch_id=0")
     assert(Layout.setsSideTable(dir3).readBuckets(spark, Seq(0))
       .get.count() === 1)
-  }
-
-  test("batch-appended instances (band, sets) age by FOLD through " +
-    "the shared facade; the overwrite instance (reply index) ages " +
-    "by file compaction — same facade, layout-appropriate op") {
-    // band/sets shape: bucket=X/batch_id=N leaves, folded to horizon
-    for ((name, mk) <- layouts.drop(1)) {
-      val t = mk(java.nio.file.Files
-        .createTempDirectory(s"lc4-$name").toString + "/t")
-      t.writeMarker(spark, 4)
-      for (b <- 0L to 2L)
-        rows(4).map { case (k, v, bk) => (k + b * 100, v, bk) }
-          .toDF("k", "v", t.bucketCol)
-          .withColumn("batch_id", lit(b))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(t.bucketCol, "batch_id").parquet(t.dir)
-      val before = spark.read.parquet(t.dir).select("k")
-        .as[Long].collect().toSet
-      val st = t.fold(spark, horizon = 2L)
-      assert(st.foldedLeaves > 0, name)
-      t.recover(spark) // clean-table recover is a no-op
-      val after = spark.read.parquet(t.dir)
-      assert(after.select("k").as[Long].collect().toSet === before,
-        name)
-      assert(after.filter(col("batch_id").between(0L, 1L)).count()
-        === 0, name)
-      assert(after.filter(
-        col("batch_id") === Generations.BaseBatchId).count() > 0, name)
-    }
-    // reply-index shape: per-bucket dirs rewritten in place — no
-    // batch leaves to fold (fold is a structural no-op), small files
-    // bin-pack via compactFiles
-    val t = Layout.replyIndexTable(java.nio.file.Files
-      .createTempDirectory("lc4-reply").toString + "/t")
-    t.rebuild(spark, 2) {
-      // two writes → ≥2 files per bucket dir (append mode mimics
-      // repeated per-trigger refreshes of the same bucket)
-      val df = rows(2).toDF("k", "v", t.bucketCol)
-      df.write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy(t.bucketCol).mode("overwrite").parquet(t.dir)
-      df.write.partitionBy(t.bucketCol).mode("append").parquet(t.dir)
-    }
-    assert(t.fold(spark, horizon = Long.MaxValue).foldedLeaves === 0)
-    val before = spark.read.parquet(t.dir).count()
-    val (filesBefore, filesAfter) =
-      t.compactFiles(spark, targetBytes = 1L << 30)
-    assert(filesAfter < filesBefore)
-    assert(spark.read.parquet(t.dir).count() === before)
-    assert(t.modulus(spark).contains(2)) // compaction keeps the marker
-  }
-
-  test("maintain(): ONE entry, layout-inspected — batch-appended " +
-    "instances fold (horizon from arg or their own watermark), the " +
-    "overwrite instance bin-packs; rows survive either op") {
-    // batch-appended (band, sets): maintain == recover + fold
-    for ((name, mk) <- layouts.drop(1)) {
-      val t = mk(java.nio.file.Files
-        .createTempDirectory(s"lc5-$name").toString + "/t")
-      t.writeMarker(spark, 4)
-      for (b <- 0L to 2L)
-        rows(4).map { case (k, v, bk) => (k + b * 100, v, bk) }
-          .toDF("k", "v", t.bucketCol)
-          .withColumn("batch_id", lit(b))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(t.bucketCol, "batch_id").parquet(t.dir)
-      val before = spark.read.parquet(t.dir).select("k")
-        .as[Long].collect().toSet
-      // no horizon and no watermark: the fold is SKIPPED, not
-      // guessed — and the skip is REPORT-MANDATORY, never a quiet
-      // ran=false (a cron that never reads the report still gets the
-      // warn log; one that does gets the why)
-      val skippedReport = t.maintain(spark)
-      assert(!skippedReport.ran &&
-        skippedReport.skipped.exists(_.contains("no replay " +
-          "watermark")), name)
-      // explicit horizon folds
-      val r = t.maintain(spark, foldHorizon = Some(2L))
-      assert(r.fold.exists(_.foldedLeaves > 0) &&
-        r.compacted.isEmpty, name)
-      assert(spark.read.parquet(t.dir).select("k")
-        .as[Long].collect().toSet === before, name)
-      // a table's OWN watermark supplies the horizon when present
-      val t2 = mk(java.nio.file.Files
-        .createTempDirectory(s"lc5b-$name").toString + "/t")
-      t2.writeMarker(spark, 4)
-      for (b <- 0L to 1L)
-        rows(4).toDF("k", "v", t2.bucketCol)
-          .withColumn("batch_id", lit(b))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(t2.bucketCol, "batch_id").parquet(t2.dir)
-      locally {
-        val p = new org.apache.hadoop.fs.Path(t2.dir)
-        Generations.writeLastBatchWatermark(
-          p.getFileSystem(spark.sparkContext.hadoopConfiguration),
-          p, 1L)
-      }
-      // horizon = watermark 1: only batch 0's leaves fold; batch 1
-      // (replayable) survives
-      assert(t2.maintain(spark).fold.exists(_.foldedLeaves > 0), name)
-      assert(spark.read.parquet(t2.dir)
-        .select("batch_id").distinct().as[Long].collect().toSet ===
-        Set(Generations.BaseBatchId, 1L), name)
-      // a fully-folded store stays on the fold path (a zero-leaf
-      // structural no-op), never the overwrite branch
-      val r2 = t2.maintain(spark, foldHorizon = Some(1L))
-      assert(r2.fold.exists(_.foldedLeaves === 0) &&
-        r2.compacted.isEmpty, name)
-    }
-    // overwrite instance (reply index): maintain == compact
-    val t = Layout.replyIndexTable(java.nio.file.Files
-      .createTempDirectory("lc5-reply").toString + "/t")
-    t.rebuild(spark, 2) {
-      val df = rows(2).toDF("k", "v", t.bucketCol)
-      df.write.option("partitionOverwriteMode", "dynamic")
-        .partitionBy(t.bucketCol).mode("overwrite").parquet(t.dir)
-      df.write.partitionBy(t.bucketCol).mode("append").parquet(t.dir)
-    }
-    val before = spark.read.parquet(t.dir).count()
-    val r = t.maintain(spark)
-    assert(r.compacted.exists { case (b, a) => a < b } &&
-      r.fold.isEmpty)
-    assert(spark.read.parquet(t.dir).count() === before)
-    assert(t.modulus(spark).contains(2))
-  }
-
-  test("group manifest: maintain() on ANY member of a live near-dup " +
-    "group ages the WHOLE group in lockstep with the sets table's " +
-    "watermark as the shared horizon — incl. the band/pairs tables " +
-    "that carry no watermark of their own") {
-    import spark.implicits._
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota " +
-      "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val dir = java.nio.file.Files
-      .createTempDirectory("lc-group").toString
-    val side = s"$dir/side"; val pairs = s"$dir/pairs"
-    val band = s"$dir/band"
-    def run(b: Long, docs: Seq[(Long, String)]): Long =
-      graft.streaming.StreamNearDedup.probeAndAppend(spark,
-        docs.toDF("doc_id", "text"), b, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8,
-        pairProvenanceCol = Some("src_batch_id"))
-    run(0L, Seq(1L -> base))
-    run(1L, Seq(10L -> base.replace("sigma", "SIGMA")))
-    run(2L, Seq(20L -> base.replace("tau", "TAU")))
-    val sch = "new_id long, old_id long, n_inter long, " +
-      "n_union long, src_batch_id long, batch_id long"
-    val history = spark.read.schema(sch).parquet(pairs)
-      .select("new_id", "old_id", "src_batch_id")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(history.nonEmpty)
-    // ONE maintenance entry, through the member that used to have to
-    // skip (the band table has no watermark): the manifest supplies
-    // the siblings and the sets table's watermark (2) the horizon
-    val r = Layout.maintain(spark, band)
-    assert(r.group.map(_._1).toSet === Set(side, band, pairs))
-    assert(r.group.forall(_._2.foldedLeaves > 0), r.group.toString)
-    assert(r.fold.isEmpty && r.compacted.isEmpty && r.ran)
-    // all three folded in LOCKSTEP: batches < 2 in the base
-    // generation, batch 2 (replayable) preserved — and nothing lost
-    for (d <- Seq(side, band, pairs)) {
-      val got = spark.read.parquet(d).select("batch_id").distinct()
-        .as[Long].collect().toSet
-      assert(got === Set(Generations.BaseBatchId, 2L), d)
-    }
-    assert(spark.read.schema(sch).parquet(pairs)
-      .select("new_id", "old_id", "src_batch_id")
-      .as[(Long, Long, Long)].collect().toSet === history)
-    // the stream continues on the maintained group
-    assert(run(3L, Seq(30L -> base.replace("rho", "RHO"))) === 3L)
-  }
-
-  test("group manifest: an UN-AGED pairs table (no provenance mode) " +
-    "still carries the manifest — entering through it ages the " +
-    "siblings while its own provenance leaves stay untouched") {
-    import spark.implicits._
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota " +
-      "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val dir = java.nio.file.Files
-      .createTempDirectory("lc-group2").toString
-    val side = s"$dir/side"; val pairs = s"$dir/pairs"
-    val band = s"$dir/band"
-    def run(b: Long, docs: Seq[(Long, String)]): Long =
-      graft.streaming.StreamNearDedup.probeAndAppend(spark,
-        docs.toDF("doc_id", "text"), b, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8)
-    run(0L, Seq(1L -> base))
-    run(1L, Seq(10L -> base.replace("sigma", "SIGMA")))
-    run(2L, Seq(20L -> base.replace("tau", "TAU")))
-    val r = Layout.maintain(spark, pairs)
-    // the pairs table is NOT in the fold list (its batch_id leaves
-    // are the provenance contract) but its manifest folds the
-    // siblings
-    assert(r.group.map(_._1).toSet === Set(side, band))
-    for (d <- Seq(side, band))
-      assert(spark.read.parquet(d).select("batch_id").distinct()
-        .as[Long].collect().toSet ===
-        Set(Generations.BaseBatchId, 2L), d)
-    // pairs: per-batch leaves intact (batches 1 and 2 emitted pairs)
-    assert(spark.read.parquet(pairs).select("batch_id").distinct()
-      .as[Long].collect().toSet === Set(1L, 2L))
-  }
-
-  test("group manifest guards: corrupt manifest refuses, a missing " +
-    "member refuses (stale manifest on a moved group), a horizonless " +
-    "group skips log-loud with the reason, and exotic paths survive " +
-    "the write/read round-trip") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("lc-group3").toString
-    val conf = spark.sparkContext.hadoopConfiguration
-    val t = new org.apache.hadoop.fs.Path(s"$dir/t")
-    val fs = t.getFileSystem(conf)
-    fs.mkdirs(t)
-    // corrupt: strict refusal — degrading to single-table
-    // maintenance would silently stop aging the siblings
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(t, "_graft_group.json"), true)
-    out.write("{\"garbage\"".getBytes("UTF-8")); out.close()
-    intercept[IllegalStateException] { Layout.maintain(spark, s"$dir/t") }
-    // missing member: never fold half a group
-    val m1 = s"$dir/m1"; val gone = s"$dir/gone"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(m1))
-    Layout.writeGroupManifest(fs, new org.apache.hadoop.fs.Path(m1),
-      Layout.MaintenanceGroup(m1, Seq(m1, gone)))
-    val e = intercept[IllegalArgumentException] {
-      Layout.maintain(spark, m1) }
-    assert(e.getMessage.contains("missing member"))
-    // horizonless group (watermark hand-deleted): log-loud skip,
-    // never a guessed horizon
-    val m2 = s"$dir/m2"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(m2))
-    Layout.writeGroupManifest(fs, new org.apache.hadoop.fs.Path(m2),
-      Layout.MaintenanceGroup(m2, Seq(m2)))
-    val r = Layout.maintain(spark, m2)
-    assert(!r.ran && r.skipped.exists(_.contains("no replay " +
-      "watermark")))
-    // ...but an explicit foldHorizon overrides the missing watermark
-    import spark.implicits._
-    Seq((1L, "x")).toDF("k", "v")
-      .write.parquet(s"$m2/id_bucket=0/batch_id=0")
-    Seq((2L, "y")).toDF("k", "v")
-      .write.parquet(s"$m2/id_bucket=0/batch_id=1")
-    val r2 = Layout.maintain(spark, m2, foldHorizon = Some(1L))
-    assert(r2.group.exists { case (d, st) =>
-      d == m2 && st.foldedLeaves === 1 })
-    // exotic path escaping round-trips (quotes + backslashes)
-    val weird = Layout.MaintenanceGroup(
-      "/tmp/we\"ird\\path", Seq("/tmp/a\"b", "/tmp/c\\d"))
-    Layout.writeGroupManifest(fs, t, weird)
-    assert(Layout.readGroupManifest(fs, t).contains(weird))
   }
 }

@@ -4,13 +4,37 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Streaming incremental near-dup (foreachBatch unit): cross-batch
-  * probing, intra-batch pairs, replay idempotence. */
+  * probing, intra-batch pairs, replay idempotence, layout guards and
+  * the auto fold. */
 class StreamNearDedupSpec extends SparkSpec {
   import spark.implicits._
 
   private val base =
     "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
+
+  private val pairSchema =
+    "new_id long, old_id long, n_inter long, n_union long, batch_id long"
+
+  // zero-pair batches never create the pairs table — readers supply
+  // the schema (the operator's documented contract)
+  private def pairSet(pairs: String): Set[(Long, Long, Long)] =
+    spark.read.schema(pairSchema).parquet(pairs)
+      .select(col("new_id"), col("old_id"), col("batch_id"))
+      .as[(Long, Long, Long)].collect().toSet
+
+  /** Writes one JSON doc file per batch with an explicit mtime: the
+    * file source orders batches by modification time. */
+  private def writeDocs(in: String, name: String, mtime: Long,
+                        docs: Seq[(Long, String)]): Unit = {
+    new java.io.File(in).mkdirs()
+    val f = new java.io.File(in, name)
+    val w = new java.io.PrintWriter(f)
+    try docs.foreach { case (id, t) =>
+      w.println(s"""{"doc_id": $id, "text": "$t"}""") }
+    finally w.close()
+    f.setLastModified(mtime)
+  }
 
   test("batches probe the accumulated corpus; replay overwrites in place") {
     val dir = java.nio.file.Files
@@ -19,16 +43,7 @@ class StreamNearDedupSpec extends SparkSpec {
     def run(batchId: Long, docs: Seq[(Long, String)]): Long =
       StreamNearDedup.probeAndAppend(spark,
         docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2)
-    // zero-pair batches never create the pairs table — readers
-    // supply the schema (the operator's documented contract)
-    def pairSet(): Set[(Long, Long, Long)] =
-      spark.read.schema(
-          "new_id long, old_id long, n_inter long, n_union long, " +
-            "batch_id long")
-        .parquet(pairs)
-        .select(col("new_id"), col("old_id"), col("batch_id"))
-        .as[(Long, Long, Long)].collect().toSet
+        bandDir = s"$dir/band", threshold = 0.2, buckets = 8)
 
     // batch 0: two unrelated docs — no pairs, side table seeded
     assert(run(0L, Seq(1L -> base,
@@ -39,12 +54,12 @@ class StreamNearDedupSpec extends SparkSpec {
     // batch 1: near-dup of doc 1 + fresh doc — one cross-batch pair
     run(1L, Seq(10L -> base.replace("sigma", "SIGMA"),
       11L -> ("foo bar " * 12).trim))
-    assert(pairSet() === Set((10L, 1L, 1L)))
+    assert(pairSet(pairs) === Set((10L, 1L, 1L)))
 
     // batch 2: exact dup of 11 twice — cross-batch AND intra-batch
     run(2L, Seq(20L -> ("foo bar " * 12).trim,
       21L -> ("foo bar " * 12).trim))
-    assert(pairSet() === Set((10L, 1L, 1L),
+    assert(pairSet(pairs) === Set((10L, 1L, 1L),
       (20L, 11L, 2L), (21L, 11L, 2L), (20L, 21L, 2L)))
     assert(spark.read.parquet(side).count() === 6)
 
@@ -52,53 +67,70 @@ class StreamNearDedupSpec extends SparkSpec {
     // and the batch does not pair against its own first run
     run(2L, Seq(20L -> ("foo bar " * 12).trim,
       21L -> ("foo bar " * 12).trim))
-    assert(pairSet() === Set((10L, 1L, 1L),
+    assert(pairSet(pairs) === Set((10L, 1L, 1L),
       (20L, 11L, 2L), (21L, 11L, 2L), (20L, 21L, 2L)))
     assert(spark.read.parquet(side).count() === 6)
   }
 
-  test("bucketed mode (bandDir): same pair history as flat mode, " +
-    "replay-idempotent, both layouts maintained per batch") {
+  test("same pair history as Dedup.minhashLshProbeSets over the " +
+    "accumulated corpus, through identical and drifted replays; " +
+    "both side tables maintained per batch") {
+    import StreamNearDedup.Defaults
     val dir = java.nio.file.Files
-      .createTempDirectory("snd-bucketed").toString
+      .createTempDirectory("snd-parity").toString
     val side = s"$dir/side"; val pairs = s"$dir/pairs"
     val band = s"$dir/band"
-    def run(batchId: Long, docs: Seq[(Long, String)]): Long =
-      StreamNearDedup.probeAndAppend(spark,
-        docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8)
-    def pairSet(): Set[(Long, Long, Long)] =
-      spark.read.schema(
-          "new_id long, old_id long, n_inter long, n_union long, " +
-            "batch_id long")
-        .parquet(pairs)
-        .select(col("new_id"), col("old_id"), col("batch_id"))
-        .as[(Long, Long, Long)].collect().toSet
-
-    // the flat-mode spec's exact batch script — the bucketed mode
-    // must tell the same story
-    assert(run(0L, Seq(1L -> base,
+    def sets(docs: Seq[(Long, String)]) = docs.toDF("doc_id", "text")
+      .select(col("doc_id").as("id"),
+        graft.functions.Text.tokens(col("text")).as("toks"))
+      .select(col("id"), graft.functions.Text.wordShingles(col("toks"),
+        Defaults.ShingleN).as("sh"))
+    // the reference: each batch's docs as last delivered, and the
+    // batch reference probe's pairs for that delivery against every
+    // OTHER batch's docs (a replay replaces its batch's entry)
+    val docsOf = scala.collection.mutable.Map.empty[Long, Seq[(Long, String)]]
+    val want = scala.collection.mutable.Map.empty[Long,
+      Set[(Long, Long, Long, Long)]]
+    def step(b: Long, docs: Seq[(Long, String)]): Unit = {
+      val corpus = docsOf.toSeq.filter(_._1 != b).flatMap(_._2)
+      want(b) = graft.dedup.Dedup.minhashLshProbeSets(sets(corpus),
+          sets(docs), Defaults.K, Defaults.Bands, 0.2, Defaults.Seed)
+        .as[(Long, Long, Long, Long)].collect().toSet
+      graft.CacheTracker.releaseAll()
+      docsOf(b) = docs
+      StreamNearDedup.probeAndAppend(spark, docs.toDF("doc_id", "text"),
+        b, side, pairs, bandDir = band, threshold = 0.2, buckets = 8)
+      val got = spark.read.schema(pairSchema).parquet(pairs)
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq
+        .groupBy(_._5).map { case (bid, rs) =>
+          bid -> rs.map(r => (r._1, r._2, r._3, r._4)).toSet }
+      assert(got === want.filter(_._2.nonEmpty).toMap, s"after batch $b")
+    }
+    step(0L, Seq(1L -> base,
       2L -> "completely different words entirely here nothing shared"))
-      === 0L)
-    run(1L, Seq(10L -> base.replace("sigma", "SIGMA"),
+    step(1L, Seq(10L -> base.replace("sigma", "SIGMA"),
       11L -> ("foo bar " * 12).trim))
-    assert(pairSet() === Set((10L, 1L, 1L)))
-    run(2L, Seq(20L -> ("foo bar " * 12).trim,
+    step(2L, Seq(20L -> ("foo bar " * 12).trim,
       21L -> ("foo bar " * 12).trim))
-    val want = Set((10L, 1L, 1L),
-      (20L, 11L, 2L), (21L, 11L, 2L), (20L, 21L, 2L))
-    assert(pairSet() === want)
-    // replay batch 2: nothing duplicates, no self-pairs
-    run(2L, Seq(20L -> ("foo bar " * 12).trim,
+    assert(want(2L).size === 3)
+    // identical replay of batch 2
+    step(2L, Seq(20L -> ("foo bar " * 12).trim,
       21L -> ("foo bar " * 12).trim))
-    assert(pairSet() === want)
-    // both layouts hold exactly the corpus, partitioned by their
-    // bucket: 6 set rows; 8 band rows per doc (bands=8 default)
+    // drifted replay of batch 2: different rows, different pairs
+    step(2L, Seq(22L -> base.replace("mu", "MU"),
+      23L -> "nothing resembling any stored document at all"))
+    assert(want(2L).map(p => (p._1, p._2)) === Set((22L, 1L), (22L, 10L)))
+    step(3L, Seq(30L -> base.replace("rho", "RHO"),
+      31L -> ("foo bar " * 12).trim))
+    // both layouts hold exactly the corpus as last delivered,
+    // partitioned by their bucket: one set row and `bands` band rows
+    // per doc
+    val ids = docsOf.values.flatten.map(_._1).toSet
     val sideT = spark.read.parquet(side)
-    assert(sideT.count() === 6 &&
-      sideT.columns.contains("id_bucket"))
+    assert(sideT.select("id").as[Long].collect().toSet === ids &&
+      sideT.count() === ids.size && sideT.columns.contains("id_bucket"))
     val bandT = spark.read.parquet(band)
-    assert(bandT.count() === 48 &&
+    assert(bandT.count() === ids.size * Defaults.Bands &&
       bandT.columns.contains("band_bucket"))
   }
 
@@ -108,21 +140,36 @@ class StreamNearDedupSpec extends SparkSpec {
       .createTempDirectory("snd-guards").toString
     val side = s"$dir/side"; val pairs = s"$dir/pairs"
     val band = s"$dir/band"
-    def run(batchId: Long, docs: Seq[(Long, String)],
-            bd: Option[String] = Some(band), n: Int = 8): Long =
+    def run(batchId: Long, docs: Seq[(Long, String)], n: Int = 8,
+            sd: String = side, bd: String = band,
+            pd: String = pairs): Long =
       StreamNearDedup.probeAndAppend(spark,
-        docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = bd, buckets = n)
+        docs.toDF("doc_id", "text"), batchId, sd, pd, bandDir = bd,
+        threshold = 0.2, buckets = n)
     run(0L, Seq(1L -> base))
     // restart with a different modulus: silent mis-prune forbidden
     val e1 = intercept[IllegalArgumentException] {
       run(1L, Seq(2L -> base), n = 1024) }
     assert(e1.getMessage.contains("moduli must match"))
-    // restart in FLAT mode against the bucketed table: forbidden
-    // (flat batch_id partitions would corrupt the bucket-major tree)
+    // a side table that holds data without its marker (a table
+    // another layout wrote — here a one-level batch_id table) is
+    // refused, for the sets and the band table alike
+    val foreign = s"$dir/foreign"
+    Seq((5L, Seq("a b c"))).toDF("id", "sh")
+      .write.parquet(s"$foreign/batch_id=0")
     val e2 = intercept[IllegalArgumentException] {
-      run(1L, Seq(2L -> base), bd = None) }
-    assert(e2.getMessage.contains("bucketed-mode table"))
+      run(1L, Seq(2L -> base), sd = foreign) }
+    assert(e2.getMessage.contains("no sets_buckets marker"))
+    val e3 = intercept[IllegalArgumentException] {
+      run(1L, Seq(2L -> base), bd = foreign) }
+    assert(e3.getMessage.contains("no band_buckets marker"))
+    // a pairs dir carrying any layout marker is another layout's
+    // table: refused before anything is written or cleared
+    val e4 = intercept[IllegalArgumentException] {
+      run(0L, Seq(1L -> base), pd = band) }
+    assert(e4.getMessage.contains("carries a layout marker"))
+    assert(spark.read.parquet(band).select("id").as[Long]
+      .collect().toSet === Set(1L))
     // replay batch 0 with DIFFERENT rows (non-replayable source):
     // the first attempt's rows must not survive as ghosts — doc 1's
     // sets/bands hash to buckets doc 99 never touches
@@ -133,12 +180,10 @@ class StreamNearDedupSpec extends SparkSpec {
     assert(sideIds === Set(99L), s"ghost rows: $sideIds")
     assert(spark.read.parquet(band)
       .select("id").as[Long].collect().toSet === Set(99L))
-    // ...and the PAIRS table: batch 1 emits a pair, then its drifted
+    // ...and the PAIRS table: batch 2 emits a pair, then its drifted
     // replay emits none — the first attempt's pair must not survive
     // as a ghost referencing scrubbed rows
-    def batch2Pairs(): Long = spark.read.schema(
-        "new_id long, old_id long, n_inter long, n_union long, " +
-          "batch_id long")
+    def batch2Pairs(): Long = spark.read.schema(pairSchema)
       .parquet(pairs).filter(col("batch_id") === 2L).count()
     run(1L, Seq(100L -> base))
     run(2L, Seq(200L -> base.replace("mu", "MU")))
@@ -147,30 +192,6 @@ class StreamNearDedupSpec extends SparkSpec {
       "nothing resembling any stored document at all"))
     assert(batch2Pairs() === 0L,
       "pairs ghost survived a drifted replay")
-    // and the flat mode refuses nothing it owns: a fresh flat table
-    // then rejects a bucketed restart (the reverse switch)
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("snd-guards2").toString
-    StreamNearDedup.probeAndAppend(spark,
-      Seq(1L -> base).toDF("doc_id", "text"), 0L,
-      s"$dir2/side", s"$dir2/pairs", threshold = 0.2)
-    val e3 = intercept[IllegalArgumentException] {
-      StreamNearDedup.probeAndAppend(spark,
-        Seq(2L -> base).toDF("doc_id", "text"), 1L,
-        s"$dir2/side", s"$dir2/pairs", threshold = 0.2,
-        bandDir = Some(s"$dir2/band"), buckets = 8) }
-    assert(e3.getMessage.contains("flat mode"))
-    // a bucketed store whose layout marker was HAND-DELETED still
-    // refuses a flat restart: the group manifest alone proves the
-    // dir belongs to a maintained bucketed tree
-    val smp = new org.apache.hadoop.fs.Path(side,
-      "_graft_layout.json")
-    val sfs = smp.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(sfs.delete(smp, false))
-    val e4 = intercept[IllegalArgumentException] {
-      run(3L, Seq(300L -> base), bd = None) }
-    assert(e4.getMessage.contains("maintenance-group manifest"))
   }
 
   test("run(): a real StreamingQuery end-to-end — per-file batches, " +
@@ -181,106 +202,54 @@ class StreamNearDedupSpec extends SparkSpec {
     val in = s"$dir/in"; val side = s"$dir/side"
     val pairs = s"$dir/pairs"; val band = s"$dir/band"
     val cp = s"$dir/cp"
-    new java.io.File(in).mkdirs()
-    def writeDocs(name: String, docs: Seq[(Long, String)]): Unit = {
-      val f = new java.io.File(in, name)
-      val w = new java.io.PrintWriter(f)
-      try docs.foreach { case (id, t) =>
-        w.println(s"""{"doc_id": $id, "text": "$t"}""") }
-      finally w.close()
-      // file sources order by modification time — keep batches apart
-      f.setLastModified(System.currentTimeMillis())
-      Thread.sleep(1100)
-    }
-    writeDocs("b0.json", Seq(1L -> base,
+    // buckets=1: every batch adds one leaf to the one bucket of each
+    // side table, so the auto cadence (8 leaves/bucket) fires exactly
+    // at batch 7, folding batches 0-6 into the base generation
+    val t0 = System.currentTimeMillis() - 600000L
+    def filler(b: Int) = s"doc$b alpha$b beta$b gamma$b delta$b"
+    writeDocs(in, "b00.json", t0, Seq(1L -> base,
       2L -> "completely different words entirely here nothing shared"))
-    writeDocs("b1.json", Seq(10L -> base.replace("sigma", "SIGMA")))
-    writeDocs("b2.json", Seq(20L -> base.replace("tau", "TAU")))
-    def runOnce(): Unit = {
-      val q = StreamNearDedup.run(spark, in, side, pairs, cp,
+    for (b <- 1 to 6)
+      writeDocs(in, f"b$b%02d.json", t0 + b * 2000L,
+        Seq(b * 10L -> filler(b)))
+    writeDocs(in, "b07.json", t0 + 14000L,
+      Seq(70L -> base.replace("sigma", "SIGMA")))
+    writeDocs(in, "b08.json", t0 + 16000L, Seq(80L -> filler(8)))
+    def runOnce(): Unit =
+      StreamNearDedup.run(spark, in, side, pairs, cp, bandDir = band,
         trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        maxFilesPerTrigger = 1, threshold = 0.2,
-        bandDir = Some(band), buckets = 8, foldEvery = Some(2),
-        agePairs = true)
-      q.awaitTermination()
-    }
+        maxFilesPerTrigger = 1, threshold = 0.2, buckets = 1)
+        .awaitTermination()
     runOnce()
-    val pairsSchema =
-      "new_id long, old_id long, n_inter long, n_union long, " +
-        "src_batch_id long, batch_id long"
-    def undirected(): Set[Set[Long]] = spark.read.schema(pairsSchema)
-      .parquet(pairs).select("new_id", "old_id")
-      .as[(Long, Long)].collect().toSet.map((p: (Long, Long)) =>
-        Set(p._1, p._2))
-    assert(undirected() === Set(Set(1L, 10L), Set(1L, 20L),
-      Set(10L, 20L)))
-    // foldEvery=2 fired at batch 2 with horizon 2: batches 0 and 1
-    // are in the base generation, batch 2's leaves survive
-    val sideT = spark.read.parquet(side)
-    assert(sideT.filter(col("batch_id") ===
-        graft.state.Generations.BaseBatchId)
-      .select("id").as[Long].collect().toSet === Set(1L, 2L, 10L))
-    assert(sideT.filter(col("batch_id") === 2L)
-      .select("id").as[Long].collect().toSet === Set(20L))
-    // restart from the checkpoint: the next file becomes batch 3 and
+    def undirected(): Set[Set[Long]] = pairSet(pairs)
+      .map(p => Set(p._1, p._2))
+    assert(undirected() === Set(Set(1L, 70L)))
+    // the fold fired at batch 7 with horizon 7: batches 0-6 are in the
+    // base generation, batches 7 and 8 keep their leaves
+    for (d <- Seq(side, band)) {
+      val t = spark.read.parquet(d)
+      assert(t.select("batch_id").distinct().as[Long].collect().toSet
+        === Set(graft.state.Generations.BaseBatchId, 7L, 8L), d)
+      assert(t.filter(col("batch_id") ===
+          graft.state.Generations.BaseBatchId)
+        .select("id").distinct().as[Long].collect().toSet ===
+        Set(1L, 2L, 10L, 20L, 30L, 40L, 50L, 60L), d)
+    }
+    // restart from the checkpoint: the next file becomes batch 9 and
     // its probe sees folded-base rows AND leaf rows alike
-    writeDocs("b3.json", Seq(30L -> base.replace("rho", "RHO")))
+    writeDocs(in, "b09.json", System.currentTimeMillis(),
+      Seq(90L -> base.replace("tau", "TAU")))
     runOnce()
-    assert(undirected() === Set(Set(1L, 10L), Set(1L, 20L),
-      Set(10L, 20L), Set(30L, 1L), Set(30L, 10L), Set(30L, 20L)))
-    assert(spark.read.parquet(side).count() === 5)
-    // agePairs: batch 1's pair leaf folded to the base at horizon 2,
-    // but its provenance rides the src_batch_id DATA column; batches
-    // ≥ horizon keep their leaves
-    val provs = spark.read.schema(pairsSchema).parquet(pairs)
-      .select(array_sort(array(col("new_id"), col("old_id"))),
-        col("src_batch_id"), col("batch_id"))
-      .as[(Seq[Long], Long, Long)].collect()
-      .map(r => (r._1.toSet, r._2, r._3)).toSet
-    assert(provs === Set(
-      (Set(1L, 10L), 1L, graft.state.Generations.BaseBatchId),
-      (Set(1L, 20L), 2L, 2L),
-      (Set(10L, 20L), 2L, 2L),
-      (Set(30L, 1L), 3L, 3L),
-      (Set(30L, 10L), 3L, 3L),
-      (Set(30L, 20L), 3L, 3L)))
-  }
-
-  test("run() default contract: with agePairs=false the fold NEVER " +
-    "touches the pairs table — batch_id leaves survive as " +
-    "provenance and no src column is written") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("snd-defpairs").toString
-    val in = s"$dir/in"; val side = s"$dir/side"
-    val pairs = s"$dir/pairs"; val band = s"$dir/band"
-    new java.io.File(in).mkdirs()
-    def writeDocs(name: String, docs: Seq[(Long, String)]): Unit = {
-      val f = new java.io.File(in, name)
-      val w = new java.io.PrintWriter(f)
-      try docs.foreach { case (id, t) =>
-        w.println(s"""{"doc_id": $id, "text": "$t"}""") }
-      finally w.close()
-      f.setLastModified(System.currentTimeMillis())
-      Thread.sleep(1100)
-    }
-    writeDocs("b0.json", Seq(1L -> base))
-    writeDocs("b1.json", Seq(10L -> base.replace("sigma", "SIGMA")))
-    writeDocs("b2.json", Seq(20L -> base.replace("tau", "TAU")))
-    val q = StreamNearDedup.run(spark, in, side, pairs, s"$dir/cp",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      maxFilesPerTrigger = 1, threshold = 0.2,
-      bandDir = Some(band), buckets = 8, foldEvery = Some(2))
-    q.awaitTermination()
-    // the side tables folded at batch 2 (horizon 2) — the pairs table
-    // did NOT: its per-batch provenance leaves are intact
+    assert(undirected() === Set(Set(1L, 70L), Set(1L, 90L),
+      Set(70L, 90L)))
+    assert(spark.read.parquet(side).count() === 11)
+    // the fold NEVER touches the pairs table: its batch_id leaves
+    // survive as per-batch provenance, with no extra column
     val pt = spark.read.parquet(pairs)
     assert(pt.columns.sorted.toSeq ===
       Seq("batch_id", "n_inter", "n_union", "new_id", "old_id"))
     assert(pt.select("batch_id").as[Long].collect().toSet ===
-      Set(1L, 2L))
-    assert(spark.read.parquet(side)
-      .filter(col("batch_id") === graft.state.Generations.BaseBatchId)
-      .count() > 0)
+      Set(7L, 9L))
   }
 
   test("AUTO cadence invariant: an un-tuned probe loop (run()'s " +
@@ -306,10 +275,10 @@ class StreamNearDedupSpec extends SparkSpec {
     for (b <- 0L until 30L) {
       val docs = batchDocs(b).toDF("doc_id", "text")
       StreamNearDedup.probeAndAppend(spark, docs, b, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 2)
-      // run()'s default maintenance, verbatim: auto decision + fold
-      if (StreamNearDedup.maybeAutoFold(spark, side, Some(band),
-          None, horizon = b).nonEmpty) folds += 1
+        bandDir = band, threshold = 0.2, buckets = 2)
+      // run()'s maintenance, verbatim: auto decision + fold
+      if (StreamNearDedup.maybeAutoFold(spark, side, band,
+          horizon = b).nonEmpty) folds += 1
       // BOTH tables must stay healthy — the band table ages faster
       // per bucket (bands rows per doc), which is why the decision
       // is the max over the two samples
@@ -318,8 +287,7 @@ class StreamNearDedupSpec extends SparkSpec {
         graft.state.Generations.sampleLeavesPerBucket(spark, band)))
       // the never-folded control
       StreamNearDedup.probeAndAppend(spark, docs, b, ctlSide,
-        ctlPairs, threshold = 0.2, bandDir = Some(ctlBand),
-        buckets = 2)
+        ctlPairs, bandDir = ctlBand, threshold = 0.2, buckets = 2)
     }
     // the invariant the auto cadence exists for: the store NEVER
     // ages into the task-bound regime (measured at ~22.6
@@ -332,9 +300,7 @@ class StreamNearDedupSpec extends SparkSpec {
     assert(graft.state.Generations.sampleLeavesPerBucket(spark,
       ctlSide) > Defaults.AutoFoldLeavesPerBucket * 2)
     // folding never changed what the stream found
-    val sch = "new_id long, old_id long, n_inter long, " +
-      "n_union long, batch_id long"
-    def hist(d: String) = spark.read.schema(sch).parquet(d)
+    def hist(d: String) = spark.read.schema(pairSchema).parquet(d)
       .select("new_id", "old_id").as[(Long, Long)].collect().toSet
     assert(hist(pairs) === hist(ctlPairs) && hist(pairs).nonEmpty)
   }
@@ -346,27 +312,19 @@ class StreamNearDedupSpec extends SparkSpec {
       .createTempDirectory("snd-autorun").toString
     val in = s"$dir/in"; val side = s"$dir/side"
     val pairs = s"$dir/pairs"; val band = s"$dir/band"
-    new java.io.File(in).mkdirs()
-    // explicit spaced mtimes (no sleeps): the file source orders
-    // batches by modification time
     val t0 = System.currentTimeMillis() - 600000L
-    for (b <- 0 until 10) {
-      val f = new java.io.File(in, f"b$b%02d.json")
-      val w = new java.io.PrintWriter(f)
-      // 24 docs/batch across buckets=8 → every batch touches all
-      // buckets, leaves/bucket grows ~1/batch → the default
-      // threshold (8.0) fires inside 10 batches
-      try (0 until 24).foreach { i =>
-        w.println(s"""{"doc_id": ${b * 100 + i}, "text": "doc $b $i """ +
-          s"""filler words ${b * 100 + i} more tokens here"}""") }
-      finally w.close()
-      f.setLastModified(t0 + b * 2000L)
-    }
-    val q = StreamNearDedup.run(spark, in, side, pairs, s"$dir/cp",
+    // 24 docs/batch across buckets=8 → every batch touches all
+    // buckets, leaves/bucket grows ~1/batch → the default threshold
+    // (8.0) fires inside 10 batches
+    for (b <- 0 until 10)
+      writeDocs(in, f"b$b%02d.json", t0 + b * 2000L, (0 until 24).map {
+        i => (b * 100L + i) ->
+          s"doc $b $i filler words ${b * 100 + i} more tokens here" })
+    StreamNearDedup.run(spark, in, side, pairs, s"$dir/cp",
+      bandDir = band,
       trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      maxFilesPerTrigger = 1, threshold = 0.2,
-      bandDir = Some(band), buckets = 8)
-    q.awaitTermination()
+      maxFilesPerTrigger = 1, threshold = 0.2, buckets = 8)
+      .awaitTermination()
     // the engine folded on its own: a base generation exists in both
     // side tables and the store is healthy (bounded leaves/bucket)
     for (d <- Seq(side, band)) {
@@ -380,40 +338,6 @@ class StreamNearDedupSpec extends SparkSpec {
     assert(spark.read.parquet(side).count() === 240)
   }
 
-  test("pairProvenanceCol refuses reserved/colliding names: " +
-    "\"batch_id\" (the layout column the fold collapses) and " +
-    "existing pair columns would be silently overwritten") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("snd-prov").toString
-    def run(c: String): Long =
-      StreamNearDedup.probeAndAppend(spark,
-        Seq(1L -> base).toDF("doc_id", "text"), 0L,
-        s"$dir/side-$c", s"$dir/pairs-$c", threshold = 0.2,
-        bandDir = Some(s"$dir/band-$c"), buckets = 8,
-        pairProvenanceCol = Some(c))
-    val e1 = intercept[IllegalArgumentException] { run("batch_id") }
-    assert(e1.getMessage.contains("LAYOUT column"))
-    val e2 = intercept[IllegalArgumentException] { run("new_id") }
-    assert(e2.getMessage.contains("collides with a pairs column"))
-    // a fresh non-colliding name still works
-    assert(run("src_batch_id") === 0L)
-  }
-
-  test("recommendedBandDir pins the measured d44e crossover: flat " +
-    "below the floor, bucketed at/above") {
-    import StreamNearDedup.{Defaults, recommendedBandDir}
-    assert(recommendedBandDir(0L, "bd").isEmpty)
-    assert(recommendedBandDir(Defaults.BucketedCorpusFloor - 1, "bd")
-      .isEmpty)
-    assert(recommendedBandDir(Defaults.BucketedCorpusFloor, "bd")
-      .contains("bd"))
-    assert(recommendedBandDir(Long.MaxValue, "bd").contains("bd"))
-    // the floor sits between the measured decades (flat wins at
-    // 500k, bucketed at 5M — BENCH_NOTES d44e)
-    assert(Defaults.BucketedCorpusFloor > 500000L &&
-      Defaults.BucketedCorpusFloor < 5000000L)
-  }
-
   test("a MISSING replay watermark on a data-bearing table is not " +
     "proof of a first run: drifted-replay ghosts are still cleared") {
     val dir = java.nio.file.Files
@@ -423,7 +347,7 @@ class StreamNearDedupSpec extends SparkSpec {
     def run(batchId: Long, docs: Seq[(Long, String)]): Long =
       StreamNearDedup.probeAndAppend(spark,
         docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2, bandDir = Some(band), buckets = 8)
+        bandDir = band, threshold = 0.2, buckets = 8)
     run(0L, Seq(1L -> base))
     run(1L, Seq(10L -> base.replace("sigma", "SIGMA")))
     // a pre-watermark table / hand-deleted file: absence must fall
@@ -450,10 +374,10 @@ class StreamNearDedupSpec extends SparkSpec {
     def run(batchId: Long, docs: Seq[(Long, String)]): Long =
       StreamNearDedup.probeAndAppend(spark,
         docs.toDF("doc_id", "text"), batchId, side, pairs,
-        threshold = 0.2)
-    // batch 0 delivers no rows: sideDir ends up with only _SUCCESS
+        bandDir = s"$dir/band", threshold = 0.2, buckets = 8)
+    // batch 0 delivers no rows: the side tables hold only markers
     assert(run(0L, Seq.empty) === 0L)
-    // batch 1 must still read the (empty) side table and proceed
+    // batch 1 must still read the (empty) side tables and proceed
     assert(run(1L, Seq(1L -> base)) === 0L)
     assert(run(2L, Seq(2L -> base.replace("pi", "PI"))) === 1L)
   }
